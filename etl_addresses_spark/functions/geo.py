@@ -108,22 +108,17 @@ def explode_segments(streets: DataFrame, geometry_col: str = "geometry") -> Data
     caller's drop of the geometry column afterwards).
     """
     coords = F.col(geometry_col).getField("coordinates")
-    pairs = F.expr(
-        f"transform(sequence(0, size({geometry_col}.coordinates) - 2), "
+    c = f"{geometry_col}.coordinates"
+    segments = F.expr(
+        f"transform(sequence(0, size({c}) - 2), "
         f"i -> struct(i as seg_index, "
-        f"{geometry_col}.coordinates[i] as p1, "
-        f"{geometry_col}.coordinates[i + 1] as p2))"
+        f"{c}[i][0] as seg_lon1, {c}[i][1] as seg_lat1, "
+        f"{c}[i + 1][0] as seg_lon2, {c}[i + 1][1] as seg_lat2))"
     )
-    out = streets.where(coords.isNotNull() & (F.size(coords) >= 2)).withColumn(
-        "_seg", F.explode(pairs)
-    )
-    return (
-        out.withColumn("seg_index", F.col("_seg.seg_index"))
-        .withColumn("seg_lon1", F.col("_seg.p1").getItem(0))
-        .withColumn("seg_lat1", F.col("_seg.p1").getItem(1))
-        .withColumn("seg_lon2", F.col("_seg.p2").getItem(0))
-        .withColumn("seg_lat2", F.col("_seg.p2").getItem(1))
-        .drop("_seg")
+    # inline() explodes the struct array straight into the five
+    # columns: one projection, no intermediate struct column to drop.
+    return streets.where(coords.isNotNull() & (F.size(coords) >= 2)).select(
+        "*", F.inline(segments)
     )
 
 

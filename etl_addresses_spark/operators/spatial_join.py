@@ -13,27 +13,37 @@ Physical strategy — Spark-first, no R-tree (addresses.js:61-63,151-153
 replaced):
 
 * **grid** (default, the 100 TB path): every segment is assigned each
-  grid cell its ε-expanded bbox touches (ε ≥ the 25 m cutoff), every
-  point its single containing cell, then a plain equi-join on cell id —
-  a shuffle hash join Catalyst/AQE already knows how to optimize, and
-  broadcast automatically when the segment side is small.  Because
-  ε ≥ cutoff, every segment within 25 m of a point lands in that
-  point's cell, so the candidate set is a superset of all surviving
-  matches and the final argmin answer is EXACT (candidates are only
-  ever filtered afterwards; see SURVEY.md §4.3).
-* **broadcast**: broadcast nested-loop cross join (correct at any
-  scale where the segment side fits in memory; used for parity tests).
+  grid cell its ε-expanded bbox touches (ε ≥ the 25 m cutoff) and the
+  segments are grouped into a cell-keyed index, one row per cell.
+  Every point takes its single containing cell, and ONE left equi-join
+  on cell id attaches that cell's segment list to the house-number
+  row — Catalyst broadcasts the index when it is small and
+  shuffle-joins it otherwise.  Because ε ≥ cutoff, every segment within
+  25 m of a point is in that point's cell, so the list is a superset
+  of all surviving matches and the argmin is EXACT (SURVEY.md §4.3).
+  The house numbers are scanned once and never shuffled in the
+  broadcast tier.
+* **broadcast**: the same in-row argmin over a single index row holding
+  every segment, cross-joined by broadcast (correct at any scale where
+  the segment side fits in memory; used for parity tests).
+* **reference_knn / reference_knn_grid**: STRICT reference-parity
+  candidates ranked by windows, so these emit candidate rows and take
+  a `min(struct)` groupBy joined back to the house numbers.
 
-The argmin (addresses.js:83-90) is a `min(struct(...))` aggregation —
-lexicographic struct ordering gives min-by-(distance, streetId,
-seg_index) with a DETERMINISTIC tie-break (the reference's tie-break is
-index-order-dependent, SURVEY.md §5), and a groupBy aggregation gets
-map-side partial aggregation, unlike a window sort.
+The grid/broadcast argmin (addresses.js:83-90) is computed inside the
+house-number row: `array_min` over the structs
+(distance, streetId, seg_index, streetName) of the list's segments that
+pass the bbox and temporal filter and then the 25 m cutoff.  The trig
+runs only on the filter's survivors, and lexicographic struct ordering
+gives min-by-(distance, streetId, seg_index) with a DETERMINISTIC
+tie-break (the reference's tie-break is index-order-dependent,
+SURVEY.md §5).  The argmin is per row where the oracle's is per
+houseNumberId; the two agree because house-number ids are unique.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_addresses_spark.config import (
@@ -98,11 +108,11 @@ def _prepare_segments(streets: DataFrame) -> DataFrame:
     )
 
 
-def _bbox_refine(cand: DataFrame) -> DataFrame:
-    """Exact candidate predicate: the point lies inside the segment's
-    ε-expanded bbox (the reference R-tree's `search` probe,
-    addresses.js:61).  Applied after the (coarser) grid-cell prefilter
-    so both physical strategies implement identical logical semantics.
+def _in_bbox(seg) -> Column:
+    """The point lies inside the segment's ε-expanded bbox (the
+    reference R-tree's `search` probe, addresses.js:61).  `seg` maps a
+    segment field name to its Column, so the same predicate serves
+    candidate rows (`F.col`) and the index's lambda structs.
 
     Deliberate deviation from the reference (documented, SURVEY.md §4.3
     edge note): the reference ALSO feeds the 10 index-nearest segments
@@ -114,39 +124,131 @@ def _bbox_refine(cand: DataFrame) -> DataFrame:
     the point (within ε ≈ 45-55 m), not merely near its great circle.
     """
     eps = F.lit(BBOX_EPS_DEG)
-    return cand.filter(
-        (F.col("pt_lon") >= F.least(F.col("seg_lon1"), F.col("seg_lon2")) - eps)
-        & (F.col("pt_lon") <= F.greatest(F.col("seg_lon1"), F.col("seg_lon2")) + eps)
-        & (F.col("pt_lat") >= F.least(F.col("seg_lat1"), F.col("seg_lat2")) - eps)
-        & (F.col("pt_lat") <= F.greatest(F.col("seg_lat1"), F.col("seg_lat2")) + eps)
+    lon, lat = F.col("pt_lon"), F.col("pt_lat")
+    return (
+        (lon >= F.least(seg("seg_lon1"), seg("seg_lon2")) - eps)
+        & (lon <= F.greatest(seg("seg_lon1"), seg("seg_lon2")) + eps)
+        & (lat >= F.least(seg("seg_lat1"), seg("seg_lat2")) - eps)
+        & (lat <= F.greatest(seg("seg_lat1"), seg("seg_lat2")) + eps)
     )
 
 
-def _candidates(hn: DataFrame, segs: DataFrame, strategy: str) -> DataFrame:
+def _in_time(seg) -> Column:
+    """The ±15-year widened segment interval contains the house
+    number's (addresses.js:66-74)."""
+    return (seg("seg_since_ms") <= F.col("addr_since_ms")) & (
+        seg("seg_until_ms") >= F.col("addr_until_ms")
+    )
+
+
+def _distance(seg) -> Column:
+    return crosstrack_m_rounded(
+        seg("seg_lat1"),
+        seg("seg_lon1"),
+        seg("seg_lat2"),
+        seg("seg_lon2"),
+        F.col("pt_lat"),
+        F.col("pt_lon"),
+    )
+
+
+def _ranked(distance: Column, seg) -> Column:
+    """The argmin key: lexicographic struct order is min-by-(distance,
+    streetId, seg_index), a deterministic tie-break."""
+    return F.struct(
+        distance.alias("distance"),
+        seg("streetId").alias("streetId"),
+        seg("seg_index").alias("seg_index"),
+        seg("streetName").alias("streetName"),
+    )
+
+
+def _best_columns() -> list[Column]:
+    """The output's match columns, unpacked from the `best` key."""
+    return [
+        F.col("best.distance").alias("lineLength"),
+        F.col("best.streetId").alias("streetId"),
+        F.col("best.streetName").alias("streetName"),
+    ]
+
+
+def _segment_cells(segs: DataFrame) -> DataFrame:
+    """One row per (segment, grid cell its ε-expanded bbox touches)."""
+    return segs.withColumn(
+        "cell",
+        F.explode(
+            segment_cells(
+                F.col("seg_lat1"),
+                F.col("seg_lon1"),
+                F.col("seg_lat2"),
+                F.col("seg_lon2"),
+            )
+        ),
+    )
+
+
+def _segment_index(segs: DataFrame) -> DataFrame:
+    """The grid index: one row per cell, holding every segment whose
+    ε-expanded bbox touches that cell."""
+    # Keyed by point_cell's type (nullable fields): with the analyzer's
+    # key cast gone, the shuffle join reuses the aggregate's hash
+    # partitioning instead of shuffling the whole index a second time.
+    return (
+        _segment_cells(segs)
+        .groupBy(F.col("cell").cast("struct<cx:bigint,cy:bigint>").alias("cell"))
+        .agg(F.collect_list(F.struct(*segs.columns)).alias("segs"))
+    )
+
+
+def _probe(hn: DataFrame, segs: DataFrame, strategy: str) -> DataFrame:
+    """Every house number, once, with `segs`: the segments that may
+    match it."""
     if strategy == "grid":
-        seg_cells = segs.withColumn(
-            "cell",
-            F.explode(
-                segment_cells(
-                    F.col("seg_lat1"),
-                    F.col("seg_lon1"),
-                    F.col("seg_lat2"),
-                    F.col("seg_lon2"),
-                )
-            ),
-        )
-        hn_cells = hn.withColumn("cell", point_cell(F.col("pt_lat"), F.col("pt_lon")))
-        # Equi-join on cell id: Catalyst picks broadcast-hash when the
-        # segment side is small, shuffle-hash/sort-merge otherwise; AQE
-        # splits skewed cells (dense urban areas) at runtime.
-        return _bbox_refine(hn_cells.join(seg_cells, "cell").drop("cell"))
-    if strategy == "broadcast":
-        return _bbox_refine(hn.crossJoin(F.broadcast(segs)))
+        # Left equi-join on the point's cell: Catalyst picks
+        # broadcast-hash when the index is small, shuffle-hash/sort-merge
+        # otherwise; AQE splits skewed cells (dense urban areas).
+        cells = hn.withColumn("cell", point_cell(F.col("pt_lat"), F.col("pt_lon")))
+        return cells.join(_segment_index(segs), "cell", "left")
+    # broadcast: a single index row holding every segment
+    every = segs.agg(F.collect_list(F.struct(*segs.columns)).alias("segs"))
+    return hn.crossJoin(F.broadcast(every))
+
+
+def _match_in_row(hn: DataFrame, segs: DataFrame, strategy: str) -> DataFrame:
+    probed = _probe(hn, segs, strategy)
+    # Cheap-before-expensive cascade (addresses.js:66-82): the trig
+    # runs only on the bbox+temporal survivors of the inner filter.
+    near = F.filter("segs", lambda s: _in_bbox(s.getField) & _in_time(s.getField))
+    scored = F.transform(near, lambda s: _ranked(_distance(s.getField), s.getField))
+    best = F.array_min(F.filter(scored, lambda c: c["distance"] < MAX_DISTANCE_M))
+    # The oracle joins the argmin back USING (houseNumberId), which a
+    # NULL id never satisfies: such a house number stays unmatched.
+    best = F.when(F.col("houseNumberId").isNotNull(), best)
+    return probed.withColumn("best", best).select(*hn.columns, *_best_columns())
+
+
+def _match_by_candidates(hn: DataFrame, segs: DataFrame, strategy: str) -> DataFrame:
+    """The kNN strategies rank candidate rows with windows, so their
+    argmin is a groupBy over those rows, joined back to the house
+    numbers."""
     if strategy == "reference_knn":
-        return _reference_knn_candidates(hn, segs)
-    if strategy == "reference_knn_grid":
-        return _reference_knn_candidates_grid(hn, segs)
-    raise ValueError(f"unknown strategy {strategy!r}")
+        cand = _reference_knn_candidates(hn, segs)
+    elif strategy == "reference_knn_grid":
+        cand = _reference_knn_candidates_grid(hn, segs)
+    else:
+        raise ValueError(f"unknown strategy {strategy!r}")
+    # Temporal (long compares) before the trig; the windows below
+    # both filters keep Catalyst from pushing either into a join.
+    cand = cand.filter(_in_time(F.col))
+    cand = cand.withColumn("distance", _distance(F.col)).filter(
+        F.col("distance") < MAX_DISTANCE_M
+    )
+    best = (
+        cand.groupBy("houseNumberId")
+        .agg(F.min(_ranked(F.col("distance"), F.col)).alias("best"))
+        .select("houseNumberId", *_best_columns())
+    )
+    return hn.join(best, "houseNumberId", "left")
 
 
 def _reference_knn_candidates(hn: DataFrame, segs: DataFrame) -> DataFrame:
@@ -213,24 +315,13 @@ def _grid_knn_local(hn: DataFrame, segs: DataFrame) -> DataFrame:
     capped by its 25-cell neighborhood's segment count."""
     from etl_addresses_spark.functions.geo import point_neighbor_cells
 
-    seg_cells = segs.withColumn(
-        "cell",
-        F.explode(
-            segment_cells(
-                F.col("seg_lat1"),
-                F.col("seg_lon1"),
-                F.col("seg_lat2"),
-                F.col("seg_lon2"),
-            )
-        ),
-    )
     probes = hn.withColumn(
         "cell", F.explode(point_neighbor_cells(F.col("pt_lat"), F.col("pt_lon")))
     )
     # A segment indexed in several block cells would appear per cell:
     # dedup to one candidate row per (point, segment) before ranking.
     return (
-        probes.join(seg_cells, "cell")
+        probes.join(_segment_cells(segs), "cell")
         .drop("cell")
         .repartition("houseNumberId")
         .dropDuplicates(["houseNumberId", "streetId", "seg_index"])
@@ -296,58 +387,13 @@ def infer_addresses(
     hn = _prepare_house_numbers(house_numbers)
     segs = _prepare_segments(streets)
 
-    cand = _candidates(hn, segs, strategy)
+    if strategy in ("grid", "broadcast"):
+        joined = _match_in_row(hn, segs, strategy)
+    else:
+        joined = _match_by_candidates(hn, segs, strategy)
 
-    # Cheap-before-expensive predicate cascade (addresses.js:66-82):
-    # temporal containment (long compares) before spherical trig.
-    cand = cand.filter(
-        (F.col("seg_since_ms") <= F.col("addr_since_ms"))
-        & (F.col("seg_until_ms") >= F.col("addr_until_ms"))
-    )
-    # Pushdown barrier: without it Catalyst folds the distance filter
-    # into the join condition ahead of the cheap bbox conjuncts, and the
-    # trig evaluates for every cell-co-resident pair instead of only
-    # bbox+temporal survivors (Catalyst doesn't cost-order conjuncts).
-    # A nondeterministic column blocks predicate pushdown through the
-    # projection; it is dropped immediately after.
-    cand = cand.withColumn("_pushdown_barrier", F.monotonically_increasing_id())
-    cand = cand.withColumn(
-        "distance",
-        crosstrack_m_rounded(
-            F.col("seg_lat1"),
-            F.col("seg_lon1"),
-            F.col("seg_lat2"),
-            F.col("seg_lon2"),
-            F.col("pt_lat"),
-            F.col("pt_lon"),
-        ),
-    ).filter(F.col("distance") < MAX_DISTANCE_M).drop("_pushdown_barrier")
-
-    # Argmin with deterministic tie-break: lexicographic min of
-    # (distance, streetId, seg_index, payload...) — map-side combinable.
-    best = (
-        cand.groupBy("houseNumberId")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("distance"),
-                    F.col("streetId"),
-                    F.col("seg_index"),
-                    F.col("streetName"),
-                )
-            ).alias("best")
-        )
-        .select(
-            F.col("houseNumberId"),
-            F.col("best.distance").alias("lineLength"),
-            F.col("best.streetId").alias("streetId"),
-            F.col("best.streetName").alias("streetName"),
-        )
-    )
-
-    # Left-outer: unmatched house numbers become error records
+    # Unmatched house numbers become error records
     # (addresses.js:88,107-114).
-    joined = hn.join(best, "houseNumberId", "left")
     matched = F.col("streetId").isNotNull()
     return joined.select(
         F.when(matched, F.col("hn_internal_id")).alias("id"),

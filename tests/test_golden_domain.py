@@ -72,6 +72,16 @@ def golden(spark):
             "far", "Far St", "1850", "1860",
             [[0.6, 20 * DEG_PER_M], [0.61, 20 * DEG_PER_M]],
         ),
+        # equal-distance tie on one id: the match on segment 0 ("Zeta")
+        # beats the one on segment 2 ("Alpha") — seg_index before name
+        _street("dup", "Zeta St", "1850", "1860", [[0.7, 0.0], [0.71, 0.0]]),
+        _street(
+            "dup", "Alpha St", "1850", "1860",
+            [[0.69, 0.001], [0.69, 0.0], [0.7, 0.0], [0.71, 0.0]],
+        ),
+        # identical geometry, different ids: streetId decides, not name
+        _street("tie_b", "Aa St", "1850", "1860", [[0.8, 0.0], [0.81, 0.0]]),
+        _street("tie_a", "Zz St", "1850", "1860", [[0.8, 0.0], [0.81, 0.0]]),
     ]
     seg_since = dt.datetime(1850, 1, 1, tzinfo=dt.timezone.utc)
     boundary = seg_since - dt.timedelta(milliseconds=MS_THRESHOLD)
@@ -87,6 +97,10 @@ def golden(spark):
         _hn("hn_bent", "1855", "1855", 0.215, 0.0),
         _hn("hn_argmin", "1855", "1855", 0.605, 8 * DEG_PER_M),
         _hn("hn_nowhere", "1855", "1855", 0.9, 0.0),
+        _hn("hn_tie_index", "1855", "1855", 0.705, 8 * DEG_PER_M),
+        _hn("hn_tie_id", "1855", "1855", 0.805, 8 * DEG_PER_M),
+        # NULL id right on Main St: houseNumberId is NULL
+        _hn(None, "1855", "1855", 0.005, 0.0),
     ]
 
     def _run(spark):
@@ -134,11 +148,28 @@ def test_prequalified_ids_not_double_prefixed(golden):
 
 
 def test_no_candidate_error_branch(golden):
+    # no segment is indexed in this point's grid cell
     r = golden["building-inspector/hn_nowhere"]
     assert r["error"] == ERROR_MESSAGE
     assert r["streetId"] is None and r["lineLength"] is None
     # error rows keep the data payload (addresses.js:108-114)
     assert r["addressData"]["number"] == "1"
+
+
+def test_argmin_tie_breaks_by_street_id_then_segment(golden):
+    r = golden["building-inspector/hn_tie_id"]
+    assert (r["streetId"], r["streetName"]) == ("nyc-streets/tie_a", "Zz St")
+    r = golden["building-inspector/hn_tie_index"]
+    assert (r["streetId"], r["streetName"]) == ("nyc-streets/dup", "Zeta St")
+    assert r["lineLength"] == 8
+
+
+def test_null_house_number_id_is_error_row(golden):
+    # the oracle's LEFT JOIN ... USING (houseNumberId) never matches a
+    # NULL id, even though a street passes right under the point
+    r = golden[None]
+    assert r["error"] == ERROR_MESSAGE
+    assert r["streetId"] is None and r["lineLength"] is None
 
 
 def test_matched_record_shape(golden):

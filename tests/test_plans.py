@@ -25,14 +25,21 @@ def test_flagship_grid_uses_broadcast_hash_join(spark):
     assert "CartesianProduct" not in plan
 
 
+def _index_join(plan: str) -> str:
+    """The grid strategy's one join: house numbers to the cell index."""
+    return next(
+        l for l in plan.splitlines() if "Join" in l and "[cell#" in l
+    )
+
+
 def test_flagship_grid_flips_to_shuffle_join_past_broadcast_tier(spark):
-    """The cell candidate join's 100 TB story is declarative: Catalyst
-    broadcasts while the exploded segment side fits the threshold and
-    shuffles past it (the flip measured firing naturally at 800k
-    streets in tools/evidence/r7_spatial_flip.json).  Pin the shuffle
-    TIER here: with the threshold forced to 0, the same logical plan
-    must come out as a shuffle join (never a nested-loop product) and
-    return exactly the broadcast tier's rows."""
+    """The cell-index join's 100 TB story is declarative: Catalyst
+    broadcasts while the segment index fits the threshold and shuffles
+    past it (the flip measured firing naturally at 800k streets in
+    tools/evidence/r7_spatial_flip.json).  Pin the shuffle TIER here:
+    with the threshold forced off, the same logical plan must come out
+    as a shuffle join (never a nested-loop product) and return exactly
+    the broadcast tier's rows."""
     conf = spark.conf
     prev = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -44,17 +51,12 @@ def test_flagship_grid_flips_to_shuffle_join_past_broadcast_tier(spark):
         spark.catalog.clearCache()
         df = flagship.spatiotemporal_join(spark, SF_SMALL, strategy="grid")
         plan = _plan(df)
-        # the CELL candidate join is the one whose condition carries
-        # the trig refine (ASIN); it must be a shuffle join here —
-        # other flagship branches may legitimately stay nested-loop
-        cell_join = next(
-            l for l in plan.splitlines()
-            if "ASIN" in l
-            and ("SortMergeJoin" in l or "ShuffledHashJoin" in l
-                 or "BroadcastHashJoin" in l or "Join" in l)
-        )
-        assert "SortMergeJoin" in cell_join or "ShuffledHashJoin" in cell_join
+        index_join = _index_join(plan)
+        assert "SortMergeJoin" in index_join or "ShuffledHashJoin" in index_join
         assert "CartesianProduct" not in plan
+        # the index side is shuffled once, by its own aggregation: the
+        # join reuses that partitioning instead of re-keying the index
+        assert plan.count("Exchange hashpartitioning") == 2, plan
         shuffled = sorted(map(tuple, df.collect()), key=repr)
     finally:
         conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -71,18 +73,38 @@ def test_flagship_grid_flips_to_shuffle_join_past_broadcast_tier(spark):
 
 
 def test_flagship_distance_not_before_bbox(spark):
-    # cheap-to-expensive conjunct order: the trig (ASIN) must appear
-    # after the bbox comparisons inside the join condition string
+    """Cheap-to-expensive order by construction: the trig (ASIN) runs
+    only on the survivors of the in-row bbox + temporal `filter`, and
+    never sits in a join condition or a Filter node."""
     df = flagship.spatiotemporal_join(spark, SF_SMALL, strategy="grid")
-    plan = _plan(df)
-    # several joins may broadcast; the candidate join is the one whose
-    # condition carries the trig
-    join_line = next(
-        l
-        for l in plan.splitlines()
-        if "BroadcastHashJoin" in l and "ASIN" in l
-    )
-    assert join_line.index("least") < join_line.index("ASIN")
+    trig = [l for l in _plan(df).splitlines() if "ASIN" in l]
+    assert len(trig) == 1 and "Project [" in trig[0], trig
+    line = trig[0]
+    assert "array_min(filter(transform(filter(segs#" in line
+    cheap = line[line.index("transform(filter(") : line.index("ASIN")]
+    for conjunct in ("least(", "greatest(", "seg_since_ms", "seg_until_ms"):
+        assert conjunct in cheap, conjunct
+
+
+def test_flagship_grid_single_house_number_scan(spark):
+    """The executed broadcast-tier plan reads the house-number source
+    once and never shuffles it: the only house-number-side operators
+    between the scan and the index join are narrow."""
+    df = flagship.spatiotemporal_join(spark, SF_SMALL, strategy="grid")
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert plan.count("customer.parquet") == 1, plan
+    lines = plan.splitlines()
+    at = next(i for i, l in enumerate(lines) if "BroadcastHashJoin" in l
+              and "[cell#" in l)
+    col = lines[at].index("+-") + 3
+    streamed = []
+    for l in lines[at + 1:]:
+        if l[col:col + 1] != ":":
+            break
+        streamed.append(l)
+    assert streamed and "customer.parquet" in "\n".join(streamed)
+    assert not any("Exchange hashpartitioning" in l for l in streamed), plan
 
 
 def test_pricing_summary_pushes_filter_and_prunes_columns(spark):

@@ -14,11 +14,12 @@ def main():
     sections = [
         ("Flagship spatio-temporal join (grid strategy)",
          plan(flagship.spatiotemporal_join(spark, SF, strategy="grid")), """
-What to look for: BroadcastHashJoin on the grid `cell` key (segments
-broadcast); join condition ordered bbox -> temporal -> rounded
-cross-track trig (And codegen short-circuits left-to-right); argmin as
-partial_min/min of a struct (map-side combine); the final left-outer
-join attaching matches back to all house numbers."""),
+What to look for: ONE left-outer BroadcastHashJoin of the house numbers
+(scanned once, never shuffled) to the cell index, an ObjectHashAggregate
+collect_list of segment structs keyed on the grid `cell`; the argmin in
+the projection above it, array_min(filter(transform(filter(segs,
+bbox AND temporal), trig), distance < 25)) — the rounded cross-track
+trig runs only on the inner filter's survivors."""),
         ("TPC-H Q1 shape (agg_pricing_summary)",
          plan(relational.agg_pricing_summary(spark, SF)), """
 What to look for: PushedFilters on l_shipdate reaching the parquet

@@ -89,8 +89,8 @@ def run(strategy: str, n: int, m: int) -> tuple[float, int]:
     t0 = time.perf_counter()
     out = infer_addresses(hn, st, strategy=strategy)
     # full materialization through the noop sink: a bare count() lets
-    # Catalyst eliminate the entire match computation (left join on a
-    # unique aggregate key preserves row count)
+    # Catalyst eliminate the entire match computation (every house
+    # number yields one row whatever it matches)
     out.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0, -1
 
@@ -137,14 +137,15 @@ def flip_main() -> None:
         hn = synth_points(spark, 4_000_000, m)
         st = synth_streets(spark, m)
         df = infer_addresses(hn, st, strategy="grid")
-        df.write.format("noop").mode("overwrite").save()
+        # execute through df's OWN QueryExecution (a noop write would
+        # plan a fresh one), so its adaptive plan below is the final one
+        df._jdf.queryExecution().toRdd().count()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        # the CELL candidate join is the one whose condition carries
-        # the trig refine (ASIN) — other joins in the plan (argmin
-        # join-back, the left-outer error branch) are not the tier
-        # under test
+        plan = plan.split("== Initial Plan ==")[0]
+        # the tier under test is the house-number -> cell-index join,
+        # the only join keyed on the cell id
         for line in plan.splitlines():
-            if "ASIN" in line:
+            if "[cell#" in line:
                 m_ = re.search(
                     r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)",
                     line,
@@ -163,9 +164,8 @@ def flip_main() -> None:
             f"streets={m}: cell_join={node} sec={sec} "
             f"({time.perf_counter() - t0:.0f}s incl repeats)"
         )
-    with open(
-        "/root/repo/tools/evidence/r7_spatial_flip.json", "w"
-    ) as f:
+    evidence = os.path.join(os.path.dirname(__file__), "evidence")
+    with open(os.path.join(evidence, "r7_spatial_flip.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
 
