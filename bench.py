@@ -17,6 +17,9 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -162,6 +165,73 @@ if _q_env:
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
 
+# Calibration probes: fixed workloads with no table input, whose
+# runtime depends only on host speed (and JVM warmth), so host noise is
+# normalizable from the committed artifact instead of argued in prose
+# (r4 verdict item 4).  The workload strings are recorded verbatim in
+# every BENCH artifact; the ledgers compare rounds by them.
+_ARITH_SUM = "sum(id*2654435761%1000003)"
+ARITH_WORKLOAD = f"range(2e8) {_ARITH_SUM}, 32 slices, best-of-3"
+SHUFFLE_WORKLOAD = "range(2e7) repartition(32, id) sum(id%1000003), best-of-3"
+
+
+def timed_noop(build: Callable[[], DataFrame]) -> float:
+    """Wall seconds (3 dp) to build a frame with ``build()`` and force it
+    end to end through the noop sink (full computation, no driver
+    collect).  Plan build is inside the timed region: operators run
+    their size-gate counts and eager localCheckpoints there."""
+    t0 = time.perf_counter()
+    build().write.format("noop").mode("overwrite").save()
+    return round(time.perf_counter() - t0, 3)
+
+
+def hygiene(spark: SparkSession) -> None:
+    """Between-run hygiene.  clearCache: several operators cache
+    intermediates (shingle sets, oriented edge lists) that a later run
+    never reuses, since each run builds new DataFrame objects; the
+    round-2 bisect (SCALE.md) traced most of an apparent 1.37x
+    regression to exactly this cross-query cache/GC pressure.
+    free_all_persistent_rdds also drops localCheckpoint blocks, which
+    clearCache does not touch: their residue from the iterative queries
+    was the r5 repeat-growth cause (BENCH_r05 embedding_gram_matrix
+    1.98 -> 9.25 s); see ckpt.py.  gc.collect() releases the py4j
+    handles so the JVM side is actually collectable.  JIT/codegen
+    warmth survives all three."""
+    spark.catalog.clearCache()
+    free_all_persistent_rdds(spark)
+    gc.collect()
+
+
+def calibrate(spark: SparkSession) -> list[float]:
+    """Arithmetic probe: a pure-CPU whole-stage-codegen pipeline with no
+    shuffle and no cache.  A uniform host slowdown shows up here at the
+    same ratio as in the query rows."""
+    return [
+        timed_noop(
+            lambda: spark.range(0, 200_000_000, 1, 32).selectExpr(
+                f"{_ARITH_SUM} AS s"
+            )
+        )
+        for _ in range(3)
+    ]
+
+
+def calibrate_shuffle(spark: SparkSession) -> list[float]:
+    """Shuffle probe (r13 verdict item 4): the arithmetic probe proved
+    blind to the dimension the r13 host drifted in (untouched rows ran
+    1.1-1.4x slower while it read identical).  This one round-trips a
+    real exchange, 2e7 longs hash-partitioned into 32 partitions, so
+    task dispatch and shuffle write/fetch IO show up too."""
+    return [
+        timed_noop(
+            lambda: spark.range(0, 20_000_000, 1, 32)
+            .repartition(32, "id")
+            .selectExpr("sum(id % 1000003) AS s")
+        )
+        for _ in range(3)
+    ]
+
+
 def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -174,93 +244,31 @@ def main() -> None:
     warmup_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warmup_dir) and warmup_dir != SF_DIR:
         for name in HEADLINE:
-            REGISTRY[name].query(spark, warmup_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            timed_noop(lambda: REGISTRY[name].query(spark, warmup_dir))
+    hygiene(spark)
 
-    # best-of-3: steady-state time.  The shuffle-heavy dedup queries
-    # keep improving across the first repeats at the TARGET SF (codegen
-    # JIT + shuffle-path warmup that the sf0.001 warmup cannot
-    # amortize — measured 17 s -> 6 s -> 3 s -> 2.9 s for
-    # ngram_jaccard); two repeats still left ±2x noise in the min.
+    # Calibration runs before AND after the query loop so mid-run
+    # environment shifts are visible too.
     #
-    # clearCache between queries: several operators cache intermediates
-    # (shingle sets, oriented edge lists) that would otherwise stay
-    # resident for the REST of the bench — the round-2 bisect
-    # (SCALE.md) traced most of an apparent 1.37x regression to
-    # exactly this cross-query cache/GC pressure, not to plans.
-    spark.catalog.clearCache()
-
-    # Fixed calibration workload: a pure-CPU whole-stage-codegen pipeline
-    # with NO table input, NO shuffle and NO cache, so its runtime depends
-    # only on host speed (and JVM warmth, which the warmup above already
-    # amortizes).  A uniform host slowdown — the r4 bench drift suspect —
-    # shows up here at the same ratio as in the query rows, making host
-    # noise normalizable from the committed artifact instead of argued in
-    # prose (r4 verdict item 4).  Run before AND after the query loop so
-    # mid-run environment shifts are visible too.
-    def _calibrate() -> list[float]:
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 200_000_000, 1, 32).selectExpr(
-                "sum(id * 2654435761 % 1000003) AS s"
-            ).write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        return times
-
-    # Second probe, shuffle-sensitive (r13 verdict item 4): the
-    # arithmetic probe above is pure codegen and proved BLIND to the
-    # dimension the r13 host actually drifted in (untouched rows ran
-    # 1.1-1.4x slower while arithmetic calibration read identical).
-    # This one round-trips a real exchange — 2e7 longs hash-partitioned
-    # into 32 shuffle partitions — so task dispatch + shuffle
-    # write/fetch IO show up in the committed artifact too; ledger
-    # normalization can now cite whichever probe moved.
-    def _calibrate_shuffle() -> list[float]:
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 20_000_000, 1, 32).repartition(
-                32, "id"
-            ).selectExpr("sum(id % 1000003) AS s").write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times.append(round(time.perf_counter() - t0, 3))
-        return times
-
-    cal_before = _calibrate()
-    cal_shuffle_before = _calibrate_shuffle()
+    # best-of-REPEATS per query: steady-state time.  The shuffle-heavy
+    # dedup queries keep improving across the first repeats at the
+    # TARGET SF (codegen JIT + shuffle-path warmup that the sf0.001
+    # warmup cannot amortize — measured 17 s -> 6 s -> 3 s -> 2.9 s for
+    # ngram_jaccard); two repeats still left ±2x noise in the min.
+    cal_before = calibrate(spark)
+    cal_shuffle_before = calibrate_shuffle(spark)
     timings: dict[str, float] = {}
     repeats: dict[str, list[float]] = {}
     for name in HEADLINE:
         fn = REGISTRY[name].query
         per_run: list[float] = []
         for _ in range(REPEATS):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            per_run.append(round(time.perf_counter() - t0, 3))
-            # each repeat builds NEW DataFrame objects, so its .cache()s
-            # can never be reused by the next repeat — stale copies only
-            # add memory pressure (3 resident copies of the shingle set
-            # by repeat 3).  JIT/codegen warmth survives clearCache.
-            # free_all_persistent_rdds additionally drops localCheckpoint
-            # blocks, which clearCache does NOT touch — accumulated
-            # checkpoint residue from the iterative queries was the
-            # r5 repeat-growth suspect (BENCH_r05 embedding_gram_matrix
-            # 1.98 -> 9.25 s); see ckpt.py.  gc.collect() releases the
-            # py4j handles so the JVM side is actually collectable.
-            spark.catalog.clearCache()
-            # SPARK_GRAFT_BENCH_NO_HYGIENE=1 disables the block free
-            # (A/B evidence knob: reproduces the r5 accumulated-residue
-            # repeat growth on demand; never set for real benches)
-            if os.environ.get("SPARK_GRAFT_BENCH_NO_HYGIENE") != "1":
-                free_all_persistent_rdds(spark)
-                gc.collect()
+            per_run.append(timed_noop(lambda: fn(spark, SF_DIR)))
+            hygiene(spark)
         repeats[name] = per_run
         timings[name] = min(per_run)
-    cal_after = _calibrate()
-    cal_shuffle_after = _calibrate_shuffle()
+    cal_after = calibrate(spark)
+    cal_shuffle_after = calibrate_shuffle(spark)
 
     sf_token = os.path.basename(SF_DIR.rstrip("/")).removeprefix("sf")
     try:
@@ -269,13 +277,11 @@ def main() -> None:
         sf = sf_token
 
     calibration = {
-        "workload": "range(2e8) sum(id*2654435761%1000003), 32 slices, best-of-3",
+        "workload": ARITH_WORKLOAD,
         "before": cal_before,
         "after": cal_after,
         "best": min(cal_before + cal_after),
-        "shuffle_workload": (
-            "range(2e7) repartition(32, id) sum(id%1000003), best-of-3"
-        ),
+        "shuffle_workload": SHUFFLE_WORKLOAD,
         "shuffle_before": cal_shuffle_before,
         "shuffle_after": cal_shuffle_after,
         "shuffle_best": min(cal_shuffle_before + cal_shuffle_after),

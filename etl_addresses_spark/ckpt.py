@@ -31,9 +31,9 @@ again — unlike a cache, a freed local checkpoint CANNOT be recomputed
 guarantees this for the loop shapes used here: round k's iterate is
 only ever read by round k+1's materialization.
 
-All py4j access is defensive: on any internal-API drift the helpers
-degrade to no-ops and the old behavior (driver-GC reclamation) still
-applies.
+The py4j calls are not guarded: if Spark's internal API drifts, the
+helpers raise instead of quietly leaving blocks resident (the BENCH_r05
+symptom was repeat times that slowly grew, not an error).
 """
 
 from __future__ import annotations
@@ -44,12 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 def checkpoint_rdd(df: DataFrame):
     """The persisted JVM RDD backing a (local)checkpointed DataFrame,
     or None if the frame's plan is not a LogicalRDD scan."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith(".LogicalRDD"):
-            return plan.rdd()
-    except Exception:
-        pass
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getName().endswith(".LogicalRDD"):
+        return plan.rdd()
     return None
 
 
@@ -60,11 +57,8 @@ def unpersist_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
     rdd = checkpoint_rdd(df)
     if rdd is None:
         return False
-    try:
-        rdd.unpersist(blocking)
-        return True
-    except Exception:
-        return False
+    rdd.unpersist(blocking)
+    return True
 
 
 class CheckpointChain:
@@ -105,15 +99,7 @@ def free_all_persistent_rdds(spark: SparkSession, blocking: bool = False) -> int
     harnesses (bench repeats, sweep loops) where the caller knows no
     previously-built DataFrame will be evaluated again.  Returns the
     number of RDDs released."""
-    n = 0
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keys()):
-            try:
-                jmap[rid].unpersist(blocking)
-                n += 1
-            except Exception:
-                pass
-    except Exception:
-        pass
-    return n
+    rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    for rdd in rdds:
+        rdd.unpersist(blocking)
+    return len(rdds)

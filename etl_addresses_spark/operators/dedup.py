@@ -360,19 +360,6 @@ def _minhash_long(sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-permutation MinHash signature per doc as a seed-ordered array:
-    min over shingles of the (h1 + seed·h2) mod (2^61-1) double-hash
-    mix (see _minhash_long)."""
-    long = _minhash_long(_shingles(corpus_df(spark, sf_dir)))
-    return long.groupBy("doc_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("seed", "minh"))),
-            lambda s: s.getField("minh"),
-        ).alias("signature")
-    )
-
-
 def _banded(long: DataFrame) -> DataFrame:
     """Pivot the long-format signature into (doc_id, band, m0..m3):
     4 conditional-min aggregates per band — see minhash_lsh_pairs_for

@@ -139,29 +139,11 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         nrm = sum(w[i] * w[i] for i in dims) ** 0.5
         v = {i: w[i] / nrm for i in dims}
+    # Spark's own round(x, 6) publishes the loadings, so their bits do
+    # not depend on how the JVM prints doubles
     return spark.createDataFrame(
-        [(i, _round6(v[i])) for i in dims], "i bigint, loading double"
-    )
-
-
-def _round6(x: float) -> float:
-    """Spark's round(col, 6) on DOUBLE: HALF_UP on the shortest
-    round-trip decimal repr (java BigDecimal.valueOf + setScale) —
-    replicated exactly so the literal frame carries the same bits the
-    old in-plan F.round produced.
-
-    JVM-version assumption (r14 advice): Python repr() matches Java
-    Double.toString only where Double.toString emits the SHORTEST
-    round-trip decimal, which the JDK guarantees from JDK 19
-    (JDK-4511638).  Spark 4 runs on Java 17+/21 and this repo's
-    runtime is Java 21, satisfying it; a Java 17 deployment could
-    void the bit-for-bit parity claim (test_round6 pins only the
-    current JVM)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-    )
+        [(i, v[i]) for i in dims], "i bigint, v double"
+    ).select("i", F.round("v", 6).alias("loading"))
 
 
 def top_pc_oracle_sql(iters: int = PI_ITERS, dim: int = EMB_DIM) -> str:

@@ -4,7 +4,12 @@ Local-mode defaults sized for the test harness (local[32], single JVM)
 but every knob here is the one you would set on a real cluster too:
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 UTC session timezone (oracle comparison against DuckDB's UTC-naive
-timestamps), Arrow enabled for the Pandas-UDF slow path.
+timestamps), Arrow enabled for the Pandas-UDF slow path, no web UI.
+Join-strategy and coalescing preferences stay at Spark's defaults.
+
+Environment: SPARK_GRAFT_CPUS (local[N], default 32),
+SPARK_GRAFT_SHUFFLE_PARTITIONS (default: the CPU count) and
+SPARK_GRAFT_DRIVER_MEM (default 48g).
 """
 
 from __future__ import annotations
@@ -24,37 +29,13 @@ def get_spark(app_name: str = "etl_addresses_spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # parallelismFirst=true (the Spark default) refuses to coalesce
-        # below default parallelism, so on local[32] every small shuffle
-        # still pays 32 tasks of fixed overhead — the exact fixed-cost
-        # regime the r10 count-gate width rules kept finding by hand.
-        # Spark's own config doc recommends false for production; the
-        # env knob exists for A/B runs (tools/evidence ledger r11).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        # Join-strategy envelope (guide §3.1/§9): preferSortMergeJoin
-        # stays at Spark's default unless overridden — the r14 A/B on
-        # the 14 join-bearing headline rows measured the
-        # shuffled-hash-join planner preference within noise on this
-        # fixture set (equi-joins here either broadcast or carry
-        # sorted-side reuse), so the default is kept and the knob
-        # exists for cluster-side tuning evidence.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # UI off by default (bench noise); SPARK_GRAFT_UI=1 enables it
-        # so stress tools can read per-stage shuffle bytes from the
-        # REST API (tools/stress_scale.py).
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # No web UI (bench noise).  The live status store stays
+        # populated without it; perfbench and the tools read per-stage
+        # counters from there, so keep enough stages for a whole run.
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.retainedStages", "2000")
         # ~128 MB parquet split targets; on a real cluster this keeps
         # task counts proportional to input bytes at 100 TB.

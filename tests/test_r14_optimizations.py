@@ -7,9 +7,6 @@ a driver sweep:
 - the stats limb-sum rewrite assumes integer-cents quantization is
   exact on the fixtures and that the 3x21-bit limb recombination
   reproduces the exact integer second moments;
-- embedding_top_pc's driver-side power iteration re-emits loadings
-  through `_round6`, which must replicate Spark's round(col, 6)
-  HALF_UP-on-shortest-repr semantics bit-for-bit;
 - semantic_dedup's nearest-centroid argmax must stay a (map-side
   combinable) aggregate, not a row_number window over n x k wide rows.
 """
@@ -54,32 +51,6 @@ def test_corr_cents_quantization_and_limb_recombination_exact(spark):
     )
     row = m.selectExpr(f"{limb_recomb('q')} as recombined", "exact").collect()[0]
     assert row.recombined == float(row.exact)
-
-
-def test_round6_matches_spark_round_on_half_ulp_cases(spark):
-    """_round6 (driver-side) must reproduce F.round(col, 6) exactly,
-    including HALF_UP ties on the shortest round-trip repr."""
-    from etl_addresses_spark.operators.linalg import _round6
-
-    cases = [
-        0.0000005,
-        0.0000015,
-        -0.0000005,
-        1.0000005,
-        0.1234565,
-        -0.1234565,
-        0.12345649999999,
-        2.5e-7,
-        1.0 / 3.0,
-        -1.0 / 7.0,
-        0.3535533905932738,  # 1/(2*sqrt(2)): a realistic loading value
-        1.0,
-        0.0,
-    ]
-    df = spark.createDataFrame([(x,) for x in cases], "x double")
-    got = [r.y for r in df.select(F.round("x", 6).alias("y")).collect()]
-    want = [_round6(x) for x in cases]
-    assert got == want
 
 
 def test_semantic_dedup_assignment_is_aggregate_not_window(spark):

@@ -6,14 +6,16 @@ order preserved) to surface run-order / session-state sensitivity —
 if a query is green in the shared-session run but red here (or vice
 versa), its result depends on session state left by a neighbor.
 WINDOW=1 restricts to the 50-entry DRIVER_WINDOW (what the real
-driver scores) instead of the full registry."""
-import hashlib, sys
-sys.path.insert(0, "/root/repo")
+driver scores) instead of the full registry; ONLY=a,b,c to named rows.
+STRICT=1 hashes floats bit-for-bit instead of at 9 digits.
+
+Usage: python tools/driver_sim.py [SF_DIR]   (default sf0.01)"""
+import hashlib, os, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as mod
 from etl_addresses_spark.session import get_spark
 
-import os
 FRESH_SESSION = os.environ.get("FRESH_SESSION", "0") == "1"
 
 def _new_spark():
@@ -29,6 +31,8 @@ print(f"SMOKE entry(): rows={n} schema={[f.name for f in df.schema.fields]}")
 assert n >= 0
 
 SF = "/root/testdata/sf0.01"
+if len(sys.argv) > 1:
+    SF = sys.argv[1]
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
@@ -39,7 +43,7 @@ def value_hash(rows):
         h.update(r.encode())
     return h.hexdigest()[:16]
 
-import math, os
+import math
 STRICT = os.environ.get("STRICT", "0") == "1"
 def norm(v):
     if v is None: return None
@@ -68,11 +72,13 @@ for name, fn in qs.items():
         sdf = fn(spark, SF)
         spark_rows = [tuple(norm(v) for v in row) for row in sdf.collect()]
         if name in os_:
-            drows = [tuple(norm(v) for v in row) for row in con.execute(os_[name]).fetchall()]
-            scols, dcols = sorted(sdf.columns), sorted([d[0] for d in con.execute(os_[name]).description])
+            res = con.execute(os_[name])
+            dcols_raw = [d[0] for d in res.description]
+            drows = [tuple(norm(v) for v in row) for row in res.fetchall()]
+            scols, dcols = sorted(sdf.columns), sorted(dcols_raw)
             # driver sorts columns by name before hashing
             sidx = [sdf.columns.index(c) for c in scols]
-            didx = [[d[0] for d in con.execute(os_[name]).description].index(c) for c in dcols]
+            didx = [dcols_raw.index(c) for c in dcols]
             sh = value_hash([tuple(r[i] for i in sidx) for r in spark_rows])
             dh = value_hash([tuple(r[i] for i in didx) for r in drows])
             status = "MATCH" if (len(spark_rows)==len(drows) and scols==dcols and sh==dh) else "MISMATCH"

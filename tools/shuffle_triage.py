@@ -5,8 +5,9 @@ The coverage ledger can say WHICH rows have no scale-ladder evidence
 but not which of them carry enough shuffle to be worth laddering —
 and the r10 tail-ladder found real superlinear defects hiding in
 exactly such rows.  This tool runs every never-laddered row ONCE at
-sf0.1, captures its per-query Spark REST deltas (shuffle read/write,
-input bytes, wall), and emits a ranking by total shuffle bytes.
+sf0.1, captures its Spark counters from the live status store
+(perfbench/probe.JobWatch: shuffle read/write and input MB, tasks,
+executor time; wall too), and emits a ranking by total shuffle MB.
 Shuffle BYTES are deterministic plan properties (unlike wall time),
 so the ranking is host-noise-free; wall is recorded for context only.
 
@@ -21,32 +22,27 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
-os.environ["SPARK_GRAFT_UI"] = "1"
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
+from bench import hygiene, timed_noop  # noqa: E402
 from coverage_ledger import load_ladder_evidence  # noqa: E402
+from perfbench.probe import JobWatch  # noqa: E402
 
-from etl_addresses_spark.ckpt import free_all_persistent_rdds  # noqa: E402
 from etl_addresses_spark.registry import REGISTRY  # noqa: E402
 from etl_addresses_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _rest_totals(app_url: str) -> dict[str, int]:
-    with urllib.request.urlopen(f"{app_url}/stages", timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_read": 0, "shuffle_write": 0, "input_bytes": 0}
-    for s in stages:
-        tot["shuffle_read"] += s.get("shuffleReadBytes", 0)
-        tot["shuffle_write"] += s.get("shuffleWriteBytes", 0)
-        tot["input_bytes"] += s.get("inputBytes", 0)
-    return tot
+def measure(spark, watch: JobWatch, name: str, sf_dir: str) -> dict:
+    """One noop-sink run of registry row ``name``: wall seconds plus the
+    Spark counters (JobWatch.counters) of the jobs the run started."""
+    watch.new_jobs()
+    sec = timed_noop(lambda: REGISTRY[name].query(spark, sf_dir))
+    return {"sec": sec, **watch.counters()}
 
 
 def main() -> None:
@@ -57,38 +53,24 @@ def main() -> None:
         names = [n for n in REGISTRY if n not in ladder]
     spark = get_spark("shuffle-triage")
     spark.sparkContext.setLogLevel("ERROR")
-    app_url = (
-        f"{spark.sparkContext.uiWebUrl}/api/v1/applications/"
-        f"{spark.sparkContext.applicationId}"
-    )
-    import gc
-
+    watch = JobWatch(spark)
     rows: dict[str, dict] = {}
     for name in names:
-        spark.catalog.clearCache()
-        free_all_persistent_rdds(spark)
-        gc.collect()
-        before = _rest_totals(app_url)
-        t0 = time.perf_counter()
+        hygiene(spark)
         try:
-            REGISTRY[name].query(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            err = None
+            rows[name] = {**measure(spark, watch, name, SF_DIR), "err": None}
         except Exception as exc:  # noqa: BLE001 — record, keep sweeping
             err = f"{type(exc).__name__}: {exc}"[:200]
-        wall = round(time.perf_counter() - t0, 2)
-        after = _rest_totals(app_url)
-        delta = {k: after[k] - before[k] for k in after}
-        rows[name] = {"sec": wall, **delta, "err": err}
+            rows[name] = {"sec": None, **watch.counters(), "err": err}
+        r = rows[name]
         print(
-            f"{name}: {wall}s shuffle_w={delta['shuffle_write']}"
-            f" shuffle_r={delta['shuffle_read']}",
+            f"{name}: {r['sec']}s shuffle_w={r['shuffle_write_mb']:.3f}MB"
+            f" shuffle_r={r['shuffle_read_mb']:.3f}MB",
             file=sys.stderr,
         )
     ranked = sorted(
         rows.items(),
-        key=lambda kv: kv[1]["shuffle_read"] + kv[1]["shuffle_write"],
+        key=lambda kv: kv[1]["shuffle_read_mb"] + kv[1]["shuffle_write_mb"],
         reverse=True,
     )
     out = {
@@ -98,13 +80,13 @@ def main() -> None:
             {
                 "name": n,
                 **r,
-                "shuffle_total": r["shuffle_read"] + r["shuffle_write"],
+                "shuffle_total_mb": r["shuffle_read_mb"] + r["shuffle_write_mb"],
             }
             for n, r in ranked
         ],
     }
     path = os.environ.get(
-        "OUT", "/root/repo/tools/evidence/r13_shuffle_triage.json"
+        "OUT", os.path.join(TOOLS, "evidence", "r13_shuffle_triage.json")
     )
     with open(path, "w") as f:
         json.dump(out, f, indent=1)

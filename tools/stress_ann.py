@@ -12,12 +12,12 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import timed_noop
 from etl_addresses_spark.operators.similarity import (
     ann_ivf_topk_for,
     cosine_topk_fast_for,
@@ -42,20 +42,16 @@ def main() -> None:
     ns = [int(a) for a in sys.argv[1:]] or [10_000, 50_000, 100_000]
     spark = get_spark("stress-ann")
     spark.sparkContext.setLogLevel("ERROR")
-    cosine_topk_fast_for(synth_embeddings(spark, 2_000)).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warmup
+    timed_noop(lambda: cosine_topk_fast_for(synth_embeddings(spark, 2_000)))  # warmup
     for n in ns:
         e = synth_embeddings(spark, n).cache()
         e.count()
         cmod = max(1, round(n / math.isqrt(n)))  # ~sqrt(N) lists
-        for name, df in (
-            ("brute_force", cosine_topk_fast_for(e)),
-            ("ivf_nprobe2", ann_ivf_topk_for(e, centroid_mod=cmod)),
+        for name, build in (
+            ("brute_force", lambda: cosine_topk_fast_for(e)),
+            ("ivf_nprobe2", lambda: ann_ivf_topk_for(e, centroid_mod=cmod)),
         ):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            sec = time.perf_counter() - t0
+            sec = timed_noop(build)
             print(f"N={n:,} {name} sec={sec:.1f}")
         e.unpersist()
 

@@ -21,14 +21,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import calibrate, hygiene  # noqa: E402
 from etl_addresses_spark.operators.bpe import bpe_train_for  # noqa: E402
 from etl_addresses_spark.session import get_spark  # noqa: E402
 from etl_addresses_spark.sources.tables import load_table  # noqa: E402
 
-OUT = sys.argv[1] if len(sys.argv) > 1 else (
-    "/root/repo/tools/evidence/r10_bpe_train_ladder.json"
+OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "evidence", "r10_bpe_train_ladder.json"
 )
 SCALED = "/tmp/spark_graft_scaled_10x_sf0.1"
 
@@ -37,18 +38,8 @@ def main() -> None:
     spark = get_spark("stress-bpe-train")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def calibrate() -> list[float]:
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 200_000_000, 1, 32).selectExpr(
-                "sum(id * 2654435761 % 1000003) AS s"
-            ).write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        return times
-
     results: dict[str, dict] = {}
-    cal = {"start": calibrate()}
+    cal = {"start": calibrate(spark)}
     runs = [("sf0.1", "/root/testdata/sf0.1", k) for k in (16, 32, 64)]
     if os.path.exists(os.path.join(SCALED, "_BUILT_v5")):
         runs.append(("sf0.1x10", SCALED, 16))
@@ -61,7 +52,7 @@ def main() -> None:
         walls = []
         merges = None
         for _ in range(2):
-            spark.catalog.clearCache()
+            hygiene(spark)
             t0 = time.perf_counter()
             merges = bpe_train_for(docs, k)
             walls.append(round(time.perf_counter() - t0, 2))
@@ -74,7 +65,7 @@ def main() -> None:
             "n_merges_learned": len(merges),
         }
         print(f"{tag} k={k}: {walls} ({len(merges)} merges)", file=sys.stderr)
-    cal["end"] = calibrate()
+    cal["end"] = calibrate(spark)
     out = {"calibration": cal, "runs": results}
     with open(OUT, "w") as f:
         json.dump(out, f, indent=1)

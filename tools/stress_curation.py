@@ -13,12 +13,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import timed_noop
 from etl_addresses_spark.operators import curation, multimodal
 from etl_addresses_spark.session import get_spark
 from etl_addresses_spark.sources.tables import load_table
@@ -47,9 +47,7 @@ def synth_docs(spark, k: int):
 
 
 def timed(label: str, df) -> None:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    print(f"  {label}: {time.perf_counter() - t0:.2f}s")
+    print(f"  {label}: {timed_noop(lambda: df):.2f}s")
 
 
 def main() -> None:

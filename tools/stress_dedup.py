@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import timed_noop
 from etl_addresses_spark.operators.dedup import (
     minhash_lsh_pairs_for,
     ngram_jaccard_pairs_for,
@@ -51,9 +51,7 @@ def main() -> None:
     spark = get_spark("stress-dedup")
     spark.sparkContext.setLogLevel("ERROR")
     # warmup
-    ngram_jaccard_pairs_for(synth_corpus(spark, 1).limit(500)).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    timed_noop(lambda: ngram_jaccard_pairs_for(synth_corpus(spark, 1).limit(500)))
     for k in ks:
         corpus = synth_corpus(spark, k).cache()
         n = corpus.count()
@@ -61,9 +59,7 @@ def main() -> None:
             ("exact_ngram", ngram_jaccard_pairs_for),
             ("minhash_lsh", minhash_lsh_pairs_for),
         ):
-            t0 = time.perf_counter()
-            fn(corpus).write.format("noop").mode("overwrite").save()
-            sec = time.perf_counter() - t0
+            sec = timed_noop(lambda: fn(corpus))
             print(f"K={k} docs={n:,} {name} sec={sec:.1f} docs/sec={n / sec:,.0f}")
         corpus.unpersist()
         spark.catalog.clearCache()

@@ -21,12 +21,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import timed_noop
+from etl_addresses_spark.functions.hashing import KNUTH
 from etl_addresses_spark.plans.relational3 import (
     fuzzy_match_blocked_for,
     fuzzy_match_passjoin_for,
@@ -39,7 +40,7 @@ def synth_names(spark, n: int, prefix: str, key: str, name: str):
     """Deterministic names with skewed lengths: u = hash-uniform in
     [0,1), len = 5 + floor(29 * u^2) — median ~12, tail to 34."""
     i = F.col("id")
-    u = (i * F.lit(2654435761) % F.lit(1000003)) / F.lit(1000003.0)
+    u = (i * F.lit(KNUTH) % F.lit(1000003)) / F.lit(1000003.0)
     ln = (F.lit(5) + F.floor(F.lit(29) * u * u)).cast("int")
     body = F.substring(
         F.repeat(F.md5(F.concat(F.lit(prefix), i.cast("string"))), 2), 1, 64
@@ -85,32 +86,20 @@ def main() -> None:
         f"pair-ratio={n_pj_pairs / allp:.6f}"
     )
 
-    t0 = time.perf_counter()
-    fuzzy_match_passjoin_for(sup, cus, d=d).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    t_pj = time.perf_counter() - t0
+    t_pj = timed_noop(lambda: fuzzy_match_passjoin_for(sup, cus, d=d))
     print(f"passjoin tier: {t_pj:.2f}s")
 
-    t0 = time.perf_counter()
-    blocked = fuzzy_match_blocked_for(sup, cus, d=d)
-    blocked.write.format("noop").mode("overwrite").save()
-    t_blocked = time.perf_counter() - t0
+    t_blocked = timed_noop(lambda: fuzzy_match_blocked_for(sup, cus, d=d))
     print(f"blocked tier: {t_blocked:.2f}s")
 
     # naive tier (threshold-banded levenshtein but cartesian candidates)
-    t0 = time.perf_counter()
-    naive = (
-        sup.crossJoin(F.broadcast(cus))
-        .withColumn(
-            "dist", F.expr(f"levenshtein(s_name, c_name, {d})")
-        )
+    t_naive = timed_noop(
+        lambda: sup.crossJoin(F.broadcast(cus))
+        .withColumn("dist", F.expr(f"levenshtein(s_name, c_name, {d})"))
         .filter(F.col("dist") >= 0)
         .groupBy("s_suppkey", "s_name")
         .agg(F.min(F.struct("dist", "c_custkey", "c_name")).alias("m"))
     )
-    naive.write.format("noop").mode("overwrite").save()
-    t_naive = time.perf_counter() - t0
     print(f"naive cross-join tier: {t_naive:.2f}s  speedup={t_naive / t_blocked:.1f}x")
 
 
@@ -156,23 +145,16 @@ def titles_main() -> None:
         f"cut={allp / max(n_pj_pairs, 1):.0f}x"
     )
 
-    t0 = time.perf_counter()
-    fuzzy_match_passjoin_for(evens, odds, d=d).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    t_pj = time.perf_counter() - t0
+    t_pj = timed_noop(lambda: fuzzy_match_passjoin_for(evens, odds, d=d))
     print(f"passjoin tier: {t_pj:.2f}s")
 
-    t0 = time.perf_counter()
-    naive = (
-        evens.crossJoin(F.broadcast(odds))
+    t_naive = timed_noop(
+        lambda: evens.crossJoin(F.broadcast(odds))
         .withColumn("dist", F.expr(f"levenshtein(s_name, c_name, {d})"))
         .filter(F.col("dist") >= 0)
         .groupBy("s_suppkey", "s_name")
         .agg(F.min(F.struct("dist", "c_custkey", "c_name")).alias("m"))
     )
-    naive.write.format("noop").mode("overwrite").save()
-    t_naive = time.perf_counter() - t0
     print(f"naive cross-join tier: {t_naive:.2f}s  speedup={t_naive / t_pj:.1f}x")
 
 
@@ -212,11 +194,7 @@ def auto_main() -> None:
         c_hist = _length_histogram(cus, "c_name")
         coll = segment_collision_estimate(cus, "c_name", d)
         tier = choose_fuzzy_tier(s_hist, c_hist, d, coll)
-        t0 = time.perf_counter()
-        fuzzy_match_auto_for(sup, cus, d=d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        wall = round(time.perf_counter() - t0, 2)
+        wall = timed_noop(lambda: fuzzy_match_auto_for(sup, cus, d=d))
         out["scales"][f"{factor}x"] = {
             "n_per_side": n,
             "tier": tier,
@@ -228,7 +206,10 @@ def auto_main() -> None:
     out["ratio_sec"] = round(
         out["scales"]["10x"]["sec"] / out["scales"]["1x"]["sec"], 2
     )
-    path = "/root/repo/tools/evidence/r7_fuzzy_auto_inregime.json"
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "evidence",
+        "r7_fuzzy_auto_inregime.json",
+    )
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))

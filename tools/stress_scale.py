@@ -3,11 +3,13 @@
 Builds a FACTOR x (default 10x => "sf1-class") replica of sf0.1 under
 /tmp, runs the most scale-sensitive registry queries at BOTH scales in
 one session with the bench hygiene protocol, and records wall time
-plus per-query shuffle read/write and input bytes from the Spark REST
-API — converting the "would the plan survive 10x" design arguments
-into committed numbers (shuffle bytes growing ~linearly with input is
-the pass signal; a super-linear jump flags a plan that would not
-survive 100 TB).
+plus per-query Spark counters (shuffle read/write and input MB, tasks,
+executor time) from the live status store — converting the "would the
+plan survive 10x" design arguments into committed numbers (shuffle
+bytes growing ~linearly with input is the pass signal; a super-linear
+jump flags a plan that would not survive 100 TB).  Evidence files
+written before the counters moved off the UI REST API carry byte
+fields (shuffle_read, shuffle_write, input_bytes) instead.
 
 Replication is key-disjoint so workload STRUCTURE scales instead of
 degenerating:
@@ -34,18 +36,17 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
-os.environ["SPARK_GRAFT_UI"] = "1"  # REST metrics source (session.py)
-
-sys.path.insert(0, "/root/repo")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
 
 from pyspark.sql import functions as F  # noqa: E402
+from shuffle_triage import measure  # noqa: E402
 
-from etl_addresses_spark.ckpt import free_all_persistent_rdds  # noqa: E402
-from etl_addresses_spark.registry import REGISTRY  # noqa: E402
+from bench import calibrate, hygiene  # noqa: E402
 from etl_addresses_spark.session import get_spark  # noqa: E402
 from etl_addresses_spark.sources.tables import load_table  # noqa: E402
+from perfbench.probe import JobWatch  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 FACTOR = int(sys.argv[1]) if len(sys.argv) > 1 else 10
@@ -183,77 +184,41 @@ def build_scaled(spark) -> None:
     open(marker, "w").close()
 
 
-def _rest_totals(app_url: str) -> dict[str, int]:
-    with urllib.request.urlopen(f"{app_url}/stages", timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_read": 0, "shuffle_write": 0, "input_bytes": 0}
-    for s in stages:
-        tot["shuffle_read"] += s.get("shuffleReadBytes", 0)
-        tot["shuffle_write"] += s.get("shuffleWriteBytes", 0)
-        tot["input_bytes"] += s.get("inputBytes", 0)
-    return tot
-
-
 def main() -> None:
     spark = get_spark("stress-scale")
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    app_url = f"{ui}/api/v1/applications/{app_id}"
 
     t0 = time.perf_counter()
     build_scaled(spark)
     build_s = round(time.perf_counter() - t0, 1)
 
-    import gc
-
-    # fixed pure-CPU calibration (the bench.py row): host contention —
-    # the r5 triangle_count lesson — must be legible in the artifact,
-    # not argued afterwards.  Run before/between/after the scale blocks.
-    def _calibrate() -> list[float]:
-        times = []
-        for _ in range(3):
-            c0 = time.perf_counter()
-            spark.range(0, 200_000_000, 1, 32).selectExpr(
-                "sum(id * 2654435761 % 1000003) AS s"
-            ).write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - c0, 3))
-        return times
-
+    watch = JobWatch(spark)
     repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "2"))
-    calibration = {"start": _calibrate()}
+    # the bench.py arithmetic probe before/between/after the scale
+    # blocks: host contention — the r5 triangle_count lesson — must be
+    # legible in the artifact, not argued afterwards
+    calibration = {"start": calibrate(spark)}
     results: dict[str, dict] = {}
     for sf_name, sf_dir in [("sf0.1", SRC), (f"sf0.1x{FACTOR}", OUT)]:
         for name in QUERIES:
-            per_run, best_delta = [], None
+            runs = []
             for _ in range(repeats):
-                spark.catalog.clearCache()
-                free_all_persistent_rdds(spark)
-                gc.collect()
-                before = _rest_totals(app_url)
-                t0 = time.perf_counter()
-                REGISTRY[name].query(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                wall = round(time.perf_counter() - t0, 2)
-                after = _rest_totals(app_url)
-                if not per_run or wall < min(per_run):
-                    best_delta = {k: after[k] - before[k] for k in after}
-                per_run.append(wall)
+                hygiene(spark)
+                runs.append(measure(spark, watch, name, sf_dir))
+            per_run = [r["sec"] for r in runs]
             results.setdefault(name, {})[sf_name] = {
-                "sec": min(per_run),
+                **min(runs, key=lambda r: r["sec"]),
                 "repeats": per_run,
-                **best_delta,
             }
             print(f"{sf_name} {name}: {per_run}", file=sys.stderr)
-        calibration[f"after_{sf_name}"] = _calibrate()
+        calibration[f"after_{sf_name}"] = calibrate(spark)
 
     # scale ratios: wall + shuffle growth vs the FACTOR x input growth
     for name, r in results.items():
         a, b = r["sf0.1"], r[f"sf0.1x{FACTOR}"]
         r["ratio"] = {
             k: (round(b[k] / a[k], 2) if a[k] else None)
-            for k in ("sec", "shuffle_read", "shuffle_write", "input_bytes")
+            for k in ("sec", "shuffle_read_mb", "shuffle_write_mb", "input_mb")
         }
     out = {
         "factor": FACTOR,
@@ -267,7 +232,7 @@ def main() -> None:
         "queries": results,
     }
     path = os.environ.get(
-        "SPARK_GRAFT_SCALE_OUT", "/root/repo/tools/evidence/r6_scale_sf1.json"
+        "SPARK_GRAFT_SCALE_OUT", os.path.join(TOOLS, "evidence", "r6_scale_sf1.json")
     )
     with open(path, "w") as f:
         json.dump(out, f, indent=1)

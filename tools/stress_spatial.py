@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import timed_noop
 from etl_addresses_spark.operators.spatial_join import infer_addresses
 from etl_addresses_spark.session import get_spark
 
@@ -81,18 +82,15 @@ def synth_points(spark, n: int, m: int):
     )
 
 
-def run(strategy: str, n: int, m: int) -> tuple[float, int]:
+def run(strategy: str, n: int, m: int) -> float:
     spark = get_spark("stress-spatial")
     spark.sparkContext.setLogLevel("ERROR")
     hn = synth_points(spark, n, m)
     st = synth_streets(spark, m)
-    t0 = time.perf_counter()
-    out = infer_addresses(hn, st, strategy=strategy)
     # full materialization through the noop sink: a bare count() lets
     # Catalyst eliminate the entire match computation (every house
     # number yields one row whatever it matches)
-    out.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0, -1
+    return timed_noop(lambda: infer_addresses(hn, st, strategy=strategy))
 
 
 def main() -> None:
@@ -100,7 +98,7 @@ def main() -> None:
     m = int(sys.argv[2]) if len(sys.argv) > 2 else 50_000
     run("grid", 10_000, 1_000)  # JVM/codegen warmup
     for strategy in ("grid", "broadcast"):
-        best = min(run(strategy, n, m)[0] for _ in range(2))
+        best = min(run(strategy, n, m) for _ in range(2))
         print(
             f"strategy={strategy} points={n} streets={m} "
             f"sec={best:.1f} pts/sec={n / best:,.0f}"
@@ -158,7 +156,7 @@ def flip_main() -> None:
     for m in (5_000, 15_000, 50_000, 200_000, 1_600_000):
         node = join_node(m)
         t0 = time.perf_counter()
-        sec = round(min(run("grid", n, m)[0] for _ in range(2)), 1)
+        sec = round(min(run("grid", n, m) for _ in range(2)), 1)
         out["ladder"].append({"n_streets": m, "cell_join": node, "sec": sec})
         print(
             f"streets={m}: cell_join={node} sec={sec} "

@@ -12,13 +12,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from bench import timed_noop
 from etl_addresses_spark.session import get_spark
 
 
@@ -53,16 +53,12 @@ def main() -> None:
     spark = get_spark("stress-train-order")
     spark.sparkContext.setLogLevel("ERROR")
     warm = spark.range(100_000).select(F.col("id").alias("doc_id"))
-    bucketed_positions(warm).write.format("noop").mode("overwrite").save()
-    naive_positions(warm).write.format("noop").mode("overwrite").save()
+    timed_noop(lambda: bucketed_positions(warm))
+    timed_noop(lambda: naive_positions(warm))
     for n in sizes:
         docs = spark.range(n).select(F.col("id").alias("doc_id"))
-        t0 = time.perf_counter()
-        bucketed_positions(docs).write.format("noop").mode("overwrite").save()
-        tb = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        naive_positions(docs).write.format("noop").mode("overwrite").save()
-        tn = time.perf_counter() - t0
+        tb = timed_noop(lambda: bucketed_positions(docs))
+        tn = timed_noop(lambda: naive_positions(docs))
         # value identity on a sample join (full join at the largest N
         # would just re-time the two pipelines)
         if n == sizes[0]:
