@@ -7,8 +7,12 @@ Layout:
     sources/    - parquet table loaders, NDJSON object streams, geo fixtures
     functions/  - scalar column expressions (fuzzy dates, ids, geo math, text)
     operators/  - the flagship spatio-temporal join, transform fan-out,
-                  dedup, similarity, sessionization, multimodal plumbing
-    plans/      - relational query surface (joins/aggs/windows/set ops)
+                  dedup, similarity, edit-distance join (fuzzy),
+                  multimodal plumbing
+    plans/      - relational query surface by domain (tpch, timeseries,
+                  setops, aggregates), flagship/transform, extension and
+                  streaming registry rows
+    registry.py - every module's QUERIES assembled into the registry
     streaming/  - Structured Streaming variants (watermark, session windows)
 """
 

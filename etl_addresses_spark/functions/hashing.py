@@ -5,7 +5,7 @@ int64 arithmetic, so a Spark `orderBy(hash).limit(k)` (plans as
 TakeOrderedAndProject — per-partition top-k + single merge, never a
 global sort) and a DuckDB `ORDER BY hash LIMIT k` select the IDENTICAL
 key set.  Used by the fuzzy-join validation baseline's pair cap
-(plans/relational3.py) and the k-means seed cap
+(operators/fuzzy.py) and the k-means seed cap
 (operators/clustering.py); both inline the same expression into their
 oracle SQL via `knuth_order_sql`, so the two engines can never
 desynchronize on the sampled set.

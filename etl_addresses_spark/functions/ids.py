@@ -27,10 +27,3 @@ def internal_id(id_col: Column) -> Column:
     return F.when(id_col.contains("/"), F.split(id_col, "/").getItem(1)).otherwise(
         id_col
     )
-
-
-# DuckDB renderings for oracle SQL ({c} = column, {ds} = dataset literal).
-DUCKDB_FULL_ID = "CASE WHEN contains({c}, '/') THEN {c} ELSE '{ds}/' || {c} END"
-DUCKDB_INTERNAL_ID = (
-    "CASE WHEN contains({c}, '/') THEN split_part({c}, '/', 2) ELSE {c} END"
-)

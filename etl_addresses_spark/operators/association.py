@@ -183,7 +183,7 @@ LIMIT {CHI2_TOPK}
 """
 
 
-QUERIES_ASSOCIATION = {
+QUERIES = {
     "frequent_item_pairs": (frequent_item_pairs, FREQUENT_PAIRS_SQL),
     "chi2_token_assoc": (chi2_token_assoc, CHI2_TOKEN_SQL),
 }

@@ -449,3 +449,16 @@ ORDER BY freq DESC, tok ASC
 LIMIT {BPE_TOPK_TOKENS}
 """
 )
+
+
+QUERIES = {
+    "bpe_merge_table": (bpe_merge_table, BPE_MERGE_TABLE_SQL),
+    "bpe_encode_stats": (bpe_encode_stats, BPE_ENCODE_STATS_SQL),
+    # the SCALE-tier apply under the oracle gate — 96 fixed merges >
+    # BPE_APPLY_BATCH, so the driver checks the segmented checkpointed
+    # plan, not only pytest
+    "bpe_apply_batched": (bpe_apply_batched, BPE_APPLY_BATCHED_SQL),
+    # the 64-merge trainer realism tier (ladder-backed; see
+    # BPE_MERGES_K64)
+    "bpe_merge_table_k64": (bpe_merge_table_k64, BPE_MERGE_TABLE_K64_SQL),
+}

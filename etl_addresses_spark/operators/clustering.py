@@ -1639,3 +1639,54 @@ SELECT query_id, rank, cand_id, pq_cosine FROM (
 WHERE rank <= {TOPK_K}
 """
     )
+
+
+# The FIXED iteration counts (10 power iterations, 3 Lloyd rounds)
+# unroll into chained CTEs, so the iterative rows are fully
+# oracle-checked — ulp-level aggregation-order drift sits far below the
+# driver's 1e-9 value canonicalization.  SSE-monotonicity/recall stay
+# in pytest.
+QUERIES = {
+    "kmeans_cluster_sizes": (kmeans_cluster_sizes, kmeans_oracle_sql()),
+    "ann_ivf_lloyd_topk": (ann_ivf_lloyd_topk, ann_ivf_lloyd_oracle_sql()),
+    # the composed IVF-PQ index (coarse Lloyd prune + ADC over
+    # candidate codes only — the FAISS IVFADC shape) and its
+    # recall-as-data promotion gate vs the exact cosine top-k.
+    "ann_ivf_pq_topk": (ann_ivf_pq_topk, ann_ivf_pq_oracle_sql()),
+    "ann_ivf_pq_recall": (ann_ivf_pq_recall, ann_ivf_pq_recall_oracle_sql()),
+    # the index BUILD/SERVE split — persist the four IVF-PQ artifacts to
+    # parquet, answer queries from the persisted copies; value-identity
+    # with ann_ivf_pq_topk, so it shares that oracle.
+    "ann_index_persist_serve": (ann_index_persist_serve, ann_ivf_pq_oracle_sql()),
+    # incremental index maintenance — the batch is assigned and encoded
+    # against FROZEN base-trained artifacts (FAISS add()).
+    "ann_index_incremental_add": (
+        ann_index_incremental_add,
+        ann_index_incremental_oracle_sql(),
+    ),
+    # index deletion (FAISS remove_ids) — tombstones dropped from the
+    # row-level artifacts, learned artifacts frozen; completes the
+    # build/persist/ingest/delete lifecycle.
+    "ann_index_delete_serve": (ann_index_delete_serve, ann_index_delete_oracle_sql()),
+    # the recall-vs-nprobe tuning curve (FAISS-bench sweep) — one build,
+    # one max-nprobe candidate scan, three filter-defined operating
+    # points; integer-exact recall aggregates.
+    "ann_nprobe_recall_curve": (
+        ann_nprobe_recall_curve,
+        ann_nprobe_curve_oracle_sql(),
+    ),
+    # the IVF + SQ8 composition (FAISS IVF_SQ8) — coarse prune +
+    # exact-integer int8 scoring; the memory rung between float IVF and
+    # IVF-PQ, bit-portable by integer arithmetic.
+    "ann_ivf_sq8_topk": (ann_ivf_sq8_topk, ann_ivf_sq8_oracle_sql()),
+    # serving-side completions.  Refine = exact rerank of k_factor x k
+    # quantized candidates (FAISS IndexRefineFlat); merge =
+    # shard-parallel build against shared quantizers, unioned (FAISS
+    # merge_from) — value-identical to the monolithic build, so it
+    # shares ann_ivf_pq_topk's oracle verbatim; filtered = per-query
+    # label constraint fused into the candidate hash-join key
+    # (multi-tenant / attribute-filtered ANN).
+    "ann_ivfpq_refine_topk": (ann_ivfpq_refine_topk, ann_ivfpq_refine_oracle_sql()),
+    "ann_index_merge_serve": (ann_index_merge_serve, ann_ivf_pq_oracle_sql()),
+    "ann_filtered_topk": (ann_filtered_topk, ann_filtered_oracle_sql()),
+}

@@ -198,7 +198,7 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast nested-loop with the overlap predicate is THE scale plan;
     for large-large interval joins the pattern becomes bin-by-bucket
     equi-join first, exactly like the flagship spatial grid."""
-    from etl_addresses_spark.plans.relational import events_sessionize
+    from etl_addresses_spark.plans.timeseries import events_sessionize
 
     sessions = events_sessionize(spark, sf_dir)
     e = load_table(spark, sf_dir, "events")
@@ -377,7 +377,6 @@ FROM documents
 
 
 WEIGHTED_SAMPLE_K = 50
-_POW60 = float(1 << 60)  # 2^60, exactly representable
 
 
 def sample_weighted_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,7 +695,7 @@ def interval_overlap_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate selectivity, and AQE splits any hot bin.  Bin width here
     = the 2-hour window length (every window spans <= 2 bins; sessions
     are gap-bounded and span few)."""
-    from etl_addresses_spark.plans.relational import events_sessionize
+    from etl_addresses_spark.plans.timeseries import events_sessionize
 
     sessions = events_sessionize(spark, sf_dir)
     e = load_table(spark, sf_dir, "events")

@@ -1182,3 +1182,13 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
+
+
+QUERIES = {
+    "dedup_substring_blocks": (dedup_substring_blocks, DEDUP_SUBSTRING_SQL),
+    "dedup_incremental_lsh": (dedup_incremental_lsh, DEDUP_INCREMENTAL_SQL),
+    # same transitive-closure oracle as dedup_clusters: two independent
+    # algorithms (min-label propagation vs large-star/small-star), one
+    # hash-checked answer
+    "dedup_clusters_star": (dedup_clusters_star, DEDUP_CLUSTERS_SQL),
+}

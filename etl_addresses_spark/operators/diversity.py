@@ -353,7 +353,7 @@ state{t} AS MATERIALIZED (
     return sql
 
 
-QUERIES_DIVERSITY = {
+QUERIES = {
     "mmr_rerank_topk": (mmr_rerank_topk, mmr_oracle_sql()),
     "kcenter_diverse_sample": (kcenter_diverse_sample, kcenter_oracle_sql()),
 }

@@ -1,6 +1,8 @@
-"""Third batch: MERGE/SCD2 emulation, window frame variants, and a
-string-similarity (edit-distance) join.  Same determinism rules as
-plans/relational.py.
+"""Edit-distance similarity join, an operator family with its own tier
+dispatcher: the all-pairs validation baseline, the blocked, dense
+packed-fold and PassJoin (segment pigeonhole) tiers, the measured
+selectivity rule that picks among them (`choose_fuzzy_tier`), and the
+registry rows over supplier/customer names and document titles.
 """
 
 from __future__ import annotations
@@ -8,153 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_addresses_spark.functions.hashing import KNUTH, knuth_order_col, knuth_order_sql
+from etl_addresses_spark.functions.hashing import knuth_order_col, knuth_order_sql
 from etl_addresses_spark.sources.tables import load_table
-
-
-def _change_batch(c: DataFrame) -> DataFrame:
-    """Deterministic CDC batch derived from customer: every key % 7 == 0
-    gets an updated balance; keys shifted by +1000000 are inserts."""
-    updates = c.filter(F.col("c_custkey") % 7 == 0).select(
-        "c_custkey",
-        F.col("c_name"),
-        F.col("c_nationkey"),
-        (F.col("c_acctbal") + F.lit(500.0)).alias("c_acctbal"),
-        F.col("c_mktsegment"),
-    )
-    inserts = c.filter(F.col("c_custkey") % 11 == 0).select(
-        (F.col("c_custkey") + 1000000).alias("c_custkey"),
-        F.concat(F.lit("NEW "), F.col("c_name")).alias("c_name"),
-        F.col("c_nationkey"),
-        F.col("c_acctbal"),
-        F.col("c_mktsegment"),
-    )
-    return updates.unionByName(inserts)
-
-
-_CHANGES_SQL = """
-changes AS (
-  SELECT c_custkey, c_name, c_nationkey, c_acctbal + 500.0e0 AS c_acctbal,
-         c_mktsegment
-  FROM customer WHERE c_custkey % 7 = 0
-  UNION ALL
-  SELECT c_custkey + 1000000 AS c_custkey, 'NEW ' || c_name AS c_name,
-         c_nationkey, c_acctbal, c_mktsegment
-  FROM customer WHERE c_custkey % 11 = 0
-)
-"""
-
-
-def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO emulation without a table format: snapshot rows not
-    touched by the batch (anti-join) + the batch itself (updates win).
-    This is the upsert shape used before Delta/Iceberg are available;
-    with them it becomes a single MERGE on the same keys."""
-    c = load_table(spark, sf_dir, "customer")
-    changes = _change_batch(c)
-    untouched = c.join(changes, "c_custkey", "left_anti")
-    return untouched.unionByName(changes).select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
-    )
-
-
-MERGE_UPSERT_SQL = (
-    "WITH " + _CHANGES_SQL.strip() + """
-SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM changes WHERE changes.c_custkey = customer.c_custkey)
-UNION ALL
-SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM changes
-"""
-)
-
-
-def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD Type-2: applying the change batch produces history rows —
-    updated keys keep their old version with is_current=false and gain
-    a new current version; inserts and untouched rows are current."""
-    c = load_table(spark, sf_dir, "customer")
-    changes = _change_batch(c)
-    updated_keys = changes.join(c, "c_custkey", "left_semi")
-    old_versions = c.join(updated_keys, "c_custkey", "left_semi").select(
-        "c_custkey",
-        "c_acctbal",
-        F.lit(1).alias("version"),
-        F.lit(False).alias("is_current"),
-    )
-    new_versions = changes.join(
-        c.select("c_custkey"), "c_custkey", "left_semi"
-    ).select(
-        "c_custkey",
-        "c_acctbal",
-        F.lit(2).alias("version"),
-        F.lit(True).alias("is_current"),
-    )
-    untouched = c.join(changes, "c_custkey", "left_anti").select(
-        "c_custkey",
-        "c_acctbal",
-        F.lit(1).alias("version"),
-        F.lit(True).alias("is_current"),
-    )
-    inserts = changes.join(c, "c_custkey", "left_anti").select(
-        "c_custkey",
-        "c_acctbal",
-        F.lit(1).alias("version"),
-        F.lit(True).alias("is_current"),
-    )
-    return old_versions.unionByName(new_versions).unionByName(
-        untouched
-    ).unionByName(inserts)
-
-
-SCD2_HISTORY_SQL = (
-    "WITH " + _CHANGES_SQL.strip() + """
-SELECT c_custkey, c_acctbal, 1 AS version, false AS is_current FROM customer
-WHERE EXISTS (SELECT 1 FROM changes WHERE changes.c_custkey = customer.c_custkey)
-UNION ALL
-SELECT ch.c_custkey, ch.c_acctbal, 2 AS version, true AS is_current FROM changes ch
-WHERE EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = ch.c_custkey)
-UNION ALL
-SELECT c_custkey, c_acctbal, 1 AS version, true AS is_current FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM changes WHERE changes.c_custkey = customer.c_custkey)
-UNION ALL
-SELECT ch.c_custkey, ch.c_acctbal, 1 AS version, true AS is_current FROM changes ch
-WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = ch.c_custkey)
-"""
-)
-
-
-def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frame + ranking variants: dense_rank, ntile, first/last
-    value over explicit row frames, and a centered moving average."""
-    o = load_table(spark, sf_dir, "orders")
-    order_w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    frame = order_w.rowsBetween(-1, 1)
-    price_dec = F.col("o_totalprice").cast("decimal(18,2)")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.dense_rank().over(order_w).cast("long").alias("drank"),
-        F.ntile(4).over(order_w).cast("long").alias("quartile"),
-        F.first("o_orderkey").over(order_w).alias("first_order"),
-        (
-            F.sum(price_dec).over(frame).cast("double")
-            / F.count(F.lit(1)).over(frame)
-        ).alias("moving_avg3"),
-    )
-
-
-WINDOW_FRAMES_SQL = """
-SELECT o_custkey, o_orderkey,
-  dense_rank() OVER w AS drank,
-  ntile(4) OVER w AS quartile,
-  first_value(o_orderkey) OVER w AS first_order,
-  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER frame AS DOUBLE)
-    / count(*) OVER frame AS moving_avg3
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-  frame AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-            ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
-"""
 
 
 # Absolute caps for the all-pairs VALIDATION baseline below (r8
@@ -210,7 +67,7 @@ def fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the `_hash_sample` capped subset so the cross product stays
     O(1) in sf; the scale path is the tiered dispatcher
     (`fuzzy_name_match_blocked`), equivalence-tested against this
-    baseline on the same sampled frames in tests/test_relational3.py."""
+    baseline on the same sampled frames in tests/test_fuzzy.py."""
     s = _hash_sample(
         load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name"),
         "s_suppkey",
@@ -650,7 +507,6 @@ def fuzzy_match_auto_for(
     return fuzzy_match_dense_for(suppliers, customers, d)
 
 
-
 def fuzzy_name_match_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CONTENT-blocked tier of the fuzzy name match: PassJoin-style
     segment pigeonhole (Li/Deng/Feng, VLDB'11 — public algorithm,
@@ -687,7 +543,7 @@ def fuzzy_name_match_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses: PassJoin runs only when the segment keys actually prune,
     else the dense packed-fold tier answers (identically — the gate
     picks the plan, never the result).  `fuzzy_title_match_passjoin`
-    (relational7.py) stays the in-regime demonstration where the
+    (below) stays the in-regime demonstration where the
     segment join is the winning plan.
 
     DOWN-FIXTURED since round 10 (the fuzzy_name_match precedent,
@@ -841,22 +697,80 @@ WHERE rn = 1
 """
 
 
-QUERIES3 = {
-    "merge_upsert": (merge_upsert, MERGE_UPSERT_SQL),
-    "scd2_history": (scd2_history, SCD2_HISTORY_SQL),
-    "window_frames": (window_frames, WINDOW_FRAMES_SQL),
+TITLE_WORDS = 4
+TITLE_MAX_DIST = 2
+
+
+def fuzzy_title_match_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PassJoin fuzzy match IN ITS PRUNING REGIME: best edit-distance-
+    <= {TITLE_MAX_DIST} match between document 'titles' (the first
+    {TITLE_WORDS} words of each text, 14-28 chars at every sf — a
+    genuinely heterogeneous length distribution) across the even/odd
+    doc_id halves of the corpus.
+
+    Why this row exists: `fuzzy_name_match_passjoin` proves the
+    segment-pigeonhole algorithm on the supplier/customer fixture,
+    but there d=6 against ~18-char names violates the regime rule
+    median_len/(d+1) >= 3 (SCALE.md round 5) — segments degrade to
+    1-2 chars and candidates balloon past the length-band tier.  Here
+    d={TITLE_MAX_DIST} against median ~21 chars gives 7-char segments:
+    an exact-substring hit on a 7-gram is rare, so candidate volume
+    collapses versus the quadratic all-pairs (measured in
+    tools/stress_fuzzy.py).  Same three-part shape as the name tiers:
+    HOF-generated segment/window keys, equi-join, banded-levenshtein
+    verify + min(struct) argmin.  The derived title is
+    split/slice/array_join — JVM-side, no UDF.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    title = F.array_join(
+        F.slice(F.split(F.col("text"), " "), 1, TITLE_WORDS), " "
+    )
+    evens = docs.filter(F.col("doc_id") % 2 == 0).select(
+        F.col("doc_id").alias("s_suppkey"), title.alias("s_name")
+    )
+    odds = docs.filter(F.col("doc_id") % 2 == 1).select(
+        F.col("doc_id").alias("c_custkey"), title.alias("c_name")
+    )
+    out = fuzzy_match_passjoin_for(evens, odds, d=TITLE_MAX_DIST)
+    return out.select(
+        F.col("s_suppkey").alias("even_doc"),
+        F.col("s_name").alias("even_title"),
+        F.col("c_custkey").alias("odd_doc"),
+        F.col("c_name").alias("odd_title"),
+        "dist",
+    )
+
+
+FUZZY_TITLE_PASSJOIN_SQL = f"""
+WITH t AS (
+  SELECT doc_id,
+    array_to_string(list_slice(string_split(text, ' '), 1, {TITLE_WORDS}), ' ')
+      AS title
+  FROM documents
+),
+e AS (SELECT doc_id AS even_doc, title AS even_title FROM t WHERE doc_id % 2 = 0),
+o AS (SELECT doc_id AS odd_doc, title AS odd_title FROM t WHERE doc_id % 2 = 1)
+SELECT even_doc, even_title, odd_doc, odd_title, dist FROM (
+  SELECT e.even_doc, e.even_title, o.odd_doc, o.odd_title,
+    CAST(levenshtein(even_title, odd_title) AS BIGINT) AS dist,
+    row_number() OVER (PARTITION BY even_doc
+                       ORDER BY levenshtein(even_title, odd_title) ASC,
+                                odd_doc ASC) AS rn
+  FROM e CROSS JOIN o
+  WHERE levenshtein(even_title, odd_title) <= {TITLE_MAX_DIST})
+WHERE rn = 1
+"""
+
+
+QUERIES = {
     "fuzzy_name_match": (fuzzy_name_match, FUZZY_NAME_MATCH_SQL),
     "fuzzy_name_match_blocked": (
         fuzzy_name_match_blocked,
         FUZZY_NAME_MATCH_BLOCKED_SQL,
     ),
-    # round 5: third tier, same argmin answer — content blocking via
-    # segment pigeonhole (see fuzzy_name_match_passjoin docstring).
-    # Since round 10 the row runs on the same hash-sampled frames as
-    # fuzzy_name_match, so it shares THAT capped oracle (identical at
-    # sf0.01 where the caps exceed the table sizes).
-    "fuzzy_name_match_passjoin": (
-        fuzzy_name_match_passjoin,
-        FUZZY_NAME_MATCH_SQL,
+    "fuzzy_name_match_passjoin": (fuzzy_name_match_passjoin, FUZZY_NAME_MATCH_SQL),
+    "fuzzy_title_match_passjoin": (
+        fuzzy_title_match_passjoin,
+        FUZZY_TITLE_PASSJOIN_SQL,
     ),
 }

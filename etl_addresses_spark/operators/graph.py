@@ -165,7 +165,8 @@ def pagerank_oracle_sql(iters: int = PR_ITERS, damping: float = DAMPING) -> str:
     """DuckDB replica of `pagerank_relations`: the fixed-count
     power-iteration loop unrolled into chained CTEs (r0..r{iters}), one
     dangling-mass + one receive CTE per step, arithmetic in the same
-    association order as the Spark column expressions."""
+    association order as the Spark column expressions, sums in the
+    same exact DECIMAL(38,18) so their bits do not follow thread order."""
     from etl_addresses_spark.plans.transform import INFERRED_CTES
 
     d = damping
@@ -197,12 +198,13 @@ r0 AS MATERIALIZED (
         p = k - 1
         sql += f""",
 dang{k} AS MATERIALIZED (
-  SELECT coalesce(sum(r.pr), 0.0e0) AS dm
+  SELECT coalesce(CAST(sum(CAST(r.pr AS DECIMAL(38,18))) AS DOUBLE), 0.0e0) AS dm
   FROM r{p} r LEFT JOIN outdeg o ON r.node = o.src
   WHERE o.src IS NULL
 ),
 recv{k} AS MATERIALIZED (
-  SELECT e.dst AS node, sum(r.pr / o.out_deg) AS recv
+  SELECT e.dst AS node,
+         CAST(sum(CAST(r.pr / o.out_deg AS DECIMAL(38,18))) AS DOUBLE) AS recv
   FROM r{p} r JOIN outdeg o ON r.node = o.src JOIN e ON e.src = r.node
   GROUP BY e.dst
 ),
@@ -751,3 +753,19 @@ b{k} AS MATERIALIZED (
 SELECT node, CAST(dist AS BIGINT) AS dist FROM b{hops}
 """
     return sql
+
+
+QUERIES = {
+    "triangle_count": (triangle_count, TRIANGLE_COUNT_SQL),
+    # deterministic synchronous label propagation over the co-purchase
+    # graph; integer-exact unrolled-CTE oracle.
+    "graph_communities_labelprop": (
+        graph_communities_labelprop,
+        labelprop_oracle_sql(),
+    ),
+    # bounded multi-source BFS over the same graph; frontier-Pregel in
+    # Spark vs unrolled Bellman-Ford in the oracle — two algorithms, one
+    # integer-exact answer.
+    "graph_bfs_distances": (graph_bfs_distances, bfs_oracle_sql()),
+    "pagerank_relations": (pagerank_relations, pagerank_oracle_sql()),
+}

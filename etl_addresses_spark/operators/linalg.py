@@ -216,7 +216,7 @@ GROUP BY e.vec_id
 """
 
 
-QUERIES_LINALG = {
+QUERIES = {
     "embedding_gram_matrix": (embedding_gram_matrix, EMBEDDING_GRAM_SQL),
     "embedding_top_pc": (embedding_top_pc, top_pc_oracle_sql()),
     "embedding_pc_scores": (embedding_pc_scores, pc_scores_oracle_sql()),

@@ -701,7 +701,7 @@ FROM m
 """
 
 
-QUERIES_LLMDATA = {
+QUERIES = {
     "decontaminate_ngram": (decontaminate_ngram, DECONTAMINATE_NGRAM_SQL),
     "chunk_documents": (chunk_documents, CHUNK_DOCUMENTS_SQL),
     "pack_sequences": (pack_sequences, PACK_SEQUENCES_SQL),
@@ -714,30 +714,3 @@ QUERIES_LLMDATA = {
     "bm25_topk_inverted": (bm25_topk_inverted, BM25_TOPK_SQL),
     "repetition_ngram_score": (repetition_ngram_score, REPETITION_NGRAM_SQL),
 }
-
-
-# round 7: BPE merge-table training (operators/bpe.py) — registered
-# through the llm-data dict so the registry assembly stays one-line.
-from etl_addresses_spark.operators.bpe import (  # noqa: E402
-    BPE_APPLY_BATCHED_SQL,
-    BPE_ENCODE_STATS_SQL,
-    BPE_MERGE_TABLE_K64_SQL,
-    BPE_MERGE_TABLE_SQL,
-    bpe_apply_batched,
-    bpe_encode_stats,
-    bpe_merge_table,
-    bpe_merge_table_k64,
-)
-
-QUERIES_LLMDATA["bpe_merge_table"] = (bpe_merge_table, BPE_MERGE_TABLE_SQL)
-QUERIES_LLMDATA["bpe_encode_stats"] = (bpe_encode_stats, BPE_ENCODE_STATS_SQL)
-# round 9: the SCALE-tier apply under the oracle gate — 96 fixed
-# merges > BPE_APPLY_BATCH, so the driver checks the segmented
-# checkpointed plan, not only pytest
-QUERIES_LLMDATA["bpe_apply_batched"] = (bpe_apply_batched, BPE_APPLY_BATCHED_SQL)
-# round 10: the 64-merge trainer realism tier (ladder-backed; see
-# BPE_MERGES_K64 in operators/bpe.py)
-QUERIES_LLMDATA["bpe_merge_table_k64"] = (
-    bpe_merge_table_k64,
-    BPE_MERGE_TABLE_K64_SQL,
-)

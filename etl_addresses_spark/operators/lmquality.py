@@ -497,7 +497,7 @@ FROM assigned s LEFT JOIN dup_counts d ON s.vec_id = d.vec_id
 """
 
 
-QUERIES_LMQUALITY = {
+QUERIES = {
     "lm_bigram_logprob": (lm_bigram_logprob, LM_BIGRAM_SQL),
     "quality_classifier_score": (quality_classifier_score, QUALITY_CLASSIFIER_SQL),
     "vocab_oov_rate": (vocab_oov_rate, VOCAB_OOV_SQL),

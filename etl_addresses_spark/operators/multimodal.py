@@ -25,12 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_addresses_spark.sources.tables import load_table
 
-DECODE_SCHEMA = (
-    "doc_id bigint, n_bytes int, width int, height int, channels int, "
-    "content_hash string"
-)
-
-
 def binary_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.text encoded to a binary payload column — the stand-in
     for an image/audio blob column at 100 TB."""

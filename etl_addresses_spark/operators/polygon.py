@@ -158,3 +158,8 @@ FROM pts JOIN polyb
   ON px >= xmin AND px <= xmax AND py >= ymin AND py <= ymax
 WHERE ({_sql_edge_terms()}) % 2 = 1
 """
+
+
+QUERIES = {
+    "st_contains_join": (st_contains_join, ST_CONTAINS_SQL),
+}

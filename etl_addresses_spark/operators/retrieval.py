@@ -434,7 +434,7 @@ FROM dcgs
 """
 
 
-QUERIES_RETRIEVAL = {
+QUERIES = {
     "rrf_hybrid_topk": (rrf_hybrid_topk, RRF_HYBRID_SQL),
     "rrf_hybrid_topk_ivfpq": (
         rrf_hybrid_topk_ivfpq,

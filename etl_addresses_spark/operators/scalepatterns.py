@@ -376,7 +376,6 @@ GROUP BY l_returnflag
 # ---------------------------------------------------------------------------
 
 _CMS_D = 4
-_CMS_W = 4096  # 3 hex chars per row hash
 _CMS_TOPK = 20
 
 
@@ -545,14 +544,6 @@ WHERE n >= {_Z_MIN_EVENTS}
 """
 
 
-QUERIES_SCALE = {
-    "zorder_extents": (zorder_extents, ZORDER_EXTENTS_SQL),
-    "bloom_prune_join": (bloom_prune_join, BLOOM_PRUNE_SQL),
-    "cms_heavy_hitters": (cms_heavy_hitters, CMS_HEAVY_HITTERS_SQL),
-    "anomaly_zscore_events": (anomaly_zscore_events, ANOMALY_ZSCORE_SQL),
-}
-
-
 # --- distribution drift (PSI) --------------------------------------------
 
 PSI_BINS = 10
@@ -702,8 +693,6 @@ FROM dense p JOIN totals t ON p.event_type = t.event_type
 GROUP BY p.event_type
 """
 
-QUERIES_SCALE["drift_psi_events"] = (drift_psi_events, DRIFT_PSI_SQL)
-
 
 def drift_ks_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov drift statistic between the first
@@ -822,8 +811,6 @@ SELECT c.event_type,
 FROM cum c JOIN totals t ON c.event_type = t.event_type
 GROUP BY c.event_type
 """
-
-QUERIES_SCALE["drift_ks_events"] = (drift_ks_events, DRIFT_KS_SQL)
 
 
 # --- token-budget curation selection -------------------------------------
@@ -998,7 +985,13 @@ SELECT doc_id, CAST(score AS BIGINT) AS score, toks
 FROM ranked, b WHERE cum <= budget
 """
 
-QUERIES_SCALE["quality_budget_select"] = (
-    quality_budget_select,
-    QUALITY_BUDGET_SQL,
-)
+
+QUERIES = {
+    "zorder_extents": (zorder_extents, ZORDER_EXTENTS_SQL),
+    "bloom_prune_join": (bloom_prune_join, BLOOM_PRUNE_SQL),
+    "cms_heavy_hitters": (cms_heavy_hitters, CMS_HEAVY_HITTERS_SQL),
+    "anomaly_zscore_events": (anomaly_zscore_events, ANOMALY_ZSCORE_SQL),
+    "drift_psi_events": (drift_psi_events, DRIFT_PSI_SQL),
+    "drift_ks_events": (drift_ks_events, DRIFT_KS_SQL),
+    "quality_budget_select": (quality_budget_select, QUALITY_BUDGET_SQL),
+}

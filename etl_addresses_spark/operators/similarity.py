@@ -1400,3 +1400,14 @@ ANN_RECALL_EVAL_SQL = recall_eval_sql(
     COSINE_TOPK_SAMPLED_SQL,
     ann_ivf_topk_sql(eval_query_pred_sql("vec_id", "SELECT n FROM en")),
 )
+
+
+QUERIES = {
+    # supervised contrastive mining (positive = top same-label
+    # neighbor, hard negatives = top-k different-label) on the shared
+    # bit-reproducible cosine.
+    "contrastive_hard_negatives": (
+        contrastive_hard_negatives,
+        CONTRASTIVE_HARD_NEG_SQL,
+    ),
+}

@@ -256,7 +256,7 @@ FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 10
 _CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
 # Exact-integer moment machinery shared by stats_correlation and
-# stats_regression_group (plans/relational7.py).  The measures are
+# stats_regression_group (plans/aggregates.py).  The measures are
 # 2-fractional-digit decimals stored as DOUBLE (quantity is integral),
 # so round(x*100) recovers the exact integer cents in BOTH engines —
 # fixture-wide max |x*100 - round(x*100)| is 9.4e-10, so the two

@@ -12,7 +12,7 @@ from etl_addresses_spark.operators import (
 )
 
 # name -> (query fn, oracle SQL or None for rows-only checks)
-EXTENSION_QUERIES = {
+QUERIES = {
     "dedup_exact": (dedup.dedup_exact, dedup.DEDUP_EXACT_SQL),
     "ngram_jaccard_pairs": (dedup.ngram_jaccard_pairs, dedup.NGRAM_JACCARD_SQL),
     # MinHash/SimHash run on the portable phash60 (md5-prefix bigint both

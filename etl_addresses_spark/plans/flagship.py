@@ -258,3 +258,18 @@ SELECT CAST(count(*) AS BIGINT) AS processed,
        CAST(count(error) AS BIGINT) AS unmatched
 FROM inferred
 """
+
+
+QUERIES = {
+    "spatiotemporal_join": (spatiotemporal_join, ORACLE_SQL),
+    # the A1 observability counter as a driver-checked row —
+    # executor-collected Observation metrics hash-checked against the
+    # oracle's own counts over the inferred output.
+    "infer_addresses_metrics": (infer_addresses_metrics, INFER_METRICS_SQL),
+    "spatiotemporal_join_knn": (spatiotemporal_join_knn, ORACLE_SQL_KNN),
+    # the reference's NDJSON I/O contract exercised end-to-end (S2
+    # sink -> S1 declared-schema scan -> flagship infer); the oracle is
+    # the unchanged flagship SQL because the round-trip must be a
+    # value-level identity.
+    "reference_e2e_ndjson": (reference_e2e_ndjson, ORACLE_SQL),
+}

@@ -6,7 +6,8 @@ return the result as a batch DataFrame.  Because the drain processes
 all input while the watermark is still at its initial value, no rows
 are late, so the streamed result equals the batch semantics and can be
 oracle-checked in DuckDB like any other query.  Timestamps are emitted
-as formatted strings (timestamp-unit drift rule, see plans/relational.py).
+as formatted strings (timestamp-unit drift rule: like the batch event
+rows in plans/timeseries.py, never as raw timestamps).
 """
 
 from __future__ import annotations
@@ -14,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.plans.timeseries import EVENTS_OHLC_SQL as _BATCH_OHLC_SQL
+from etl_addresses_spark.session import scoped_shuffle_partitions
 from etl_addresses_spark.streaming import event_stream
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -439,8 +442,6 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from etl_addresses_spark.plans.relational6 import EVENTS_OHLC_SQL as _BATCH_OHLC_SQL
-
 # Batch OHLC + the append-mode emission predicate.  3600000000 us =
 # the 1-hour window length; the watermark is ms-truncated because
 # Spark tracks event-time stats in milliseconds.
@@ -603,34 +604,6 @@ WHERE rnk <= 3
 """
 
 
-STREAMING_QUERIES = {
-    "stream_dedup_keys": (stream_dedup_keys, STREAM_DEDUP_SQL),
-    "stream_windowed_counts": (stream_windowed_counts, STREAM_WINDOWED_SQL),
-    "stream_sliding_windows": (stream_sliding_windows, STREAM_SLIDING_SQL),
-    "stream_purchase_view_join": (stream_purchase_view_join, STREAM_SSJ_SQL),
-    "stream_purchase_view_left_join": (
-        stream_purchase_view_left_join,
-        STREAM_SSJ_LEFT_SQL,
-    ),
-    "stream_purchase_view_full_join": (
-        stream_purchase_view_full_join,
-        STREAM_SSJ_FULL_SQL,
-    ),
-    "stream_ohlc_bars": (stream_ohlc_bars, _OHLC_SQL),
-    "stream_static_enrich": (stream_static_enrich, STREAM_STATIC_ENRICH_SQL),
-    "stream_session_windows": (stream_session_windows, STREAM_SESSION_SQL),
-    "stream_stateful_user_totals": (
-        stream_stateful_user_totals,
-        STREAM_STATEFUL_SQL,
-    ),
-    "stream_restart_exactly_once": (
-        stream_restart_exactly_once,
-        STREAM_RESTART_SQL,
-    ),
-    "stream_topk_event_types": (stream_topk_event_types, STREAM_TOPK_SQL),
-}
-
-
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC apply — the foreachBatch upsert sink (Spark's
     documented recipe for MERGE-style sinks the file formats can't do
@@ -742,9 +715,7 @@ def _cdc_upsert_run(
     # no stateful operator here, but each foreachBatch merge is a batch
     # groupBy whose shuffle should match the (tiny) CDC feed, not the
     # session default
-    with event_stream.scoped_shuffle_partitions(
-        spark, event_stream.state_partitions_for(src)
-    ):
+    with scoped_shuffle_partitions(spark, event_stream.state_partitions_for(src)):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", os.path.join(base, "ckpt"))
@@ -775,4 +746,31 @@ FROM orders
 WHERE o_orderkey % 97 != 0
 """
 
-STREAMING_QUERIES["stream_cdc_upsert"] = (stream_cdc_upsert, STREAM_CDC_SQL)
+
+QUERIES = {
+    "stream_dedup_keys": (stream_dedup_keys, STREAM_DEDUP_SQL),
+    "stream_windowed_counts": (stream_windowed_counts, STREAM_WINDOWED_SQL),
+    "stream_sliding_windows": (stream_sliding_windows, STREAM_SLIDING_SQL),
+    "stream_purchase_view_join": (stream_purchase_view_join, STREAM_SSJ_SQL),
+    "stream_purchase_view_left_join": (
+        stream_purchase_view_left_join,
+        STREAM_SSJ_LEFT_SQL,
+    ),
+    "stream_purchase_view_full_join": (
+        stream_purchase_view_full_join,
+        STREAM_SSJ_FULL_SQL,
+    ),
+    "stream_ohlc_bars": (stream_ohlc_bars, _OHLC_SQL),
+    "stream_static_enrich": (stream_static_enrich, STREAM_STATIC_ENRICH_SQL),
+    "stream_session_windows": (stream_session_windows, STREAM_SESSION_SQL),
+    "stream_stateful_user_totals": (
+        stream_stateful_user_totals,
+        STREAM_STATEFUL_SQL,
+    ),
+    "stream_restart_exactly_once": (
+        stream_restart_exactly_once,
+        STREAM_RESTART_SQL,
+    ),
+    "stream_topk_event_types": (stream_topk_event_types, STREAM_TOPK_SQL),
+    "stream_cdc_upsert": (stream_cdc_upsert, STREAM_CDC_SQL),
+}

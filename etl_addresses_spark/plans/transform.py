@@ -107,3 +107,11 @@ ends AS (
 SELECT node, CAST(sum(is_out) AS BIGINT) AS out_degree, CAST(sum(1 - is_out) AS BIGINT) AS in_degree
 FROM ends GROUP BY node
 """
+
+
+QUERIES = {
+    "transform_objects": (transform_objects, OBJECTS_ORACLE),
+    "transform_relations": (transform_relations, RELATIONS_ORACLE),
+    "transform_logs": (transform_logs, LOGS_ORACLE),
+    "relation_degrees": (relation_degrees, DEGREES_ORACLE),
+}

@@ -15,9 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_addresses_spark.operators import (
     association,
+    bpe,
     clustering,
     dedup,
     diversity,
+    fuzzy,
     graph,
     linalg,
     llmtext,
@@ -27,25 +29,22 @@ from etl_addresses_spark.operators import (
     scalepatterns,
     similarity,
 )
+from etl_addresses_spark.plans import (
+    aggregates,
+    extensions,
+    flagship,
+    setops,
+    streaming_queries,
+    timeseries,
+    tpch,
+    transform,
+)
 from etl_addresses_spark.sources import (
     bucketing,
     compaction,
     delimited,
     partitioned,
     rawtext,
-)
-from etl_addresses_spark.plans import (
-    extensions,
-    flagship,
-    relational,
-    relational2,
-    relational3,
-    relational4,
-    relational5,
-    relational6,
-    relational7,
-    streaming_queries,
-    transform,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -80,250 +79,59 @@ TIERS: dict[str, str] = {
 }
 
 
-_ALL: dict[str, Entry] = {
-    "spatiotemporal_join": Entry(flagship.spatiotemporal_join, flagship.ORACLE_SQL),
-    # round 6: the A1 observability counter as a driver-checked row —
-    # executor-collected Observation metrics hash-checked against the
-    # oracle's own counts over the inferred output.
-    "infer_addresses_metrics": Entry(
-        flagship.infer_addresses_metrics, flagship.INFER_METRICS_SQL
-    ),
-    "spatiotemporal_join_knn": Entry(
-        flagship.spatiotemporal_join_knn, flagship.ORACLE_SQL_KNN
-    ),
-    "transform_objects": Entry(transform.transform_objects, transform.OBJECTS_ORACLE),
-    "transform_relations": Entry(
-        transform.transform_relations, transform.RELATIONS_ORACLE
-    ),
-    "transform_logs": Entry(transform.transform_logs, transform.LOGS_ORACLE),
-    "relation_degrees": Entry(transform.relation_degrees, transform.DEGREES_ORACLE),
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in relational.QUERIES.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in extensions.EXTENSION_QUERIES.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in relational2.QUERIES2.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in relational3.QUERIES3.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in relational4.QUERIES4.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in relational5.QUERIES5.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in relational6.QUERIES6.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in relational7.QUERIES7.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in streaming_queries.STREAMING_QUERIES.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in llmtext.QUERIES_LLMDATA.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in scalepatterns.QUERIES_SCALE.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in lmquality.QUERIES_LMQUALITY.items()
-    },
-    # round 10: hybrid retrieval — RRF fusion of the BM25 and cosine
-    # rankings (integer ranks cross the fusion seam, so bit-portable).
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in retrieval.QUERIES_RETRIEVAL.items()
-    },
-    # round 11: diversity-aware selection — MMR re-ranking over the
-    # cosine candidate list and corpus-global k-center greedy
-    # sampling; fixed-step greedy loops unrolled into chained CTEs
-    # for the oracle (the pagerank/labelprop technique).
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in diversity.QUERIES_DIVERSITY.items()
-    },
-    # round 11: association analytics — market-basket pair support and
-    # chi-squared token/class feature selection (integer contingency
-    # counts, one double division — bit-portable).
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in association.QUERIES_ASSOCIATION.items()
-    },
-    **{
-        name: Entry(fn, sql)
-        for name, (fn, sql) in linalg.QUERIES_LINALG.items()
-    },
-    "triangle_count": Entry(graph.triangle_count, graph.TRIANGLE_COUNT_SQL),
-    # round 5: deterministic synchronous label propagation over the
-    # same co-purchase graph; integer-exact unrolled-CTE oracle.
-    "graph_communities_labelprop": Entry(
-        graph.graph_communities_labelprop, graph.labelprop_oracle_sql()
-    ),
-    # round 5 (late window): bounded multi-source BFS over the same
-    # graph; frontier-Pregel in Spark vs unrolled Bellman-Ford in the
-    # oracle — two algorithms, one integer-exact answer.
-    "graph_bfs_distances": Entry(
-        graph.graph_bfs_distances, graph.bfs_oracle_sql()
-    ),
-    "dedup_substring_blocks": Entry(
-        dedup.dedup_substring_blocks, dedup.DEDUP_SUBSTRING_SQL
-    ),
-    "dedup_incremental_lsh": Entry(
-        dedup.dedup_incremental_lsh, dedup.DEDUP_INCREMENTAL_SQL
-    ),
-    # same transitive-closure oracle as dedup_clusters: two independent
-    # algorithms (min-label propagation vs large-star/small-star), one
-    # hash-checked answer
-    "dedup_clusters_star": Entry(
-        dedup.dedup_clusters_star, dedup.DEDUP_CLUSTERS_SQL
-    ),
-    # Iterative float ops: the FIXED iteration counts (10 power
-    # iterations, 3 Lloyd rounds) unroll into chained CTEs, so all
-    # three are fully oracle-checked since round 3 — ulp-level
-    # aggregation-order drift sits far below the driver's 1e-9 value
-    # canonicalization.  SSE-monotonicity/recall stay in pytest.
-    "kmeans_cluster_sizes": Entry(
-        clustering.kmeans_cluster_sizes, clustering.kmeans_oracle_sql()
-    ),
-    "ann_ivf_lloyd_topk": Entry(
-        clustering.ann_ivf_lloyd_topk, clustering.ann_ivf_lloyd_oracle_sql()
-    ),
-    # round 10: the composed IVF-PQ index (coarse Lloyd prune + ADC
-    # over candidate codes only — the FAISS IVFADC shape, the r9
-    # verdict's one missing ANN family member) and its recall-as-data
-    # promotion gate vs the exact cosine top-k.
-    "ann_ivf_pq_topk": Entry(
-        clustering.ann_ivf_pq_topk, clustering.ann_ivf_pq_oracle_sql()
-    ),
-    "ann_ivf_pq_recall": Entry(
-        clustering.ann_ivf_pq_recall, clustering.ann_ivf_pq_recall_oracle_sql()
-    ),
-    # round 12: the index BUILD/SERVE split — persist the four IVF-PQ
-    # artifacts to parquet, answer queries from the persisted copies;
-    # value-identity with ann_ivf_pq_topk, so it shares that oracle.
-    "ann_index_persist_serve": Entry(
-        clustering.ann_index_persist_serve, clustering.ann_ivf_pq_oracle_sql()
-    ),
-    # round 12: incremental index maintenance — the batch is assigned
-    # and encoded against FROZEN base-trained artifacts (FAISS add()).
-    "ann_index_incremental_add": Entry(
-        clustering.ann_index_incremental_add,
-        clustering.ann_index_incremental_oracle_sql(),
-    ),
-    # round 13: index deletion (FAISS remove_ids) — tombstones dropped
-    # from the row-level artifacts, learned artifacts frozen; completes
-    # the build/persist/ingest/delete lifecycle.
-    "ann_index_delete_serve": Entry(
-        clustering.ann_index_delete_serve,
-        clustering.ann_index_delete_oracle_sql(),
-    ),
-    # round 13: the recall-vs-nprobe tuning curve (FAISS-bench sweep) —
-    # one build, one max-nprobe candidate scan, three filter-defined
-    # operating points; integer-exact recall aggregates.
-    "ann_nprobe_recall_curve": Entry(
-        clustering.ann_nprobe_recall_curve,
-        clustering.ann_nprobe_curve_oracle_sql(),
-    ),
-    # round 13: the IVF + SQ8 composition (FAISS IVF_SQ8) — coarse
-    # prune + exact-integer int8 scoring; the memory rung between
-    # float IVF and IVF-PQ, bit-portable by integer arithmetic.
-    "ann_ivf_sq8_topk": Entry(
-        clustering.ann_ivf_sq8_topk,
-        clustering.ann_ivf_sq8_oracle_sql(),
-    ),
-    # round 14: serving-side completions.  Refine = exact rerank of
-    # k_factor x k quantized candidates (FAISS IndexRefineFlat);
-    # merge = shard-parallel build against shared quantizers, unioned
-    # (FAISS merge_from) — value-identical to the monolithic build, so
-    # it shares ann_ivf_pq_topk's oracle verbatim; filtered = per-query
-    # label constraint fused into the candidate hash-join key
-    # (multi-tenant / attribute-filtered ANN).
-    "ann_ivfpq_refine_topk": Entry(
-        clustering.ann_ivfpq_refine_topk,
-        clustering.ann_ivfpq_refine_oracle_sql(),
-    ),
-    "ann_index_merge_serve": Entry(
-        clustering.ann_index_merge_serve,
-        clustering.ann_ivf_pq_oracle_sql(),
-    ),
-    "ann_filtered_topk": Entry(
-        clustering.ann_filtered_topk,
-        clustering.ann_filtered_oracle_sql(),
-    ),
-    "pagerank_relations": Entry(
-        graph.pagerank_relations, graph.pagerank_oracle_sql()
-    ),
-    "st_contains_join": Entry(polygon.st_contains_join, polygon.ST_CONTAINS_SQL),
-    # round 4: the reference's actual NDJSON I/O contract exercised
-    # end-to-end (S2 sink -> S1 declared-schema scan -> flagship
-    # infer); the oracle is the unchanged flagship SQL because the
-    # round-trip must be a value-level identity.
-    "reference_e2e_ndjson": Entry(
-        flagship.reference_e2e_ndjson, flagship.ORACLE_SQL
-    ),
-    # round 4: supervised contrastive mining (positive = top same-label
-    # neighbor, hard negatives = top-k different-label) on the shared
-    # bit-reproducible cosine.
-    "contrastive_hard_negatives": Entry(
-        similarity.contrastive_hard_negatives,
-        similarity.CONTRASTIVE_HARD_NEG_SQL,
-    ),
-    # round 4: CSV sink/scan contract proven as a value-level identity
-    # (symmetric to reference_e2e_ndjson for the other interchange
-    # format).
-    "delimited_roundtrip_csv": Entry(
-        delimited.delimited_roundtrip_csv, delimited.DELIMITED_ROUNDTRIP_SQL
-    ),
-    # round 4: partition-pruned sink/scan and raw-text log ingestion
-    # proven as identity rows (same pattern as the NDJSON/CSV rows).
-    "partitioned_sink_prune": Entry(
-        partitioned.partitioned_sink_prune, partitioned.PARTITIONED_PRUNE_SQL
-    ),
-    "rawtext_log_roundtrip": Entry(
-        rawtext.rawtext_log_roundtrip, rawtext.RAWTEXT_LOG_SQL
-    ),
-    # round 5: the bucketed-warehouse sink/scan contract as a
-    # value-identity row (the co-location genre's missing member).
-    "bucketed_join_colocated": Entry(
-        bucketing.bucketed_join_colocated, bucketing.BUCKETED_JOIN_SQL
-    ),
-    # round 6: the small-file compaction maintenance pass, certified by
-    # full-column identity aggregate vs the original table (file-count
-    # and range-clustering contracts asserted inside the operator).
-    "compact_small_files": Entry(
-        compaction.compact_small_files, compaction.COMPACT_SMALL_FILES_SQL
-    ),
-}
+# Every module that owns registry rows exports
+# QUERIES: name -> (query fn, oracle SQL).
+MODULES = (
+    flagship,
+    transform,
+    tpch,
+    timeseries,
+    setops,
+    aggregates,
+    fuzzy,
+    extensions,
+    streaming_queries,
+    llmtext,
+    bpe,
+    scalepatterns,
+    lmquality,
+    retrieval,
+    diversity,
+    association,
+    linalg,
+    graph,
+    dedup,
+    clustering,
+    polygon,
+    similarity,
+    delimited,
+    partitioned,
+    rawtext,
+    bucketing,
+    compaction,
+)
 
-# apply tier tags (Entry is frozen; rebuild the tagged rows); the
-# keys must exist — a typo'd TIERS entry must fail loudly, not stay
+
+def catalogue(modules) -> dict[str, Entry]:
+    """All modules' rows in module order, tier-tagged from TIERS.  A
+    name registered twice raises KeyError rather than letting the later
+    row shadow the earlier one."""
+    rows: dict[str, Entry] = {}
+    for module in modules:
+        for name, (fn, sql) in module.QUERIES.items():
+            if name in rows:
+                raise KeyError(f"{name!r} registered twice, again by {module.__name__}")
+            rows[name] = Entry(fn, sql, TIERS.get(name, "product"))
+    return rows
+
+
+_ALL: dict[str, Entry] = catalogue(MODULES)
+
+# the TIERS keys must exist — a typo'd entry must fail loudly, not stay
 # silently "product"
 _unknown_tiers = set(TIERS) - set(_ALL)
 if _unknown_tiers:
     raise KeyError(f"TIERS names unknown registry entries: {_unknown_tiers}")
-_ALL = {
-    name: (
-        Entry(e.query, e.oracle, TIERS[name]) if name in TIERS else e
-    )
-    for name, e in _ALL.items()
-}
 
 # The grading driver cross-checks exactly the FIRST 50 registry entries
 # (dict order) against DuckDB each round.  Round-14 rotation, derived
@@ -395,20 +203,14 @@ DRIVER_WINDOW: list[str] = [
 ]
 
 
+# The window first, then the remaining oracle-backed entries (pytest +
+# driver_sim keep them honest), then rows-only entries last.
+_REST = [name for name in _ALL if name not in DRIVER_WINDOW]
 REGISTRY: dict[str, Entry] = {
-    **{name: _ALL[name] for name in DRIVER_WINDOW},
-    # remaining oracle-backed entries (green in round 1; pytest +
-    # driver_sim keep them honest), then rows-only entries last.
-    **{
-        name: e
-        for name, e in _ALL.items()
-        if name not in DRIVER_WINDOW and e.oracle is not None
-    },
-    **{
-        name: e
-        for name, e in _ALL.items()
-        if name not in DRIVER_WINDOW and e.oracle is None
-    },
+    name: _ALL[name]
+    for name in DRIVER_WINDOW
+    + [name for name in _REST if _ALL[name].oracle is not None]
+    + [name for name in _REST if _ALL[name].oracle is None]
 }
 
 

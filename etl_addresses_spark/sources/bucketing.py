@@ -102,3 +102,8 @@ SELECT o_orderstatus,
 FROM orders JOIN lineitem ON o_orderkey = l_orderkey
 GROUP BY o_orderstatus
 """
+
+
+QUERIES = {
+    "bucketed_join_colocated": (bucketed_join_colocated, BUCKETED_JOIN_SQL),
+}

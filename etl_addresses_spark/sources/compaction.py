@@ -161,3 +161,8 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
+
+
+QUERIES = {
+    "compact_small_files": (compact_small_files, COMPACT_SMALL_FILES_SQL),
+}

@@ -102,3 +102,8 @@ SELECT source,
 FROM documents
 GROUP BY source
 """
+
+
+QUERIES = {
+    "delimited_roundtrip_csv": (delimited_roundtrip_csv, DELIMITED_ROUNDTRIP_SQL),
+}

@@ -76,3 +76,8 @@ FROM events
 WHERE event_type = 'purchase'
 GROUP BY 1
 """
+
+
+QUERIES = {
+    "partitioned_sink_prune": (partitioned_sink_prune, PARTITIONED_PRUNE_SQL),
+}

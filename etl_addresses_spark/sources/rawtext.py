@@ -82,3 +82,8 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
+
+
+QUERIES = {
+    "rawtext_log_roundtrip": (rawtext_log_roundtrip, RAWTEXT_LOG_SQL),
+}

@@ -29,12 +29,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Small dimension tables that should be broadcast in joins.
-BROADCAST_TABLES = {"region", "nation", "supplier"}
-
-
 def ensure_session_confs(spark: SparkSession) -> None:
     """Runtime confs every query depends on, set defensively because the
     driver may call us with a SparkSession it built itself:

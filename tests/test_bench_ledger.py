@@ -5,9 +5,11 @@ evidence must cover the whole registry."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from bench_ledger import _query_times, load_evidence  # noqa: E402
 

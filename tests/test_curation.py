@@ -53,7 +53,7 @@ def test_interval_overlap_join_covers_sessions(spark):
     rows = out.collect()
     assert rows
     # a 2h window can never match more sessions than exist
-    from etl_addresses_spark.plans.relational import events_sessionize
+    from etl_addresses_spark.plans.timeseries import events_sessionize
 
     n_sessions = events_sessionize(spark, SF_ORACLE).count()
     assert all(0 < r.n_sessions <= n_sessions for r in rows)

@@ -1,20 +1,15 @@
 from __future__ import annotations
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
+from conftest import SF_ORACLE, assert_frames_match, assert_oracle
 
 from etl_addresses_spark.operators import dedup, similarity
-from etl_addresses_spark.plans.extensions import EXTENSION_QUERIES
-
-ORACLE_CHECKED = sorted(
-    name for name, (_, sql) in EXTENSION_QUERIES.items() if sql is not None
-)
+from etl_addresses_spark.plans import extensions
 
 
-@pytest.mark.parametrize("name", ORACLE_CHECKED)
+@pytest.mark.parametrize("name", sorted(extensions.QUERIES))
 def test_extension_oracle(name, spark, ddb):
-    fn, sql = EXTENSION_QUERIES[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)
 
 
 def test_dedup_exact_finds_injected_copies(spark):

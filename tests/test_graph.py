@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+from collections import deque
+
 import numpy as np
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, assert_frames_match
 
 from etl_addresses_spark.operators import graph
 
@@ -74,3 +76,42 @@ def test_labelprop_partitions_all_nodes(spark, ddb):
     rows = out.collect()
     assert sum(r["size"] for r in rows) == n_nodes
     out.unpersist()
+
+
+def test_graph_bfs_matches_python_bfs(spark, ddb):
+    from etl_addresses_spark.operators.graph import (
+        BFS_HOPS,
+        BFS_SEEDS,
+        bfs_oracle_sql,
+        graph_bfs_distances,
+    )
+
+    li = ddb.sql(
+        "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem"
+    ).fetchall()
+    per_order: dict[int, set] = {}
+    for ok, p in li:
+        per_order.setdefault(ok, set()).add(p)
+    adj: dict[int, set] = {}
+    for ps in per_order.values():
+        for u in ps:
+            for v in ps:
+                if u != v:
+                    adj.setdefault(u, set()).add(v)
+    seeds = sorted(adj)[:BFS_SEEDS]
+    dist = {s: 0 for s in seeds}
+    q = deque(seeds)
+    while q:
+        u = q.popleft()
+        if dist[u] >= BFS_HOPS:
+            continue
+        for w in adj[u]:
+            if w not in dist:
+                dist[w] = dist[u] + 1
+                q.append(w)
+    out = graph_bfs_distances(spark, SF_ORACLE)
+    got = {r["node"]: r["dist"] for r in out.collect()}
+    assert got == dist
+    assert_frames_match(
+        graph_bfs_distances(spark, SF_ORACLE), ddb.sql(bfs_oracle_sql())
+    )

@@ -1,10 +1,10 @@
 from __future__ import annotations
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
+from conftest import SF_ORACLE, assert_oracle
 
+from etl_addresses_spark.operators import bpe, llmtext
 from etl_addresses_spark.operators.llmtext import (
-    QUERIES_LLMDATA,
     bm25_topk,
     decontaminate_ngram,
     pack_sequences,
@@ -12,10 +12,9 @@ from etl_addresses_spark.operators.llmtext import (
 )
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES_LLMDATA))
+@pytest.mark.parametrize("name", sorted([*llmtext.QUERIES, *bpe.QUERIES]))
 def test_llmtext_oracle(name, spark, ddb):
-    fn, sql = QUERIES_LLMDATA[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)
 
 
 def test_decontaminate_excludes_eval_docs(spark):

@@ -3,10 +3,10 @@ from __future__ import annotations
 import math
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
+from conftest import SF_ORACLE, assert_oracle
 
+from etl_addresses_spark.operators import lmquality
 from etl_addresses_spark.operators.lmquality import (
-    QUERIES_LMQUALITY,
     SEMDEDUP_THRESHOLD,
     VOCAB_K,
     lm_bigram_logprob,
@@ -16,10 +16,9 @@ from etl_addresses_spark.operators.lmquality import (
 )
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES_LMQUALITY))
+@pytest.mark.parametrize("name", sorted(lmquality.QUERIES))
 def test_lmquality_oracle(name, spark, ddb):
-    fn, sql = QUERIES_LMQUALITY[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)
 
 
 def test_lm_bigram_scores_are_sane(spark):
@@ -207,3 +206,19 @@ def test_image_dedup_groups_exact_copies(spark):
     assert any(r.n_images >= 2 for r in rows)
     # hashes are 64-bit strings
     assert all(len(r.ahash) == 64 and set(r.ahash) <= {"0", "1"} for r in rows)
+
+
+def test_semantic_dedup_assignment_is_aggregate_not_window(spark):
+    """The r14 restructure replaced the n x k row_number window (full
+    embeddings shuffled+sorted) with a narrow max(struct) aggregate and
+    cached the 3-consumer assigned frame; pin both plan properties."""
+    from etl_addresses_spark.operators.lmquality import semantic_dedup
+
+    df = semantic_dedup(spark, SF_ORACLE)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "Window" not in plan, "assignment regressed to a window"
+    assert "InMemoryRelation" in plan or "InMemoryTableScan" in plan, (
+        "assigned frame is no longer cached"
+    )

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from conftest import SF_SMALL
 
-from etl_addresses_spark.plans import flagship, relational
+from etl_addresses_spark.plans import flagship, tpch
 
 
 def _plan(df) -> str:
@@ -108,7 +108,7 @@ def test_flagship_grid_single_house_number_scan(spark):
 
 
 def test_pricing_summary_pushes_filter_and_prunes_columns(spark):
-    df = relational.agg_pricing_summary(spark, SF_SMALL)
+    df = tpch.agg_pricing_summary(spark, SF_SMALL)
     plan = _plan(df)
     assert "PushedFilters: [IsNotNull(l_shipdate)" in plan or (
         "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters")[1][:200]
@@ -120,18 +120,18 @@ def test_pricing_summary_pushes_filter_and_prunes_columns(spark):
 
 
 def test_global_topk_avoids_full_sort(spark):
-    df = relational.sort_limit_global(spark, SF_SMALL)
+    df = tpch.sort_limit_global(spark, SF_SMALL)
     assert "TakeOrderedAndProject" in _plan(df)
 
 
 def test_small_dims_broadcast_in_q5(spark):
-    df = relational.join_region_volume(spark, SF_SMALL)
+    df = tpch.join_region_volume(spark, SF_SMALL)
     assert _plan(df).count("BroadcastHashJoin") >= 2
 
 
 def test_semi_and_anti_join_operators(spark):
-    semi = relational.join_semi_orders(spark, SF_SMALL)
-    anti = relational.join_anti_customers(spark, SF_SMALL)
+    semi = tpch.join_semi_orders(spark, SF_SMALL)
+    anti = tpch.join_anti_customers(spark, SF_SMALL)
     assert "LeftSemi" in _optimized(semi)
     assert "LeftAnti" in _optimized(anti)
 
@@ -342,10 +342,10 @@ def test_fuzzy_band_tier_no_cartesian_and_banded_levenshtein(spark):
     length key (never a nested-loop product), carry the THRESHOLD
     levenshtein (banded early-abandon variant), and aggregate with a
     partial_min (map-side combine) instead of a window sort."""
-    from etl_addresses_spark.plans import relational3
+    from etl_addresses_spark.operators import fuzzy
     from etl_addresses_spark.sources.tables import load_table
 
-    df = relational3.fuzzy_match_blocked_for(
+    df = fuzzy.fuzzy_match_blocked_for(
         load_table(spark, SF_SMALL, "supplier").select("s_suppkey", "s_name"),
         load_table(spark, SF_SMALL, "customer").select("c_custkey", "c_name"),
     )
@@ -366,9 +366,9 @@ def test_fuzzy_registered_query_dispatches_to_dense_tier(spark):
     THRESHOLD levenshtein after it, and the map-side-combinable
     partial_min — with NO shuffle of candidate pairs (the only
     exchanges are the supplier fan-out and the |S|-row agg)."""
-    from etl_addresses_spark.plans import relational3
+    from etl_addresses_spark.operators import fuzzy
 
-    df = relational3.fuzzy_name_match_blocked(spark, SF_SMALL)
+    df = fuzzy.fuzzy_name_match_blocked(spark, SF_SMALL)
     plan = _plan(df)
     assert "BroadcastNestedLoopJoin" in plan
     assert "partial_min" in plan
@@ -379,7 +379,7 @@ def test_fuzzy_registered_query_dispatches_to_dense_tier(spark):
 
 def test_fuzzy_tier_rule_regimes():
     """The dispatcher's tier rule on the three measured regimes."""
-    from etl_addresses_spark.plans.relational3 import choose_fuzzy_tier
+    from etl_addresses_spark.operators.fuzzy import choose_fuzzy_tier
 
     uniform = {18: 1000}
     # zero length spread, short segments -> dense
@@ -419,9 +419,9 @@ def test_contrastive_mining_single_window_pass(spark):
 
 
 def test_q3_pushes_filters_and_takeordered(spark):
-    from etl_addresses_spark.plans import relational4
+    from etl_addresses_spark.plans import tpch
 
-    plan = _plan(relational4.q3_shipping_priority(spark, SF_SMALL))
+    plan = _plan(tpch.q3_shipping_priority(spark, SF_SMALL))
     # top-10 must be TakeOrderedAndProject, never a global sort
     assert "TakeOrderedAndProject" in plan
     # the segment predicate must reach the customer parquet scan
@@ -433,23 +433,23 @@ def test_q3_pushes_filters_and_takeordered(spark):
 
 
 def test_q5_broadcasts_dims_no_cartesian(spark):
-    from etl_addresses_spark.plans import relational4
+    from etl_addresses_spark.plans import tpch
 
-    plan = _plan(relational4.q5_local_supplier_volume(spark, SF_SMALL))
+    plan = _plan(tpch.q5_local_supplier_volume(spark, SF_SMALL))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2  # nation + region
 
 
 def test_passjoin_no_cartesian(spark):
-    from etl_addresses_spark.plans import relational3
+    from etl_addresses_spark.operators import fuzzy
     from etl_addresses_spark.sources.tables import load_table
 
     # the PassJoin TIER itself (un-gated seam): content blocking must
     # be an equi-join on the segment key — no row-level product
     s = load_table(spark, SF_SMALL, "supplier").select("s_suppkey", "s_name")
     c = load_table(spark, SF_SMALL, "customer").select("c_custkey", "c_name")
-    plan = _plan(relational3.fuzzy_match_passjoin_for(s, c))
+    plan = _plan(fuzzy.fuzzy_match_passjoin_for(s, c))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # and the argmin must partial-aggregate (map-side combine)
@@ -463,9 +463,9 @@ def test_passjoin_row_gates_to_dense_on_uniform_fixture(spark):
     bucket-packed broadcast product (a BNLJ over |C|/2048 bucket ROWS,
     deliberately) with the packed-long aggregate fold, not the
     segment equi-join that measured 185 s at sf0.1."""
-    from etl_addresses_spark.plans import relational3
+    from etl_addresses_spark.operators import fuzzy
 
-    plan = _plan(relational3.fuzzy_name_match_passjoin(spark, SF_SMALL))
+    plan = _plan(fuzzy.fuzzy_name_match_passjoin(spark, SF_SMALL))
     # dense-tier fingerprints: the bucketed broadcast product + the
     # allocation-free packed fold + map-side partial argmin
     assert "BroadcastNestedLoopJoin" in plan
@@ -527,9 +527,9 @@ def test_train_shuffle_no_large_single_partition(spark):
 
 
 def test_sessions_path_topk_takeordered_no_cartesian(spark):
-    from etl_addresses_spark.plans import relational7
+    from etl_addresses_spark.plans import timeseries
 
-    plan = _plan(relational7.sessions_path_topk(spark, SF_SMALL))
+    plan = _plan(timeseries.sessions_path_topk(spark, SF_SMALL))
     # global top-20 must be TakeOrderedAndProject, never a full sort
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
@@ -539,9 +539,9 @@ def test_sessions_path_topk_takeordered_no_cartesian(spark):
 
 
 def test_stats_regression_single_scan_partial_sums(spark):
-    from etl_addresses_spark.plans import relational7
+    from etl_addresses_spark.plans import aggregates
 
-    plan = _plan(relational7.stats_regression_group(spark, SF_SMALL))
+    plan = _plan(aggregates.stats_regression_group(spark, SF_SMALL))
     # one pass over lineitem, map-side-combinable moment sums
     assert plan.count("FileScan parquet") == 1
     assert "partial_sum" in plan
@@ -551,9 +551,9 @@ def test_stats_regression_single_scan_partial_sums(spark):
 
 
 def test_fuzzy_title_passjoin_no_cartesian(spark):
-    from etl_addresses_spark.plans import relational7
+    from etl_addresses_spark.operators import fuzzy
 
-    plan = _plan(relational7.fuzzy_title_match_passjoin(spark, SF_SMALL))
+    plan = _plan(fuzzy.fuzzy_title_match_passjoin(spark, SF_SMALL))
     # in-regime or not, candidate generation stays an equi-join
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -190,7 +190,7 @@ def test_fuzzy_blocked_matches_bruteforce_reference(spark, s_names, c_names):
     length (where the band genuinely prunes): the blocked Spark plan
     must return exactly the brute-force threshold-argmin, computed by
     a plain-Python levenshtein over all pairs."""
-    from etl_addresses_spark.plans.relational3 import (
+    from etl_addresses_spark.operators.fuzzy import (
         FUZZY_MAX_DIST,
         fuzzy_match_blocked_for,
     )
@@ -232,7 +232,7 @@ def test_fuzzy_passjoin_matches_bruteforce_reference(
     final answer must be exactly the brute-force threshold-argmin —
     the tiny 5-letter alphabet maximizes both collisions (stress on
     the verify) and near-matches (stress on losslessness)."""
-    from etl_addresses_spark.plans.relational3 import fuzzy_match_passjoin_for
+    from etl_addresses_spark.operators.fuzzy import fuzzy_match_passjoin_for
 
     s_df = spark.createDataFrame(
         [(i, n) for i, n in enumerate(s_names)], "s_suppkey long, s_name string"
@@ -269,7 +269,7 @@ def test_fuzzy_dense_matches_bruteforce_reference(spark, s_names, c_names, d):
     character presence by <= 2) must never prune a true match, and the
     bit-packing must preserve the (dist, key, name) tie-break — so the
     answer must equal the brute-force threshold-argmin exactly."""
-    from etl_addresses_spark.plans.relational3 import fuzzy_match_dense_for
+    from etl_addresses_spark.operators.fuzzy import fuzzy_match_dense_for
 
     s_df = spark.createDataFrame(
         [(i, n) for i, n in enumerate(s_names)], "s_suppkey long, s_name string"
@@ -306,7 +306,7 @@ def test_fuzzy_dense_guard_beyond_pack_range(spark, s_names, c_names, d):
     mod 8), so `fuzzy_match_dense_for` must STILL return the exact
     brute-force threshold-argmin via the band-tier fallback — the
     regime the old property tests (capped at d=6) never reached."""
-    from etl_addresses_spark.plans.relational3 import fuzzy_match_dense_for
+    from etl_addresses_spark.operators.fuzzy import fuzzy_match_dense_for
 
     s_df = spark.createDataFrame(
         [(i, n) for i, n in enumerate(s_names)], "s_suppkey long, s_name string"
@@ -351,7 +351,7 @@ def test_fuzzy_dense_duplicate_keys_keep_band_tie_break(
     distance before the min(c_name) tie-break, so its answer stays
     identical to the band tier's min(struct(dist, key, name)) — keys
     here are drawn from {0,1,2} so collisions are the common case."""
-    from etl_addresses_spark.plans.relational3 import (
+    from etl_addresses_spark.operators.fuzzy import (
         fuzzy_match_blocked_for,
         fuzzy_match_dense_for,
     )
@@ -389,7 +389,7 @@ def test_fuzzy_auto_dispatcher_matches_bruteforce_reference(
     chosen plan, together), the answer must be exactly the brute-force
     threshold-argmin — name lengths up to 30 chars make different
     examples land in different tiers."""
-    from etl_addresses_spark.plans.relational3 import fuzzy_match_auto_for
+    from etl_addresses_spark.operators.fuzzy import fuzzy_match_auto_for
 
     s_df = spark.createDataFrame(
         [(i, n) for i, n in enumerate(s_names)], "s_suppkey long, s_name string"

@@ -1,12 +1,12 @@
+"""Oracle checks for the plan-catalogue rows listed under this file's name
+in conftest.ORACLE_ROWS_BY_TEST_FILE, under the test id they have always had."""
+
 from __future__ import annotations
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
-
-from etl_addresses_spark.plans.relational import QUERIES
+from conftest import ORACLE_ROWS_BY_TEST_FILE, assert_oracle
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize("name", ORACLE_ROWS_BY_TEST_FILE["test_relational"])
 def test_relational_oracle(name, spark, ddb):
-    fn, sql = QUERIES[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)

@@ -1,12 +1,12 @@
+"""Oracle checks for the plan-catalogue rows listed under this file's name
+in conftest.ORACLE_ROWS_BY_TEST_FILE, under the test id they have always had."""
+
 from __future__ import annotations
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
-
-from etl_addresses_spark.plans.relational4 import QUERIES4
+from conftest import ORACLE_ROWS_BY_TEST_FILE, assert_oracle
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES4))
+@pytest.mark.parametrize("name", ORACLE_ROWS_BY_TEST_FILE["test_relational4"])
 def test_relational4_oracle(name, spark, ddb):
-    fn, sql = QUERIES4[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)

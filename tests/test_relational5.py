@@ -1,12 +1,12 @@
+"""Oracle checks for the plan-catalogue rows listed under this file's name
+in conftest.ORACLE_ROWS_BY_TEST_FILE, under the test id they have always had."""
+
 from __future__ import annotations
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
-
-from etl_addresses_spark.plans.relational5 import QUERIES5
+from conftest import ORACLE_ROWS_BY_TEST_FILE, assert_oracle
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES5))
+@pytest.mark.parametrize("name", ORACLE_ROWS_BY_TEST_FILE["test_relational5"])
 def test_relational5_oracle(name, spark, ddb):
-    fn, sql = QUERIES5[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)

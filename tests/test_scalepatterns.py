@@ -1,13 +1,13 @@
 from __future__ import annotations
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
+from conftest import SF_ORACLE, assert_frames_match, assert_oracle
 
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.operators import scalepatterns
 from etl_addresses_spark.operators.graph import TRIANGLE_COUNT_SQL, triangle_count
 from etl_addresses_spark.operators.scalepatterns import (
-    QUERIES_SCALE,
     _interleave_spark,
     anomaly_zscore_events,
     bloom_prune_join,
@@ -17,10 +17,9 @@ from etl_addresses_spark.operators.scalepatterns import (
 from etl_addresses_spark.sources.tables import load_table
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES_SCALE))
+@pytest.mark.parametrize("name", sorted(scalepatterns.QUERIES))
 def test_scalepatterns_oracle(name, spark, ddb):
-    fn, sql = QUERIES_SCALE[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)
 
 
 def test_triangle_count_oracle(spark, ddb):

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 from conftest import SF_ORACLE
 
+from pyspark.sql import functions as F
+
 from etl_addresses_spark.operators import sketches
 
 
@@ -114,3 +116,93 @@ def test_stats_correlation_double_agrees_and_is_order_insensitive(spark):
     finally:
         tables.load_table = tables_load
     assert dbl7 == dbl
+
+
+def test_corr_cents_quantization_and_limb_recombination_exact(spark):
+    """The limb-sum rewrite is exact iff (a) round(x*100) recovers
+    integer cents exactly and (b) the 3-limb int64 split recombines to
+    the exact integer moment.  Check both directly on the fixture."""
+    from etl_addresses_spark.operators.sketches import (
+        _CORR_COLS,
+        limb_recomb,
+        limb_sum_aggs,
+    )
+    from etl_addresses_spark.sources.tables import load_table
+
+    li = load_table(spark, SF_ORACLE, "lineitem")
+
+    # (a) quantization exactness: |x*100 - round(x*100)| far below 0.5
+    errs = li.select(
+        *[
+            F.max(F.abs(F.col(c) * 100 - F.round(F.col(c) * 100))).alias(c)
+            for c in _CORR_COLS
+        ]
+    ).collect()[0]
+    for c in _CORR_COLS:
+        assert errs[c] < 1e-6, f"{c}: cents quantization not exact ({errs[c]})"
+
+    # (b) limb recombination == exact decimal(38,0) integer sum, for the
+    # worst-magnitude product (extendedprice^2, ~2^47 per row)
+    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    prod = cents * cents
+    m = li.agg(
+        *limb_sum_aggs(prod, "q"),
+        F.sum(prod.cast("decimal(38,0)")).alias("exact"),
+    )
+    row = m.selectExpr(f"{limb_recomb('q')} as recombined", "exact").collect()[0]
+    assert row.recombined == float(row.exact)
+
+
+def test_first_moment_limb_recombination_exact(spark):
+    """limb_recomb over limb sums of the RAW cents (first moment) must
+    equal the plain exact sum cast to double on the fixture."""
+    from etl_addresses_spark.operators.sketches import (
+        limb_recomb,
+        limb_sum_aggs,
+    )
+    from etl_addresses_spark.sources.tables import load_table
+
+    li = load_table(spark, SF_ORACLE, "lineitem")
+    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    m = li.agg(
+        *limb_sum_aggs(cents, "s"),
+        F.sum(cents.cast("decimal(38,0)")).alias("exact"),
+    )
+    row = m.selectExpr(f"{limb_recomb('s')} as recombined", "exact").collect()[0]
+    assert row.recombined == float(row.exact)
+
+
+def test_limb_sum_envelope_bound_analytic():
+    """Every limb partial is <= _LIMB_MASK per row, so int64 holds any
+    limb sum to LIMB_SUM_MAX_ROWS rows — the documented envelope.  The
+    bound must cover 100 TB-class lineitem (~6e11 rows) with margin,
+    and be tight: one more row at max limb value must overflow."""
+    from etl_addresses_spark.operators.sketches import (
+        _LIMB_MASK,
+        LIMB_SUM_MAX_ROWS,
+    )
+
+    assert LIMB_SUM_MAX_ROWS * _LIMB_MASK <= 2**63 - 1 + _LIMB_MASK
+    assert LIMB_SUM_MAX_ROWS * _LIMB_MASK >= 2**63 - _LIMB_MASK
+    assert LIMB_SUM_MAX_ROWS > 4e12  # ~7x margin over 100 TB lineitem
+
+
+def test_limb_guard_raises_past_envelope(spark):
+    """The assert_true guard must publish the value unchanged inside
+    the envelope and RAISE (not wrap) past it."""
+    import pytest
+
+    from etl_addresses_spark.operators.sketches import (
+        LIMB_SUM_MAX_ROWS,
+        limb_guard,
+    )
+
+    ok = spark.createDataFrame([(100,)], "n long").selectExpr(
+        limb_guard("1.5d") + " as v"
+    )
+    assert ok.collect()[0].v == 1.5
+    bad = spark.createDataFrame(
+        [(LIMB_SUM_MAX_ROWS + 1,)], "n long"
+    ).selectExpr(limb_guard("1.5d") + " as v")
+    with pytest.raises(Exception, match="limb sums exact only"):
+        bad.collect()

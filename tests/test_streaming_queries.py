@@ -1,15 +1,14 @@
 from __future__ import annotations
 
 import pytest
-from conftest import SF_ORACLE, assert_frames_match
+from conftest import SF_ORACLE, assert_oracle
 
-from etl_addresses_spark.plans.streaming_queries import STREAMING_QUERIES
+from etl_addresses_spark.plans import streaming_queries
 
 
-@pytest.mark.parametrize("name", sorted(STREAMING_QUERIES))
+@pytest.mark.parametrize("name", sorted(streaming_queries.QUERIES))
 def test_streaming_oracle(name, spark, ddb):
-    fn, sql = STREAMING_QUERIES[name]
-    assert_frames_match(fn(spark, SF_ORACLE), ddb.sql(sql))
+    assert_oracle(name, spark, ddb)
 
 
 def test_left_join_nulls_only_behind_watermark(spark):

@@ -2,7 +2,7 @@
 import sys, os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from etl_addresses_spark.session import get_spark
-from etl_addresses_spark.plans import flagship, relational
+from etl_addresses_spark.plans import flagship, tpch
 
 def plan(df):
     s = df._jdf.queryExecution().executedPlan().toString()
@@ -21,12 +21,12 @@ the projection above it, array_min(filter(transform(filter(segs,
 bbox AND temporal), trig), distance < 25)) — the rounded cross-track
 trig runs only on the inner filter's survivors."""),
         ("TPC-H Q1 shape (agg_pricing_summary)",
-         plan(relational.agg_pricing_summary(spark, SF)), """
+         plan(tpch.agg_pricing_summary(spark, SF)), """
 What to look for: PushedFilters on l_shipdate reaching the parquet
 scan; ReadSchema pruned to the 7 needed columns; two-phase
 HashAggregate (partial then final) over 4 groups."""),
         ("Global top-k (sort_limit_global)",
-         plan(relational.sort_limit_global(spark, SF)), """
+         plan(tpch.sort_limit_global(spark, SF)), """
 What to look for: TakeOrderedAndProject — per-partition heaps + driver
 merge, no global sort of 100 TB."""),
     ]

@@ -28,10 +28,16 @@ from pyspark.sql import functions as F
 
 from bench import timed_noop
 from etl_addresses_spark.functions.hashing import KNUTH
-from etl_addresses_spark.plans.relational3 import (
+from etl_addresses_spark.operators.fuzzy import (
+    TITLE_MAX_DIST,
+    TITLE_WORDS,
+    _length_histogram,
+    choose_fuzzy_tier,
+    fuzzy_match_auto_for,
     fuzzy_match_blocked_for,
     fuzzy_match_passjoin_for,
     passjoin_candidates,
+    segment_collision_estimate,
 )
 from etl_addresses_spark.session import get_spark
 
@@ -111,10 +117,6 @@ def titles_main() -> None:
 
         python tools/stress_fuzzy.py --titles [sf_dir]
     """
-    from etl_addresses_spark.plans.relational7 import (
-        TITLE_MAX_DIST,
-        TITLE_WORDS,
-    )
     from etl_addresses_spark.sources.tables import load_table
 
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
@@ -171,13 +173,6 @@ def auto_main() -> None:
         python tools/stress_fuzzy.py --auto [n_base [d]]
     """
     import json
-
-    from etl_addresses_spark.plans.relational3 import (
-        _length_histogram,
-        choose_fuzzy_tier,
-        fuzzy_match_auto_for,
-        segment_collision_estimate,
-    )
 
     n_base = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
     d = int(sys.argv[3]) if len(sys.argv) > 3 else 2

@@ -9,10 +9,11 @@ absolute difference, and the max ulp distance — the evidence behind
 SCALE.md's strict-parity residue table.
 """
 import math
+import os
 import struct
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as mod

@@ -18,9 +18,10 @@ depends on the fetch path.
 Usage: python tools/type_audit.py [--spark]  (oracle-only by default;
 --spark also schemas every Spark query, which needs a JVM).
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as mod
