@@ -77,11 +77,11 @@ _PLAN_BYTES_SANE_MAX = 1 << 50
 def plan_size_bytes(df) -> int:
     """Catalyst's optimized-plan size estimate for a DataFrame — file
     statistics for scans, propagated estimates downstream.  No job is
-    run.  Returns 0 when stats are unusable."""
-    try:
-        n = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 0
+    run.  Returns 0 when the estimate is outside the sane range; a
+    failing stats call (internal-API drift) raises rather than
+    silently shrinking every width derived from it to
+    parallelism-only."""
+    n = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     return n if 0 < n < _PLAN_BYTES_SANE_MAX else 0
 
 

@@ -609,14 +609,14 @@ def ann_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifacts are plain parquet: a serving layer shares them across
     sessions/clusters with no custom format (a production deployment
     would write them to a durable warehouse path; this certification
-    row keeps them EPHEMERAL — session-unique temp dir, removed once
-    the serve read has materialized — so concurrent sessions on the
-    same fixture can never collide and sweeps leave no /tmp residue,
-    the r12 verdict/advice hygiene items)."""
-    import hashlib
+    row keeps them EPHEMERAL — a per-application `scratch_dir`,
+    removed once the serve read has materialized — so concurrent
+    sessions on the same fixture can never collide and sweeps leave no
+    residue, the r12 verdict/advice hygiene items)."""
     import os
     import shutil
-    import tempfile
+
+    from etl_addresses_spark.session import scratch_dir
 
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
@@ -629,15 +629,7 @@ def ann_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_cents = pq_codebook(e)
     codes = pq_encode(e, pq_cents, n_hint=n)
 
-    # applicationId is unique per SparkSession (no cross-session race);
-    # the sf_dir hash separates datasets whose paths share a basename
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_ivfpq_index_"
-        + spark.sparkContext.applicationId
-        + "_"
-        + hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12],
-    )
+    base = scratch_dir("ivfpq_index", sf_dir)
     artifacts = {
         "cents": cents,
         "lists": lists,

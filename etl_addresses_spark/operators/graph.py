@@ -232,6 +232,97 @@ _ORD_BASE = 1_000_000_000
 ADJ_BROADCAST_ROWS = 2_000_000
 
 
+# The co-purchase ("parts bought together") graph that triangle_count,
+# graph_communities_labelprop and graph_bfs_distances run over, and its
+# DuckDB replica: one undirected edge (u < v) per pair of distinct parts
+# that share an order.
+_EDGES_SQL = """
+WITH li AS (
+  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
+),
+edges AS (
+  SELECT DISTINCT a.p AS u, b.p AS v
+  FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p
+),"""
+
+# Both directions of every edge as (v_, w) — the neighbor list of the
+# iterative rows.
+_NBR_SQL = _EDGES_SQL + """
+nbr AS MATERIALIZED (
+  SELECT u AS v_, v AS w FROM edges
+  UNION ALL
+  SELECT v, u FROM edges
+),"""
+
+
+def _lineitem_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from etl_addresses_spark.sources.tables import load_table
+
+    return load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
+    )
+
+
+def _co_purchase_edges(li: DataFrame) -> DataFrame:
+    """Distinct undirected edges (u, v), u < v, from an (ok, p) lineitem
+    projection.
+
+    Per-order pair generation: ONE groupBy shuffle collects each
+    order's (small, k<=7) part set, and the k*(k-1)/2 pairs are
+    generated locally with higher-order functions — replacing the
+    earlier lineitem self-join, which shuffled the fact table twice
+    and built the same pairs through a join (measured 11.3 s -> see
+    SCALE.md; pair count is identical).  At 100 TB the per-key state
+    is one order's part set — bounded by order size, not corpus.
+    No (ok, p) pre-distinct: collect_set dedupes per order already,
+    and the r14 plan audit showed the distinct() cost a SECOND full
+    exchange of the scan for zero row reduction at the groupBy
+    (guide §2.4 — "a distinct on data that is already unique").
+    NOTE (r11 width audit): an explicit repartition+dropDuplicates
+    form was tried on the pair dedup and REVERTED — unlike the
+    near-unique shingle keys in dedup._shingles, co-purchase pairs
+    repeat across orders, so the map-side partial aggregation that
+    distinct() plans is real work saved (10x A/B: labelprop 27.2 s
+    with the explicit form vs 22.0 s with distinct(); triangle
+    14.5 vs 13.8).  Under the session default AQE never coalesces
+    these exchanges below cluster parallelism."""
+    per_order = li.groupBy("ok").agg(F.sort_array(F.collect_set("p")).alias("ps"))
+    pair_expr = F.expr(
+        "explode(flatten(transform(ps, (x, i) -> "
+        "transform(slice(ps, i + 2, size(ps) - i - 1), "
+        "y -> struct(x AS u, y AS v)))))"
+    )
+    return (
+        per_order.select(pair_expr.alias("e"))
+        .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
+        .distinct()
+    )
+
+
+def _co_purchase_neighbors(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
+    """The undirected neighbor list (v_, w) — both directions of every
+    co-purchase edge — repartitioned on the iterative loop's probe
+    `key` and cached, materialized once for every round.
+
+    The cached neighbor table gets an explicit width: it feeds every
+    loop round's probe side and must not be byte-coalesced under any
+    AQE config.  Width comes from the PRE-distinct scan projection —
+    the only frame here whose sizeInBytes is file statistics; the
+    distinct() output carries a propagated estimate, which
+    cpu_partitions' scan-grade contract forbids (r11 advice; the
+    72GB/2MB pagerank incident is what the contract exists to
+    prevent).  Scan bytes upper-bound the deduped bytes, so the width
+    can only be conservative-wide, never starved."""
+    li = _lineitem_parts(spark, sf_dir)
+    edges = _co_purchase_edges(li)
+    return (
+        edges.select(F.col("u").alias("v_"), F.col("v").alias("w"))
+        .unionAll(edges.select(F.col("v").alias("v_"), F.col("u").alias("w")))
+        .repartition(cpu_partitions(li), key)
+        .cache()
+    )
+
+
 def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count triangles in the parts-bought-together graph with the
     degree-ordered orientation + adjacency-intersection ("compact
@@ -258,44 +349,9 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orientation bound.  Output is one audit row (edges, oriented
     wedges, triangles, closure rate).
     """
-    from etl_addresses_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
-    )
-    # Per-order pair generation: ONE groupBy shuffle collects each
-    # order's (small, k<=7) part set, and the k*(k-1)/2 pairs are
-    # generated locally with higher-order functions — replacing the
-    # earlier lineitem self-join, which shuffled the fact table twice
-    # and built the same pairs through a join (measured 11.3 s -> see
-    # SCALE.md; pair count is identical).  At 100 TB the per-key state
-    # is one order's part set — bounded by order size, not corpus.
-    # No (ok, p) pre-distinct: collect_set dedupes per order already,
-    # and the r14 plan audit showed the distinct() cost a SECOND full
-    # exchange of the scan for zero row reduction at the groupBy
-    # (guide §2.4 — "a distinct on data that is already unique").
     # edges feeds the degree count twice (u side, v side) and the
     # orientation join once; cache so the build runs once.
-    # NOTE (r11 width audit): an explicit repartition+dropDuplicates
-    # form was tried on the pair dedup and REVERTED — unlike the
-    # near-unique shingle keys in dedup._shingles, co-purchase pairs
-    # repeat across orders, so the map-side partial aggregation that
-    # distinct() plans is real work saved (10x A/B: labelprop 27.2 s
-    # with the explicit form vs 22.0 s with distinct(); triangle
-    # 14.5 vs 13.8).  Under the session default AQE never coalesces
-    # these exchanges below cluster parallelism.
-    per_order = li.groupBy("ok").agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    pair_expr = F.expr(
-        "explode(flatten(transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps) - i - 1), "
-        "y -> struct(x AS u, y AS v)))))"
-    )
-    edges = (
-        per_order.select(pair_expr.alias("e"))
-        .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-        .distinct()
-        .cache()
-    )
+    edges = _co_purchase_edges(_lineitem_parts(spark, sf_dir)).cache()
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -390,14 +446,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TRIANGLE_COUNT_SQL = f"""
-WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-),
-edges AS (
-  SELECT DISTINCT a.p AS u, b.p AS v
-  FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p
-),
+TRIANGLE_COUNT_SQL = _EDGES_SQL + f"""
 deg AS (
   SELECT node, count(*) * {_ORD_BASE} + node AS ord
   FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
@@ -465,47 +514,7 @@ def graph_communities_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the DuckDB oracle (`labelprop_oracle_sql`), the same
     technique as pagerank/kmeans/IVF-Lloyd — integer labels and
     integer counts, so the check is exact, no float residue at all."""
-    from etl_addresses_spark.sources.tables import load_table
-
-    li_scan = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
-    )
-    # No (ok, p) pre-distinct: collect_set dedupes per order already —
-    # see the triangle_count edge-build note (a plan NO-OP — Catalyst's
-    # RemoveRedundantAggregates already elided the lower aggregate;
-    # the r14 plan audit showed before == after, so this is a clarity
-    # fix, not a saved exchange).
-    li = li_scan
-    # pair dedup stays distinct() — see the triangle_count note (the
-    # explicit repartition+dropDuplicates form lost its partial
-    # aggregation and measured slower at 10x).  The cached neighbor
-    # table DOES get an explicit width: it feeds every loop round's
-    # probe side and must not be byte-coalesced under any AQE config.
-    # Width comes from the PRE-distinct scan projection — the only
-    # frame here whose sizeInBytes is file statistics; the distinct()
-    # output carries a propagated estimate, which cpu_partitions'
-    # scan-grade contract forbids (r11 advice; the 72GB/2MB pagerank
-    # incident is what the contract exists to prevent).  Scan bytes
-    # upper-bound the deduped bytes, so the width can only be
-    # conservative-wide, never starved.
-    n_cpu = cpu_partitions(li_scan)
-    per_order = li.groupBy("ok").agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    pair_expr = F.expr(
-        "explode(flatten(transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps) - i - 1), "
-        "y -> struct(x AS u, y AS v)))))"
-    )
-    edges = (
-        per_order.select(pair_expr.alias("e"))
-        .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-        .distinct()
-    )
-    nbr = (
-        edges.select(F.col("u").alias("v_"), F.col("v").alias("w"))
-        .unionAll(edges.select(F.col("v").alias("v_"), F.col("u").alias("w")))
-        .repartition(n_cpu, "w")
-        .cache()
-    )
+    nbr = _co_purchase_neighbors(spark, sf_dir, "w")
     labels = nbr.select(F.col("v_").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
     )
@@ -564,19 +573,7 @@ def labelprop_oracle_sql(iters: int = LPA_ITERS) -> str:
     """DuckDB replica: the LPA loop unrolled into chained MATERIALIZED
     CTEs (l0..l{iters}), argmax via row_number with the same
     (count DESC, label ASC) tie-break."""
-    sql = """
-WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-),
-edges AS (
-  SELECT DISTINCT a.p AS u, b.p AS v
-  FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p
-),
-nbr AS MATERIALIZED (
-  SELECT u AS v_, v AS w FROM edges
-  UNION ALL
-  SELECT v, u FROM edges
-),
+    sql = _NBR_SQL + """
 l0 AS MATERIALIZED (
   SELECT DISTINCT v_ AS node, v_ AS lab FROM nbr
 )"""
@@ -625,47 +622,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     every node within {BFS_HOPS} hops — two independent algorithms, one
     integer-exact hash-checked answer (the dedup_clusters /
     dedup_clusters_star pattern)."""
-    from etl_addresses_spark.sources.tables import load_table
-
-    li_scan = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
-    )
-    # No (ok, p) pre-distinct: collect_set dedupes per order already —
-    # see the triangle_count edge-build note (a plan NO-OP — Catalyst's
-    # RemoveRedundantAggregates already elided the lower aggregate;
-    # the r14 plan audit showed before == after, so this is a clarity
-    # fix, not a saved exchange).
-    li = li_scan
-    # pair dedup stays distinct() — see the triangle_count note (the
-    # explicit repartition+dropDuplicates form lost its partial
-    # aggregation and measured slower at 10x).  The cached neighbor
-    # table DOES get an explicit width: it feeds every loop round's
-    # probe side and must not be byte-coalesced under any AQE config.
-    # Width comes from the PRE-distinct scan projection — the only
-    # frame here whose sizeInBytes is file statistics; the distinct()
-    # output carries a propagated estimate, which cpu_partitions'
-    # scan-grade contract forbids (r11 advice; the 72GB/2MB pagerank
-    # incident is what the contract exists to prevent).  Scan bytes
-    # upper-bound the deduped bytes, so the width can only be
-    # conservative-wide, never starved.
-    n_cpu = cpu_partitions(li_scan)
-    per_order = li.groupBy("ok").agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    pair_expr = F.expr(
-        "explode(flatten(transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps) - i - 1), "
-        "y -> struct(x AS u, y AS v)))))"
-    )
-    edges = (
-        per_order.select(pair_expr.alias("e"))
-        .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-        .distinct()
-    )
-    nbr = (
-        edges.select(F.col("u").alias("v_"), F.col("v").alias("w"))
-        .unionAll(edges.select(F.col("v").alias("v_"), F.col("u").alias("w")))
-        .repartition(n_cpu, "v_")
-        .cache()
-    )
+    nbr = _co_purchase_neighbors(spark, sf_dir, "v_")
     seeds = (
         nbr.select(F.col("v_").alias("node"))
         .distinct()
@@ -722,19 +679,7 @@ def bfs_oracle_sql(seeds: int = BFS_SEEDS, hops: int = BFS_HOPS) -> str:
     """DuckDB replica of `graph_bfs_distances` by a DIFFERENT algorithm:
     bounded Bellman-Ford min-distance, unrolled into chained
     MATERIALIZED CTEs (b0..b{hops})."""
-    sql = f"""
-WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-),
-edges AS (
-  SELECT DISTINCT a.p AS u, b.p AS v
-  FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p
-),
-nbr AS MATERIALIZED (
-  SELECT u AS v_, v AS w FROM edges
-  UNION ALL
-  SELECT v, u FROM edges
-),
+    sql = _NBR_SQL + f"""
 b0 AS MATERIALIZED (
   SELECT node, 0 AS dist FROM (
     SELECT DISTINCT v_ AS node FROM nbr ORDER BY node LIMIT {seeds})

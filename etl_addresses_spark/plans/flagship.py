@@ -190,18 +190,10 @@ def reference_e2e_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference scan), the same shape the 100 TB pipeline would use for
     restartable step boundaries.
     """
-    import os
-    import tempfile
-
+    from etl_addresses_spark.session import scratch_dir
     from etl_addresses_spark.sources import ndjson
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "etl_addresses_spark_e2e",
-        # pid-discriminated: concurrent processes must not share sinks
-        str(os.getpid()),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir("e2e_ndjson", sf_dir)
     ndjson.write_ndjson(
         streets_df(spark, sf_dir),
         ndjson.objects_path(base, "nyc-streets", "transform"),

@@ -1,37 +1,65 @@
 """Structured Streaming queries as driver-checkable registry entries.
 
-Each wraps a streaming/event_stream.py operator: readStream over the
-events parquet, drain synchronously into a memory sink (availableNow),
-return the result as a batch DataFrame.  Because the drain processes
-all input while the watermark is still at its initial value, no rows
-are late, so the streamed result equals the batch semantics and can be
-oracle-checked in DuckDB like any other query.  Timestamps are emitted
-as formatted strings (timestamp-unit drift rule: like the batch event
-rows in plans/timeseries.py, never as raw timestamps).
+Each events-sourced row goes through one wrapper, `_stream_events`:
+readStream over the events parquet, the streaming/event_stream.py
+operator, a synchronous availableNow drain into a memory sink at a
+width sized from the events table, and the result as a batch
+DataFrame.  Because the drain processes all input while the watermark
+is still at its initial value, no rows are late, so the streamed
+result equals the batch semantics and can be oracle-checked in DuckDB
+like any other query.  Timestamps are emitted as formatted strings
+(timestamp-unit drift rule: like the batch event rows in
+plans/timeseries.py, never as raw timestamps).  The restart and CDC
+rows stage their own source files under `session.scratch_dir`.
 """
 
 from __future__ import annotations
+
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_addresses_spark.plans.timeseries import EVENTS_OHLC_SQL as _BATCH_OHLC_SQL
-from etl_addresses_spark.session import scoped_shuffle_partitions
+from etl_addresses_spark.session import scratch_dir
 from etl_addresses_spark.streaming import event_stream
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _DUCK_FMT = "%Y-%m-%d %H:%M:%S"
 
 
+def _stream_events(
+    spark: SparkSession,
+    sf_dir: str,
+    op: Callable[[DataFrame], DataFrame],
+    name: str,
+    mode: str = "complete",
+    width: int | None = None,
+) -> DataFrame:
+    """Stream the events table through `op` and drain it into the
+    memory table `name`, sized from that table
+    (`events_state_partitions`) unless `width` is given.  Timestamp
+    columns come back formatted as `_TS_FMT` strings."""
+    out = event_stream.run_to_memory(
+        op(event_stream.read_events_stream(spark, sf_dir)),
+        name,
+        mode,
+        width if width is not None else event_stream.events_state_partitions(sf_dir),
+    )
+    return out.select(
+        *[
+            F.date_format(c, _TS_FMT).alias(c) if t == "timestamp" else c
+            for c, t in out.dtypes
+        ]
+    )
+
+
 def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked streaming dedup (first arrival per key wins); only
     the key columns are emitted so the result is order-independent."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    out = event_stream.run_to_memory(
-        event_stream.dedup_stream(stream),
-        "q_stream_dedup",
-        mode="append",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
+    out = _stream_events(
+        spark, sf_dir, event_stream.dedup_stream, "q_stream_dedup", "append"
     )
     return out.select("user_id", "event_type")
 
@@ -43,18 +71,7 @@ SELECT DISTINCT user_id, event_type FROM events
 
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation, drained to batch."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    out = event_stream.run_to_memory(
-        event_stream.windowed_counts(stream),
-        "q_stream_win",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
-    )
-    return out.select(
-        F.date_format("window_start", _TS_FMT).alias("window_start"),
-        "event_type",
-        "n",
-        "sum_value",
-    )
+    return _stream_events(spark, sf_dir, event_stream.windowed_counts, "q_stream_win")
 
 
 STREAM_WINDOWED_SQL = f"""
@@ -73,18 +90,10 @@ def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked sliding-window aggregation (10-minute windows every
     5 minutes), drained to batch.  Each event contributes to exactly
     two overlapping windows."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    out = event_stream.run_to_memory(
-        event_stream.sliding_counts(stream),
-        "q_stream_slide",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
+    sliding = partial(
+        event_stream.windowed_counts, length="10 minutes", slide="5 minutes"
     )
-    return out.select(
-        F.date_format("window_start", _TS_FMT).alias("window_start"),
-        "event_type",
-        "n",
-        "sum_value",
-    )
+    return _stream_events(spark, sf_dir, sliding, "q_stream_slide")
 
 
 # The oracle materializes the two sliding starts per event explicitly:
@@ -111,20 +120,8 @@ GROUP BY 1, 2
 def stream_purchase_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (purchases to same-user views within
     the preceding 30 minutes), drained to batch."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    out = event_stream.run_to_memory(
-        event_stream.purchases_with_recent_views(stream),
-        "q_stream_ssj",
-        mode="append",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
-    )
-    return out.select(
-        "purchase_event_id",
-        "user_id",
-        F.date_format("purchase_ts", _TS_FMT).alias("purchase_ts"),
-        "view_event_id",
-        F.date_format("view_ts", _TS_FMT).alias("view_ts"),
-    )
+    join = partial(event_stream.purchase_view_join, how="inner")
+    return _stream_events(spark, sf_dir, join, "q_stream_ssj", "append")
 
 
 STREAM_SSJ_SQL = f"""
@@ -155,20 +152,8 @@ def stream_purchase_view_left_join(spark: SparkSession, sf_dir: str) -> DataFram
     10 min), each max computed only over that side's filtered rows —
     modelling it as max(ts) over ALL events minus 40 min was only
     green by data coincidence (round-3 ADVICE.md, fixed round 4)."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    out = event_stream.run_to_memory(
-        event_stream.purchases_with_optional_views(stream),
-        "q_stream_ssj_left",
-        mode="append",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
-    )
-    return out.select(
-        "purchase_event_id",
-        "user_id",
-        F.date_format("purchase_ts", _TS_FMT).alias("purchase_ts"),
-        "view_event_id",
-        F.date_format("view_ts", _TS_FMT).alias("view_ts"),
-    )
+    join = partial(event_stream.purchase_view_join, how="leftOuter")
+    return _stream_events(spark, sf_dir, join, "q_stream_ssj_left", "append")
 
 
 STREAM_SSJ_LEFT_SQL = f"""
@@ -221,63 +206,12 @@ def stream_purchase_view_full_join(spark: SparkSession, sf_dir: str) -> DataFram
     pinned rule view_ts + 30min < wm (strict), alongside the left
     join's purchase rule purchase_ts < wm; wm is the min-over-inputs
     global watermark."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    out = event_stream.run_to_memory(
-        event_stream.purchases_with_views_full_outer(stream),
-        "q_stream_ssj_full",
-        mode="append",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
-    )
-    return out.select(
-        "purchase_event_id",
-        "user_id",
-        F.date_format("purchase_ts", _TS_FMT).alias("purchase_ts"),
-        "view_event_id",
-        F.date_format("view_ts", _TS_FMT).alias("view_ts"),
-    )
+    join = partial(event_stream.purchase_view_join, how="fullOuter")
+    return _stream_events(spark, sf_dir, join, "q_stream_ssj_full", "append")
 
 
-STREAM_SSJ_FULL_SQL = f"""
-WITH mx AS (
-  SELECT least(
-    date_trunc('milliseconds',
-               max(CASE WHEN event_type = 'view'
-                        THEN CAST(ts AS TIMESTAMP) END))
-      - INTERVAL 40 MINUTES,
-    date_trunc('milliseconds',
-               max(CASE WHEN event_type = 'purchase'
-                        THEN CAST(ts AS TIMESTAMP) END))
-      - INTERVAL 10 MINUTES) AS wm
-  FROM events
-),
-p AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-  FROM events WHERE event_type = 'purchase'
-),
-v AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-  FROM events WHERE event_type = 'view'
-)
-SELECT
-  p.event_id AS purchase_event_id,
-  p.user_id AS user_id,
-  strftime(p.ts, '{_DUCK_FMT}') AS purchase_ts,
-  v.event_id AS view_event_id,
-  strftime(v.ts, '{_DUCK_FMT}') AS view_ts
-FROM p
-JOIN v ON v.user_id = p.user_id
-      AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 30 MINUTES
-UNION ALL
-SELECT
-  p.event_id, p.user_id, strftime(p.ts, '{_DUCK_FMT}'),
-  CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR)
-FROM p
-WHERE NOT EXISTS (
-    SELECT 1 FROM v
-    WHERE v.user_id = p.user_id
-      AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 30 MINUTES)
-  AND p.ts < (SELECT wm FROM mx)
-UNION ALL
+# The left join's rows plus the view-side null rows.
+STREAM_SSJ_FULL_SQL = STREAM_SSJ_LEFT_SQL + f"""UNION ALL
 SELECT
   CAST(NULL AS BIGINT), v.user_id, CAST(NULL AS VARCHAR),
   v.event_id, strftime(v.ts, '{_DUCK_FMT}')
@@ -299,32 +233,29 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape for dimension lookups on an unbounded stream."""
     from etl_addresses_spark.sources.tables import load_table
 
-    stream = event_stream.read_events_stream(spark, sf_dir)
     customers = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     n_cust = customers.count()
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "event_id",
-        "user_id",
-        (F.col("user_id") % n_cust + 1).alias("cust_id"),
-        "value",
-    )
-    enriched = purchases.join(
-        F.broadcast(customers), purchases.cust_id == customers.c_custkey
-    )
-    agg = enriched.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_purchases"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-            "sum_value"
-        ),
-    )
-    return event_stream.run_to_memory(
-        agg,
-        "q_stream_enrich",
-        mode="complete",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
-    )
+
+    def enrich(stream: DataFrame) -> DataFrame:
+        purchases = stream.filter(F.col("event_type") == "purchase").select(
+            "event_id",
+            "user_id",
+            (F.col("user_id") % n_cust + 1).alias("cust_id"),
+            "value",
+        )
+        enriched = purchases.join(
+            F.broadcast(customers), purchases.cust_id == customers.c_custkey
+        )
+        return enriched.groupBy("c_mktsegment").agg(
+            F.count(F.lit(1)).alias("n_purchases"),
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
+                "sum_value"
+            ),
+        )
+
+    return _stream_events(spark, sf_dir, enrich, "q_stream_enrich")
 
 
 # The oracle needs the same customer-count constant; it is the table's
@@ -347,18 +278,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_ts + gap starts a new session (the window is
     [start, last_ts + gap)), which is why the oracle's new-session
     predicate is >=, unlike the batch sessionizer's > convention."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    out = event_stream.run_to_memory(
-        event_stream.session_windows(stream),
-        "q_stream_sess",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
-    )
-    return out.select(
-        "user_id",
-        F.date_format("session_start", _TS_FMT).alias("session_start"),
-        F.date_format("session_end", _TS_FMT).alias("session_end"),
-        "n_events",
-    )
+    return _stream_events(spark, sf_dir, event_stream.session_windows, "q_stream_sess")
 
 
 STREAM_SESSION_SQL = f"""
@@ -393,7 +313,6 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final state regardless of how the file source batched the
     input — making the result equal to the batch aggregate and
     oracle-checkable."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
     # floor at the cluster parallelism, not just source volume: this
     # operator's cost is PYTHON work (one Arrow-batched pandas call
     # per user group), so fewer partitions idle workers — measured
@@ -404,11 +323,13 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_stream.events_state_partitions(sf_dir),
         spark.sparkContext.defaultParallelism,
     )
-    out = event_stream.run_to_memory(
-        event_stream.stateful_user_totals(stream),
+    out = _stream_events(
+        spark,
+        sf_dir,
+        event_stream.stateful_user_totals,
         "q_stream_state",
-        mode="update",
-        shuffle_partitions=parts,
+        "update",
+        width=parts,
     )
     return out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -433,12 +354,8 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     minutes, the empirically-pinned emission predicate), proving the
     stream/batch twin property for picked-value aggregates on exactly
     the emitted set."""
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    return event_stream.run_to_memory(
-        event_stream.ohlc_bars(stream),
-        "q_stream_ohlc",
-        mode="append",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
+    return _stream_events(
+        spark, sf_dir, event_stream.ohlc_bars, "q_stream_ohlc", "append"
     )
 
 
@@ -489,16 +406,7 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_addresses_spark.sources.tables import load_table
 
-    # pid-discriminated scratch: a fixed path raced when two processes
-    # (e.g. bench + a concurrency sweep) ran the same fixture at once —
-    # both rmtree'd and streamed over the SAME checkpoint dir (r5
-    # advice).  Within one process reruns still reuse + reset the dir.
-    base = os.path.join(
-        "/tmp",
-        f"spark_graft_restart_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{os.getpid()}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("stream_restart", sf_dir)
     src_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
     ckpt_dir = os.path.join(base, "ckpt")
@@ -538,8 +446,7 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize the sink read (distinct-keys-sized) BEFORE the
         # finally removes the files it scans — the r13 verdict hygiene
-        # item, same pattern as clustering.ann_index_persist_serve;
-        # start-of-run rmtree alone left every run's scratch in /tmp
+        # item, same pattern as clustering.ann_index_persist_serve
         return (
             spark.read.parquet(out_dir)
             .select("user_id", "event_type")
@@ -568,24 +475,17 @@ def stream_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically on event_type for determinism."""
     from pyspark.sql import Window as W
 
-    stream = event_stream.read_events_stream(spark, sf_dir)
-    counts = event_stream.run_to_memory(
-        event_stream.windowed_counts(stream),
-        "q_stream_topk",
-        shuffle_partitions=event_stream.events_state_partitions(sf_dir),
+    counts = _stream_events(
+        spark, sf_dir, event_stream.windowed_counts, "q_stream_topk"
     )
+    # window_start is already its formatted string, one per window
     w = W.partitionBy("window_start").orderBy(
         F.desc("n"), F.asc("event_type")
     )
     return (
         counts.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
-        .select(
-            F.date_format("window_start", _TS_FMT).alias("window_start"),
-            "event_type",
-            "n",
-            "rnk",
-        )
+        .select("window_start", "event_type", "n", "rnk")
     )
 
 
@@ -626,16 +526,9 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each merge shuffles (state ∪ batch) once on the key via
     the min(struct)-style keep-latest aggregation; state size is
     O(live keys), independent of change-log length."""
-    import os
     import shutil
 
-    # pid-discriminated scratch (see stream_restart_exactly_once)
-    base = os.path.join(
-        "/tmp",
-        f"spark_graft_cdc_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{os.getpid()}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("stream_cdc", sf_dir)
     try:
         return _cdc_upsert_run(spark, sf_dir, base)
     finally:
@@ -715,17 +608,12 @@ def _cdc_upsert_run(
     # no stateful operator here, but each foreachBatch merge is a batch
     # groupBy whose shuffle should match the (tiny) CDC feed, not the
     # session default
-    with scoped_shuffle_partitions(spark, event_stream.state_partitions_for(src)):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    event_stream.drain(
+        stream.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", os.path.join(base, "ckpt")
+        ),
+        event_stream.state_partitions_for(src),
+    )
     final = spark.read.parquet(state_paths[turn["i"] % 2])
     # materialize (live-keys-sized, two narrow columns) before the
     # caller's finally deletes the state files this scan reads

@@ -6,6 +6,11 @@ AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 UTC session timezone (oracle comparison against DuckDB's UTC-naive
 timestamps), Arrow enabled for the Pandas-UDF slow path, no web UI.
 Join-strategy and coalescing preferences stay at Spark's defaults.
+Python workers import the package from this checkout, whatever the
+process's working directory.
+
+Rows that stage files put them under `scratch_dir`, which lives in the
+application's own SparkFiles root.
 
 Environment: SPARK_GRAFT_CPUS (local[N], default 32),
 SPARK_GRAFT_SHUFFLE_PARTITIONS (default: the CPU count) and
@@ -14,9 +19,13 @@ SPARK_GRAFT_DRIVER_MEM (default 48g).
 
 from __future__ import annotations
 
+import hashlib
 import os
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
+
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "etl_addresses_spark") -> SparkSession:
@@ -43,8 +52,28 @@ def get_spark(app_name: str = "etl_addresses_spark") -> SparkSession:
         # events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as raw nanos and normalize in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the Python workers of the UDF rows import etl_addresses_spark;
+        # Spark merges this with its own and the process's PYTHONPATH
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT)
     )
     return builder.getOrCreate()
+
+
+def scratch_dir(name: str, sf_dir: str | None = None) -> str:
+    """Scratch directory for a row that stages files: `name` under the
+    running application's SparkFiles root, plus one subdirectory per
+    dataset (the sf dir's leaf name and a hash of its absolute path, so
+    datasets sharing a leaf name cannot collide).  The root is unique
+    per application and lives under SPARK_LOCAL_DIRS, so concurrent
+    sessions never share a path, and Spark deletes it when the context
+    stops or the JVM exits.  Rows whose result is materialized (eager
+    localCheckpoint) delete their directory as soon as they return."""
+    path = os.path.join(SparkFiles.getRootDirectory(), "scratch", name)
+    if sf_dir is None:
+        return path
+    full = os.path.abspath(sf_dir)
+    tag = os.path.basename(full) + "_" + hashlib.sha1(full.encode()).hexdigest()[:12]
+    return os.path.join(path, tag)
 
 
 class scoped_shuffle_partitions:
@@ -54,16 +83,18 @@ class scoped_shuffle_partitions:
     while the scoped plan is CREATED/STARTED; the session default is
     restored for whatever runs next.  n=None is a no-op.
 
-    SINGLE-THREADED-DRIVER assumption (r10 advice): the override
-    mutates the session-global conf, so any query PLANNED concurrently
-    on the same SparkSession (parallel driver threads, a streaming
-    query started inside another scope) silently inherits the scoped
-    width, and nested scopes restore correctly only in LIFO order.
-    Every caller in this repo plans queries from one driver thread
-    (the harness contract); a multi-threaded driver would need
-    per-query overrides (e.g. a writeStream option) instead.  Note
-    that EXECUTION may overlap freely — the width is baked into the
-    physical plan at creation, which is all the scope protects."""
+    SINGLE-THREADED-DRIVER rule (r10 advice): the override mutates
+    the session-global conf, so any query PLANNED concurrently on the
+    same SparkSession (parallel driver threads, a streaming query
+    started inside another scope) silently inherits the scoped width.
+    Nested scopes must exit in LIFO order; `__exit__` raises if the
+    conf no longer holds the width this scope set, which is what
+    interleaved scopes leave behind.  Every caller in this repo plans
+    queries from one driver thread (the harness contract); a
+    multi-threaded driver would need per-query overrides (e.g. a
+    writeStream option) instead.  Note that EXECUTION may overlap
+    freely — the width is baked into the physical plan at creation,
+    which is all the scope protects."""
 
     _KEY = "spark.sql.shuffle.partitions"
     # A scoped width is a COUNT-DERIVED decision (loop state rows,
@@ -88,6 +119,13 @@ class scoped_shuffle_partitions:
 
     def __exit__(self, *exc):
         if self._n is not None:
+            now = self._spark.conf.get(self._KEY)
+            if now != str(self._n):
+                raise RuntimeError(
+                    f"scoped_shuffle_partitions: {self._KEY} is {now} at"
+                    f" exit, not the {self._n} this scope set; scopes"
+                    " must nest in LIFO order on one driver thread"
+                )
             self._spark.conf.set(self._KEY, self._old)
             self._spark.conf.set(self._KEY_PF, self._old_pf)
         return False

@@ -1,13 +1,14 @@
 """Bucketed-table support: co-located joins without a shuffle.
 
 At 100 TB the dominant cost of fact-fact joins (lineitem ⋈ orders) is
-the shuffle.  Writing both tables bucketed by the join key into the
-warehouse lets every subsequent join/aggregation on that key run
-shuffle-free: Spark matches bucket files 1:1 across tables.
+the shuffle.  Writing both tables bucketed by the join key lets every
+subsequent join/aggregation on that key run shuffle-free: Spark matches
+bucket files 1:1 across tables.
 
-`bucketize` materializes parquet tables bucketed+sorted by key;
-`bucketed_join` reads them back and joins — tests assert the physical
-plan contains NO Exchange on the join path.
+`bucketize` materializes parquet tables bucketed+sorted by key (files
+under the application's `session.scratch_dir`, catalog entry in the
+session); `bucketed_join` reads them back and joins — tests assert the
+physical plan contains NO Exchange on the join path.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.session import scratch_dir
 from etl_addresses_spark.sources.tables import load_table
 
 
@@ -26,24 +28,26 @@ def bucketize(
     key: str,
     n_buckets: int = 8,
 ) -> None:
-    """Write df as a bucketed, sorted managed table (overwriting).
+    """Write df as a bucketed, sorted table (overwriting).
 
-    The catalog is in-memory but managed-table LOCATIONS persist in
-    the warehouse dir across sessions, and saveAsTable refuses a
-    location it didn't create — so drop the catalog entry AND clear
-    any orphaned location first (idempotent across fresh sessions)."""
+    The files go to the application's scratch dir rather than the
+    shared `spark.sql.warehouse.dir` (by default `spark-warehouse/` in
+    the working directory), where two sessions started from one
+    directory deleted each other's bucket files mid-read.  The table is
+    therefore external: dropping it keeps its files, so the location
+    is cleared before each write."""
     import shutil
-    from urllib.parse import urlparse
 
     spark = df.sparkSession
+    location = os.path.join(scratch_dir("bucketed"), table_name.lower())
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse}/{table_name.lower()}", ignore_errors=True)
+    shutil.rmtree(location, ignore_errors=True)
     (
         df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, key)
         .sortBy(key)
+        .option("path", location)
         .saveAsTable(table_name)
     )
 
@@ -60,16 +64,15 @@ def bucketed_join(
     return left.join(right, left[left_key] == right[right_key])
 
 
-# --- registry row: co-located join through the bucketed warehouse -------
+# --- registry row: co-located join through bucketed tables -------------
 
 
 def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sink/scan contract row for BUCKETED tables (same genre as the
     round-4 NDJSON/CSV/partitioned identity rows): write orders and
-    lineitem bucketed+sorted by order key into the warehouse, read
-    them back, join and aggregate — the oracle is the plain SQL join
-    on the raw parquet, so the whole bucketed round-trip must be a
-    value-level identity.
+    lineitem bucketed+sorted by order key, read them back, join and
+    aggregate — the oracle is the plain SQL join on the raw parquet,
+    so the whole bucketed round-trip must be a value-level identity.
 
     Why it matters at 100 TB: a fact-fact join's dominant cost is the
     shuffle; pre-bucketing both sides by the join key makes every

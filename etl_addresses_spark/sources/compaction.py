@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.session import scratch_dir
 from etl_addresses_spark.sources.tables import load_table
 
 TARGET_FILE_BYTES = 4 << 20  # 4 MiB at test scale; 128-1024 MiB in prod
@@ -84,13 +85,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, user/value/ts sums — every column participates).  The
     oracle computes the same aggregate on the ORIGINAL table, so the
     check passes iff compaction preserved every row byte-for-byte."""
-    base = os.path.join(
-        "/tmp",
-        "spark_graft_compact",
-        # pid-discriminated: concurrent processes must not share sinks
-        str(os.getpid()),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir("compaction", sf_dir)
     frag_dir = os.path.join(base, "fragmented")
     out_dir = os.path.join(base, "compacted")
 

@@ -18,13 +18,11 @@ identity.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_addresses_spark.session import scratch_dir
 from etl_addresses_spark.sources.tables import load_table
 
 DOCUMENTS_CSV_SCHEMA = T.StructType(
@@ -72,13 +70,7 @@ def delimited_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash match against the parquet-side oracle certifies the CSV
     round-trip preserved every value.  Partition-parallel on both
     sides; no inference scan."""
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "etl_addresses_spark_csv",
-        # pid-discriminated: concurrent processes must not share sinks
-        str(os.getpid()),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir("csv", sf_dir)
     write_csv(load_table(spark, sf_dir, "documents"), base)
     d = read_csv(spark, base, DOCUMENTS_CSV_SCHEMA)
     return d.groupBy("source").agg(

@@ -37,20 +37,12 @@ def partitioned_sink_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Note partitionBy columns come back as directory values: event_type
     re-enters as a string read from the path, exercising the
     partition-value encode/decode path too."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from etl_addresses_spark.session import scratch_dir
     from etl_addresses_spark.sources.tables import load_table
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "etl_addresses_spark_part",
-        # pid-discriminated: concurrent processes must not share sinks
-        str(os.getpid()),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir("partitioned", sf_dir)
     write_partitioned(load_table(spark, sf_dir, "events"), base, "event_type")
     purchases = read_partition(spark, base, "event_type", "purchase")
     return (

@@ -17,12 +17,10 @@ same aggregate straight from the parquet.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.session import scratch_dir
 from etl_addresses_spark.sources.tables import load_table
 
 
@@ -36,13 +34,7 @@ def read_log_lines(spark: SparkSession, path: str) -> DataFrame:
 
 
 def rawtext_log_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "etl_addresses_spark_rawtext",
-        # pid-discriminated: concurrent processes must not share sinks
-        str(os.getpid()),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir("rawtext", sf_dir)
     e = load_table(spark, sf_dir, "events")
     lines = e.select(
         F.concat_ws(

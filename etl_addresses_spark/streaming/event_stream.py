@@ -2,20 +2,24 @@
 
 The reference has no event-time streaming (SURVEY.md §2.9 — its
 Highland streams are bounded-file iterators), so this module is pure
-extension surface: watermarked tumbling-window aggregation, session
-windows, and a custom stateful operator via applyInPandasWithState.
+extension surface: watermarked window aggregation (tumbling or
+sliding), session windows, the stream-stream interval join in every
+join mode, and a custom stateful operator via applyInPandasWithState.
 
-Tests drive these with the file source over the driver's events
-parquet + a memory sink and `processAllAvailable()` (synchronous batch
-drain), and assert stream/batch equivalence where the semantics
-overlap.  On a real cluster the source becomes Kafka and the sink a
-transactional table — the query shapes are unchanged.
+Every query is started in ONE place, `drain` (availableNow trigger,
+synchronous drain of all available input, stop), which also holds the
+state-store width scope; `run_to_memory` and `run_with_checkpoint` are
+its two sinks.  Tests drive the operators with the file source over
+the driver's events parquet and assert stream/batch equivalence where
+the semantics overlap.  On a real cluster the source becomes Kafka and
+the sink a transactional table — the query shapes are unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from etl_addresses_spark.session import scoped_shuffle_partitions
 from etl_addresses_spark.sources.tables import events_file_schema, normalize_events_ts
@@ -57,14 +61,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def windowed_counts(events: DataFrame) -> DataFrame:
-    """Watermarked tumbling 5-minute windows per event type.  The
+def windowed_counts(
+    events: DataFrame, length: str = "5 minutes", slide: str | None = None
+) -> DataFrame:
+    """Watermarked windows per event type: tumbling `length` windows by
+    default, sliding ones when `slide` is given (a 10-minute window
+    every 5 minutes puts every event in exactly two windows).  The
     watermark bounds state: late rows beyond 10 minutes are dropped and
     closed windows are evicted — the knob that keeps state finite on an
-    unbounded 100 TB/day stream."""
+    unbounded 100 TB/day stream; a sliding window holds one extra
+    generation of open windows per slide, still O(windows x types)."""
     return (
         events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes").alias("win"), F.col("event_type"))
+        .groupBy(F.window("ts", length, slide).alias("win"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
@@ -172,8 +181,9 @@ ROCKSDB_STATE_CONF = {
 # stops paying 32 store commits to shuffle 2 MB.  The partition count
 # is pinned into the query's checkpoint on first start (Spark refuses
 # to re-plan state layout), which is why the knob matters at CREATION
-# time and why these helpers take it explicitly rather than mutating
-# the session default.
+# time.  `drain` takes it explicitly and sets it as the session default
+# only while the query starts and drains (session.
+# scoped_shuffle_partitions), restoring the previous value afterwards.
 STREAM_STATE_BYTES_PER_PARTITION = 64 << 20
 STREAM_STATE_MIN_PARTITIONS = 4
 
@@ -243,199 +253,39 @@ def events_state_partitions(sf_dir: str) -> int:
     return state_partitions_for(os.path.join(sf_dir, "events.parquet"))
 
 
+def drain(writer: DataStreamWriter, shuffle_partitions: int | None) -> None:
+    """Run a configured stream writer to completion: start it with an
+    availableNow trigger, process all available input synchronously,
+    and stop the query even if the drain fails.  `shuffle_partitions`
+    (see state_partitions_for; None keeps the session default) is the
+    query's shuffle and state-store width; it is scoped around the
+    start, where Spark pins it into the query."""
+    with scoped_shuffle_partitions(writer._spark, shuffle_partitions):
+        q = writer.trigger(availableNow=True).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
     mode: str = "complete",
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
-    """Drain all available input synchronously into a memory sink and
-    return the result as a batch DataFrame (test/smoke harness).
+    """Drain all available input into a memory sink and return the
+    result as a batch DataFrame (test/smoke harness).
 
     `complete` for windowed aggregations (append would withhold windows
     the watermark hasn't passed yet); `update` for stateful operators.
-    `shuffle_partitions` (see state_partitions_for) sizes the state
-    stores for THIS query; results are partitioning-invariant — the
-    stateful operators are keyed, and the drained table is compared
-    order-insensitively."""
-    with scoped_shuffle_partitions(stream_df.sparkSession, shuffle_partitions):
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    Results are partitioning-invariant — the stateful operators are
+    keyed, and the drained table is compared order-insensitively."""
+    drain(
+        stream_df.writeStream.outputMode(mode).format("memory").queryName(name),
+        shuffle_partitions,
+    )
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def purchases_with_recent_views(events: DataFrame) -> DataFrame:
-    """Stream-stream inner join: purchases matched to same-user views
-    within the preceding 30 minutes.  Both sides carry watermarks so
-    the join state is bounded: a view can be dropped once it is older
-    than the maximum lookback relative to the purchase watermark —
-    the knob that makes an unbounded two-stream join feasible."""
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-            F.col("event_id").alias("view_event_id"),
-        )
-        .withWatermark("view_ts", "40 minutes")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_event_id"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    cond = (
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    return purchases.join(views, cond, "inner").select(
-        "purchase_event_id",
-        F.col("p_user").alias("user_id"),
-        "purchase_ts",
-        "view_event_id",
-        "view_ts",
-    )
-
-
-def purchases_with_optional_views(events: DataFrame) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every purchase emits —
-    matched pairs eagerly, and the null-padded row only once the
-    watermark proves no matching view can still arrive.  This is the
-    semantics plain batch left-join cannot give an unbounded stream:
-    "unmatched" is only decidable when the view-side watermark passes
-    the end of the purchase's 30-minute lookback window, so the
-    unmatched row for purchase p materializes when
-    global_watermark (= min over inputs of max-event-time - delay,
-    ms-truncated) passes p.ts.  Purchases inside the final watermark
-    horizon stay in state, emitted by a later batch on a live stream —
-    exactly the rows the oracle's watermark predicate excludes."""
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-            F.col("event_id").alias("view_event_id"),
-        )
-        .withWatermark("view_ts", "40 minutes")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_event_id"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    cond = (
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    return purchases.join(views, cond, "leftOuter").select(
-        "purchase_event_id",
-        F.col("p_user").alias("user_id"),
-        "purchase_ts",
-        "view_event_id",
-        "view_ts",
-    )
-
-
-def purchases_with_views_full_outer(events: DataFrame) -> DataFrame:
-    """Stream-stream FULL OUTER interval join — completes the
-    inner/left/full join-mode matrix over the same condition (views
-    within the 30 minutes preceding a same-user purchase).  Both
-    null-emission rules are empirically pinned with boundary fixtures
-    (wm == bound and wm == bound ± 1 ms, like the OHLC predicate):
-
-      * unmatched PURCHASE emits its null-view row when
-        purchase_ts < global_wm   (strict; same rule the left join's
-        oracle uses), and
-      * unmatched VIEW emits its null-purchase row when
-        view_ts + 30 minutes < global_wm   (strict) — the instant the
-        watermark proves no purchase can still arrive inside the
-        view's forward join window,
-
-    where global_wm = min(ms-truncated max view_ts - 40 min,
-    ms-truncated max purchase_ts - 10 min) over each side's filtered
-    rows.  user_id is coalesced across sides so every output row
-    carries it."""
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-            F.col("event_id").alias("view_event_id"),
-        )
-        .withWatermark("view_ts", "40 minutes")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_event_id"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    cond = (
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    return purchases.join(views, cond, "fullOuter").select(
-        "purchase_event_id",
-        F.coalesce(F.col("p_user"), F.col("v_user")).alias("user_id"),
-        "purchase_ts",
-        "view_event_id",
-        "view_ts",
-    )
-
-
-def run_foreach_batch_overwrite(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """foreachBatch sink: each micro-batch receives (batch_df, batch_id)
-    and applies arbitrary writer logic — here a complete-mode aggregate
-    atomically overwriting the sink table, the idempotent upsert shape
-    (re-delivery of a batch id rewrites the same state; with a
-    transactional format this becomes MERGE INTO on the key).  This is
-    the escape hatch for sinks Structured Streaming has no native
-    writer for."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    with scoped_shuffle_partitions(stream_df.sparkSession, shuffle_partitions):
-        q = (
-            stream_df.writeStream.outputMode("complete")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return stream_df.sparkSession.read.parquet(out_dir)
 
 
 def run_with_checkpoint(
@@ -451,46 +301,70 @@ def run_with_checkpoint(
     the checkpoint's pinned state layout, so `shuffle_partitions` must
     not change between runs against one checkpoint (callers pass the
     same volume-derived value)."""
-    with scoped_shuffle_partitions(stream_df.sparkSession, shuffle_partitions):
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drain(
+        stream_df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir),
+        shuffle_partitions,
+    )
     return stream_df.sparkSession.read.parquet(out_dir)
 
 
-def sliding_counts(events: DataFrame) -> DataFrame:
-    """Watermarked SLIDING windows (10-minute length, 5-minute slide)
-    per event type: every event lands in exactly two overlapping
-    windows.  Same state-bounding watermark as the tumbling variant —
-    the state store holds one extra generation of open windows per
-    slide, still O(windows x types), independent of stream length."""
-    return (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy(
-            F.window("ts", "10 minutes", "5 minutes").alias("win"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "sum_value"
-            ),
-        )
+def purchase_view_join(events: DataFrame, how: str) -> DataFrame:
+    """Stream-stream interval join of purchases to same-user views
+    within the preceding 30 minutes; `how` is "inner", "leftOuter" or
+    "fullOuter".  Both sides carry watermarks so the join state is
+    bounded: a view can be dropped once it is older than the maximum
+    lookback relative to the purchase watermark — the knob that makes
+    an unbounded two-stream join feasible.
+
+    Matched pairs emit eagerly.  The outer modes' null-padded rows emit
+    only once the watermark proves no match can still arrive (both
+    rules pinned with boundary fixtures at wm == bound and
+    wm == bound ± 1 ms, like the OHLC predicate):
+
+      * unmatched PURCHASE: purchase_ts < global_wm (strict);
+      * unmatched VIEW (full only): view_ts + 30 minutes < global_wm
+        (strict) — the instant no purchase can still arrive inside the
+        view's forward join window,
+
+    where global_wm = min(ms-truncated max view_ts - 40 min,
+    ms-truncated max purchase_ts - 10 min) over each side's filtered
+    rows.  Rows inside the final watermark horizon stay in state,
+    emitted by a later batch on a live stream — exactly the rows the
+    oracles' watermark predicates exclude.  user_id is coalesced across
+    sides so every full-join row carries it (for inner and left joins
+    it is the purchase's user)."""
+    views = (
+        events.filter(F.col("event_type") == "view")
         .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
+            F.col("user_id").alias("v_user"),
+            F.col("ts").alias("view_ts"),
+            F.col("event_id").alias("view_event_id"),
         )
+        .withWatermark("view_ts", "40 minutes")
+    )
+    purchases = (
+        events.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("purchase_ts"),
+            F.col("event_id").alias("purchase_event_id"),
+        )
+        .withWatermark("purchase_ts", "10 minutes")
+    )
+    cond = (
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("view_ts") <= F.col("purchase_ts"))
+        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
+    )
+    return purchases.join(views, cond, how).select(
+        "purchase_event_id",
+        F.coalesce(F.col("p_user"), F.col("v_user")).alias("user_id"),
+        "purchase_ts",
+        "view_event_id",
+        "view_ts",
     )
 
 

@@ -169,22 +169,21 @@ def test_index_persist_serve_identity(spark):
     """The build/serve split must be invisible in the answer: serving
     from the persisted parquet artifacts returns BIT-identical rows to
     the in-memory index (longs/doubles round-trip parquet exactly).
-    Since r13 the artifacts are EPHEMERAL (session-unique temp dir,
-    removed once the serve read materializes — r12 verdict/advice
+    Since r13 the artifacts are EPHEMERAL (a per-application scratch
+    dir, removed once the serve read materializes — r12 verdict/advice
     hygiene items), so the residue contract flips: after the row runs,
-    NO spark_graft_ivfpq_index_* directory may remain."""
-    import glob
-    import tempfile
+    its index directory may not remain."""
+    import os
+
+    from etl_addresses_spark.session import scratch_dir
 
     served = clustering.ann_index_persist_serve(spark, SF_ORACLE)
     mem = clustering.ann_ivf_pq_topk(spark, SF_ORACLE)
     assert sorted(map(tuple, served.collect())) == sorted(
         map(tuple, mem.collect())
     )
-    residue = glob.glob(
-        tempfile.gettempdir() + "/spark_graft_ivfpq_index_*"
-    )
-    assert not residue, residue
+    index_root = scratch_dir("ivfpq_index")
+    assert not os.path.exists(index_root) or not os.listdir(index_root)
 
 
 def test_nprobe_recall_curve_oracle_and_invariants(spark, ddb):

@@ -63,13 +63,10 @@ def test_compaction_range_clustering(spark):
     )
     from conftest import SF_SMALL
 
+    from etl_addresses_spark.session import scratch_dir
+
     compact_small_files(spark, SF_SMALL).collect()
-    base = os.path.join(
-        "/tmp",
-        "spark_graft_compact",
-        str(os.getpid()),
-        os.path.basename(SF_SMALL),
-    )
+    base = scratch_dir("compaction", SF_SMALL)
     files = _parquet_files(os.path.join(base, "compacted"))
     assert files
     ranges = []

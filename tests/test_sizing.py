@@ -44,14 +44,16 @@ def test_cpu_partitions_floor_and_bytes(spark):
     assert cpu_partitions(small) == par
     # plan stats exist and are sane for a trivial range
     assert 0 <= plan_size_bytes(small) < CPU_STAGE_BYTES_PER_PARTITION
-    # a frame with unusable stats falls back to parallelism-only
+    # a frame whose stats call fails raises instead of silently
+    # falling back to parallelism-only
     class _Fake:
         sparkSession = spark
         class _J:
             def queryExecution(self):
                 raise RuntimeError("no stats")
         _jdf = _J()
-    assert cpu_partitions(_Fake()) == par
+    with pytest.raises(RuntimeError, match="no stats"):
+        cpu_partitions(_Fake())
 
 
 def _sparse(path, nbytes):
@@ -130,3 +132,20 @@ def test_scoped_shuffle_partitions_restores(spark):
     # None is a no-op
     with scoped_shuffle_partitions(spark, None):
         assert spark.conf.get(key) == before
+    # nested LIFO scopes restore each level
+    with scoped_shuffle_partitions(spark, 7):
+        with scoped_shuffle_partitions(spark, 9):
+            assert spark.conf.get(key) == "9"
+        assert spark.conf.get(key) == "7"
+    assert spark.conf.get(key) == before
+    # interleaved scopes (outer exits while the inner one still holds
+    # the conf) raise instead of restoring the wrong width
+    outer = scoped_shuffle_partitions(spark, 7)
+    inner = scoped_shuffle_partitions(spark, 9)
+    outer.__enter__()
+    inner.__enter__()
+    with pytest.raises(RuntimeError, match="LIFO"):
+        outer.__exit__(None, None, None)
+    inner.__exit__(None, None, None)  # restores the outer width, 7
+    outer.__exit__(None, None, None)
+    assert spark.conf.get(key) == before

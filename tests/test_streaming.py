@@ -62,7 +62,7 @@ def test_stateful_user_totals(spark):
 def test_stream_stream_join_matches_batch(spark):
     stream = event_stream.read_events_stream(spark, SF_ORACLE)
     out = event_stream.run_to_memory(
-        event_stream.purchases_with_recent_views(stream), "ss_join", mode="append"
+        event_stream.purchase_view_join(stream, "inner"), "ss_join", mode="append"
     )
     e = load_table(spark, SF_ORACLE, "events")
     views = e.filter("event_type = 'view'").select(
@@ -277,8 +277,15 @@ def test_foreach_batch_overwrite_sink(spark, tmp_path):
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total"),
     )
-    out = event_stream.run_foreach_batch_overwrite(
-        agg, str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    sink = str(tmp_path / "sink")
+    event_stream.drain(
+        agg.writeStream.outputMode("complete")
+        .foreachBatch(
+            lambda batch_df, _batch_id: batch_df.write.mode("overwrite").parquet(sink)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
+        None,
     )
+    out = spark.read.parquet(sink)
     got = {(r.user_id): (r.n, r.total) for r in out.collect()}
     assert got == {1: (2, 4.0), 2: (1, 2.0), 3: (1, 4.0)}

@@ -91,25 +91,24 @@ def test_stream_restart_exactly_once(spark):
 
 
 def test_scratch_dirs_do_not_outlive_the_rows(spark):
-    """/tmp hygiene pin (r13 verdict item 2): the two rows that stage
-    scratch under /tmp (CDC A/B state + restart source/checkpoint)
-    must remove their pid-keyed base dir before returning — the r12-r13
+    """Scratch hygiene pin (r13 verdict item 2): the two rows that
+    stage files in their `session.scratch_dir` (CDC A/B state + restart
+    source/checkpoint) must remove it before returning — the r12-r13
     sweeps left one residue dir per run — AND the returned frame must
     still be collectable after the delete (the eager localCheckpoint
     materialized it first)."""
-    import glob
     import os
 
-    from etl_addresses_spark.plans.streaming_queries import stream_cdc_upsert
+    from etl_addresses_spark.plans.streaming_queries import (
+        stream_cdc_upsert,
+        stream_restart_exactly_once,
+    )
+    from etl_addresses_spark.session import scratch_dir
 
-    out = stream_cdc_upsert(spark, SF_ORACLE)
-    assert out.count() > 0  # usable after the scratch was rmtree'd
-    pid = os.getpid()
-    residue = [
-        d
-        for pat in ("spark_graft_cdc_*", "spark_graft_restart_*")
-        for d in glob.glob(os.path.join("/tmp", pat))
-        if d.endswith(f"_{pid}")
-    ]
-    # covers the restart row too when the full file ran it above
-    assert not residue, residue
+    for row, name in (
+        (stream_cdc_upsert, "stream_cdc"),
+        (stream_restart_exactly_once, "stream_restart"),
+    ):
+        out = row(spark, SF_ORACLE)
+        assert out.count() > 0  # usable after the scratch was rmtree'd
+        assert not os.path.exists(scratch_dir(name, SF_ORACLE))
