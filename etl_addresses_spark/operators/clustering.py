@@ -34,15 +34,34 @@ Recall and SSE-monotonicity stay asserted in pytest.
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, Window as W
 from pyspark.sql import types as T
 
-from etl_addresses_spark.operators.similarity import (
-    EMB_DIM,
-    QUERY_MOD,
+from etl_addresses_spark.functions.hashing import knuth_order_col, knuth_order_sql
+from etl_addresses_spark.functions.sizing import use_unrolled_kernel
+from etl_addresses_spark.functions.vectors import (
+    _duckdb_dot,
+    _duckdb_sqdist,
+    _norm_col,
     _pair_dot_seq,
+    _sqdist,
+    _sqdist_unrolled,
+)
+from etl_addresses_spark.operators.similarity import (
+    COSINE_TOPK_SAMPLED_SQL,
+    EMB_DIM,
+    PQ_ADC_SQL,
+    QUERY_MOD,
+    SQ8_SQL_CTES,
+    TOPK_K,
+    _norms,
     _rank_topk,
+    cosine_topk_fast_for,
     eval_query_pred,
     eval_query_pred_sql,
     eval_query_sample_thresh,
@@ -50,10 +69,15 @@ from etl_addresses_spark.operators.similarity import (
     pq_codebook,
     pq_encode,
     pq_query_luts,
+    pq_sql_ctes,
+    rank_topk_sql,
+    recall_eval_sql,
     recall_vs_exact,
+    sq8_codes,
+    sq8_int_dot,
+    sq8_int_dot_sql,
 )
-from etl_addresses_spark.functions.hashing import knuth_order_col, knuth_order_sql
-from etl_addresses_spark.functions.sizing import use_unrolled_kernel
+from etl_addresses_spark.session import scratch_dir
 from etl_addresses_spark.sources.tables import fan_out, load_table
 
 DEFAULT_K_MOD = 100
@@ -111,56 +135,12 @@ def ivf_list_count(n: int) -> int:
     """k = max(1, floor(sqrt(n))) via IEEE double sqrt — the exact
     expression the oracle CTE computes, so both engines derive the
     identical k from the identical count."""
-    import math
-
     return max(1, int(math.floor(math.sqrt(float(n)))))
 
 
 IVF_LIST_COUNT_SQL = (
     "greatest(1, CAST(floor(sqrt(CAST({n} AS DOUBLE))) AS BIGINT))"
 )
-
-
-def _sqdist(a, b) -> F.Column:
-    """Squared L2 distance, sequential double fold (deterministic;
-    see similarity._pair_dot_seq for why the fold beats an unrolled
-    per-element chain)."""
-    diffs = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _sqdist_unrolled(a, b, dim: int) -> F.Column:
-    """BIT-IDENTICAL twin of `_sqdist` for fixed-width arrays: the
-    left-associated chain 0.0 + d1 + d2 + ... is the exact sequence
-    the fold computes, term for term (equality asserted row-wise in
-    tests and by the unchanged oracle hashes), but as a flat
-    element_at expression tree instead of interpreted higher-order
-    functions (zip_with allocates an intermediate array per pair —
-    per-CANDIDATE in a broadcast argmin kernel).
-
-    Shape rule (r12, all three shapes measured on the 30x replica —
-    SCALE.md "fold vs unrolled kernel matrix"): use the unrolled chain
-    ONLY in broadcast-argmin kernels that evaluate MANY short/medium
-    folds per probe row against a model-sized build side (corpus x
-    k-centroid assignment: 5.26 -> 2.00 s; PQ encode 480k x 256
-    codewords of dim 8: 10.25 -> 4.11 s).  Keep the fold for
-    scan-shaped single folds per row (norms: fold 2x faster) AND for
-    the wide-broadcast cosine kernels, where the unrolled chain
-    measured 9x SLOWER at 30x (18.6 -> 175 s, corpus x 1200-query
-    broadcast) — the generated join-loop method grows past JIT limits
-    and runs deoptimized."""
-    expr = F.lit(0.0)
-    for i in range(1, dim + 1):
-        diff = F.element_at(a, i).cast("double") - F.element_at(b, i).cast(
-            "double"
-        )
-        expr = expr + diff * diff
-    return expr
 
 
 _CENT_SCHEMA = T.StructType(
@@ -192,8 +172,8 @@ def _assign(
     vec_id (measured 34 s -> ~4 s for the iteration pipeline at 10x).
     The (d2, cent_id) struct order reproduces the window's exact
     deterministic tie-break."""
-    # dense_kernel switches to the unrolled chain (see
-    # _sqdist_unrolled's shape rule and sizing.use_unrolled_kernel's
+    # dense_kernel switches to the unrolled chain (see the shape rule
+    # in functions/vectors.py and sizing.use_unrolled_kernel's
     # crossover): this is the corpus x k broadcast-argmin — 15M folds
     # at the 30x replica, 5.26 -> 2.00 s for the swap, bit-identical,
     # but the chain costs ~0.4 s codegen compile per stage, so small
@@ -345,17 +325,6 @@ def kmeans_cluster_sizes(
     )
 
 
-def _duckdb_sqdist(a: str, b: str) -> str:
-    """DuckDB twin of `_sqdist`: left-to-right list_reduce fold of
-    squared diffs (Spark's leading +0.0 fold seed is an IEEE no-op)."""
-    return (
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-        f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))), "
-        f"(x, y) -> x + y)"
-    )
-
-
 def _kmeans_ctes(
     k_mod: int = DEFAULT_K_MOD,
     iters: int = DEFAULT_ITERS,
@@ -435,15 +404,231 @@ FROM a{final} GROUP BY cluster_id
     )
 
 
+# ---------------------------------------------------------------------------
+# The IVF index, one step at a time.  Every index row below composes
+# these: build (coarse centroids + inverted lists, then the PQ codebook
+# and codes), probe (each query's nprobe nearest cells), score the
+# probed lists' codes, cut the top-k — and each step has its DuckDB
+# twin, so the oracles compose the same steps.
+# ---------------------------------------------------------------------------
+
+# Lists each query probes: this repo's serving default.
+NPROBE = 2
+# The standard query set (similarity.QUERY_MOD) over the probe CTE's
+# query row `v`.
+QUERY_PRED_SQL = f"v.vec_id % {QUERY_MOD} = 0"
+
+# An IVF-PQ index: (coarse centroids, inverted lists, PQ codebook,
+# PQ codes) — the four corpus-side artifacts every serve reads.
+IvfPqIndex = tuple[DataFrame, DataFrame, DataFrame, DataFrame]
+
+
+def _ivf_lists(vecs: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """Inverted lists (vec_id, list_id): each vector of `vecs` in the
+    cell of its nearest centroid.  Narrow labels only — the embedding
+    never rides past the argmin (r9 kmeans lesson).  fan_out because
+    cell assignment is k x d folds per row over a bytes-small scan (see
+    kmeans_fit); `n` picks the kernel regime."""
+    return _assign(
+        fan_out(vecs.select("vec_id", "embedding"), vecs.sparkSession),
+        cents,
+        attach_embedding=False,
+        dense_kernel=use_unrolled_kernel(n),
+    ).select("vec_id", F.col("cluster_id").alias("list_id"))
+
+
+def _ivf_coarse(e: DataFrame, n: int | None = None) -> tuple[DataFrame, DataFrame]:
+    """The coarse half of the index: (Lloyd centroids, inverted lists).
+    `n` is the count of `e` when the caller already has it."""
+    if n is None:
+        n = e.count()
+    cents, _ = kmeans_fit(e, n=n)
+    return cents, _ivf_lists(e, cents, n)
+
+
+def _ivfpq_build(e: DataFrame, n: int | None = None) -> IvfPqIndex:
+    """The whole IVF-PQ index over `e`."""
+    if n is None:
+        n = e.count()
+    cents, lists = _ivf_coarse(e, n)
+    pq_cents = pq_codebook(e)
+    return cents, lists, pq_cents, pq_encode(e, pq_cents, n_hint=n)
+
+
+def _probe(
+    queries: DataFrame,
+    cents: DataFrame,
+    nprobe: int = NPROBE,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The nprobe nearest cells of each query: queries (query_id,
+    q_emb, *carry) x broadcast centroids, squared L2, ranked with the
+    deterministic (d2, cent_id) tie-break.  Returns (query_id, *carry,
+    list_id, pr), pr being the probe rank 1..nprobe.  The metric is
+    FLOAT squared L2 whatever the index stores (it quantizes storage,
+    not the coarse metric — the FAISS contract)."""
+    scored = queries.crossJoin(F.broadcast(cents)).select(
+        "query_id",
+        *carry,
+        "cent_id",
+        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
+    )
+    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
+    return (
+        scored.withColumn("pr", F.row_number().over(wp))
+        .filter(F.col("pr") <= nprobe)
+        .select("query_id", *carry, F.col("cent_id").alias("list_id"), "pr")
+    )
+
+
+def _ivfpq_scored(
+    e: DataFrame,
+    index: IvfPqIndex,
+    eval_thresh: int | None = None,
+    nprobe: int = NPROBE,
+    key: str | None = None,
+) -> DataFrame:
+    """ADC-scored candidates (query_id, cand_id, pr, pq_cosine) of the
+    standard query set against an IVF-PQ `index`: every code in a
+    probed list, self-pairs excluded.
+
+    Plan: the (query, probed list, LUT) frame — |queries| x nprobe rows
+    carrying the M x k double LUT, model-sized — is broadcast-hash
+    joined on list_id onto ONE narrow codes⋈lists join, so the corpus
+    never meets the query set in a cartesian.  `eval_thresh` (eval rows
+    only) caps the query set via the Knuth sample predicate BEFORE LUT
+    construction and probing — see similarity.EVAL_QUERY_BUDGET.
+    `key` names an `e` column a candidate must share with its query
+    (the filtered row's label): it rides the probe frame and joins as a
+    second hash key, so non-matching candidates drop at the join,
+    before any scoring."""
+    spark = e.sparkSession
+    cents, lists, pq_cents, codes = index
+    carry = (key,) if key else ()
+    query_pred = eval_query_pred(eval_thresh)
+    luts = pq_query_luts(e, pq_cents, query_pred=query_pred)
+    queries = (
+        fan_out(e.select("vec_id", "embedding", *carry), spark)
+        .filter(query_pred)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            *carry,
+        )
+    )
+    probe_luts = _probe(queries, cents, nprobe, carry).join(luts, "query_id")
+    rows = codes.join(lists, "vec_id")
+    if key:
+        rows = rows.join(e.select("vec_id", key), "vec_id")
+    # fan_out above the ADC kernel: codes⋈lists is a narrow agg/join
+    # output whose exchange AQE coalesces to 1-2 partitions (r9 batch7)
+    cand = (
+        fan_out(rows, spark)
+        .join(F.broadcast(probe_luts), ["list_id", *carry])
+        .filter(F.col("vec_id") != F.col("query_id"))
+    )
+    return cand.select(
+        "query_id",
+        F.col("vec_id").alias("cand_id"),
+        "pr",
+        (
+            pq_adc_expr() / (F.col("q_norm") * F.sqrt(F.col("recon_norm2")))
+        ).alias("pq_cosine"),
+    )
+
+
+def _ivfpq_serve(
+    e: DataFrame,
+    index: IvfPqIndex,
+    eval_thresh: int | None = None,
+    k: int = TOPK_K,
+    key: str | None = None,
+) -> DataFrame:
+    """The SERVE half of the IVF-PQ index: the top-k of
+    `_ivfpq_scored` per query.  Every IVF-PQ row answers through it,
+    whichever way it built, stored or updated its index; `k` widens
+    the cut for the refine rerank's candidate stage."""
+    return _rank_topk(
+        _ivfpq_scored(e, index, eval_thresh, key=key), "pq_cosine", k=k
+    )
+
+
+def ivf_probes_sql(
+    pred: str = QUERY_PRED_SQL,
+    iters: int = DEFAULT_ITERS,
+    nprobe: int = NPROBE,
+    carry: dict[str, str] | None = None,
+) -> str:
+    """DuckDB twin of `_probe`: the `probes` CTE (query_id, *carry,
+    list_id, pr) for the `vecs` rows matching `pred`, against the
+    centroids c{iters}.  `carry` maps output name -> expression over
+    the query row `v`."""
+    carry = carry or {}
+    inner = "".join(f"{expr} AS {name}, " for name, expr in carry.items())
+    outer = "".join(f"{name}, " for name in carry)
+    return f"""probes AS MATERIALIZED (
+  SELECT query_id, {outer}cluster_id AS list_id, r AS pr FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
+    FROM (
+      SELECT v.vec_id AS query_id, {inner}c.cent_id AS cluster_id,
+             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+      FROM vecs v CROSS JOIN c{iters} c
+      WHERE {pred}))
+  WHERE r <= {nprobe}
+)"""
+
+
+def ivfpq_scored_sql(
+    probe_pred: str = QUERY_PRED_SQL,
+    iters: int = DEFAULT_ITERS,
+    nprobe: int = NPROBE,
+    key: str | None = None,
+    assign: str | None = None,
+    keep: str = "TRUE",
+) -> str:
+    """DuckDB twin of `_ivfpq_scored`: the `ivf_lists`, `probes` and
+    `pq_scored` (query_id, cand_id, pr, pq_cosine) CTEs, following the
+    kmeans CTEs and similarity.pq_sql_ctes (codes, luts).  The lists
+    are the final assignment a{iters+1} unless `assign` names another
+    (vec_id, cluster_id) relation; `keep` filters them (deletion)."""
+    assign = assign or f"a{iters + 1}"
+    key_join = (
+        f"""
+  JOIN embeddings qk ON qk.vec_id = p.query_id
+  JOIN embeddings ck ON ck.vec_id = c.vec_id AND ck.{key} = qk.{key}"""
+        if key
+        else ""
+    )
+    return f"""ivf_lists AS MATERIALIZED (
+  SELECT vec_id, cluster_id AS list_id FROM {assign}
+  WHERE {keep}
+),
+{ivf_probes_sql(probe_pred, iters, nprobe)},
+pq_scored AS MATERIALIZED (
+  SELECT q.query_id, c.vec_id AS cand_id, p.pr,
+    {PQ_ADC_SQL}
+      / (q.q_norm * sqrt(c.recon_norm2)) AS pq_cosine
+  FROM codes c
+  JOIN ivf_lists l ON l.vec_id = c.vec_id
+  JOIN probes p ON p.list_id = l.list_id
+  JOIN luts q ON q.query_id = p.query_id{key_join}
+  WHERE c.vec_id <> p.query_id
+)"""
+
+
 def ann_ivf_lloyd_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        TOPK_K,
-        _duckdb_dot,
-    )
-
     final = iters + 1
+    probes = ivf_probes_sql(
+        iters=iters,
+        carry={
+            "q_emb": "v.embedding",
+            "q_norm": f"sqrt(CAST({_duckdb_dot('v.embedding', 'v.embedding')}"
+            " AS DOUBLE))",
+        },
+    )
     return (
         _kmeans_ctes(k_mod, iters)
         + f""",
@@ -453,20 +638,7 @@ assigned AS MATERIALIZED (
            AS vnorm
   FROM a{final} a
 ),
-probes AS MATERIALIZED (
-  SELECT query_id, q_emb, q_norm, cluster_id AS list_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
-    FROM (
-      SELECT v.vec_id AS query_id, v.embedding AS q_emb,
-             sqrt(CAST({_duckdb_dot('v.embedding', 'v.embedding')} AS DOUBLE))
-               AS q_norm,
-             c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
-      FROM vecs v CROSS JOIN c{iters} c
-      WHERE v.vec_id % {QUERY_MOD} = 0))
-  WHERE r <= 2
-),
+{probes},
 scored AS (
   SELECT p.query_id, a.vec_id AS cand_id,
          CAST({_duckdb_dot('p.q_emb', 'a.embedding')} AS DOUBLE)
@@ -474,11 +646,7 @@ scored AS (
   FROM assigned a JOIN probes p ON a.list_id = p.list_id
   WHERE a.vec_id <> p.query_id
 )
-SELECT query_id, rank, cand_id, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{rank_topk_sql('scored')}
 """
     )
 
@@ -511,82 +679,7 @@ def ann_ivf_pq_topk(
     iterations and reuses similarity.PQ_SQL_CTES verbatim.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    # fan_out: cell assignment is k x d folds per row over a
-    # bytes-small scan (see kmeans_fit)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    # inverted lists: narrow (vec_id, list_id) labels only — the
-    # embedding never rides past the argmin (r9 kmeans lesson)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
-    return _ivfpq_serve(
-        spark, e, cents, lists, pq_cents, codes, eval_thresh=eval_thresh
-    )
-
-
-def _ivfpq_serve(
-    spark: SparkSession,
-    e: DataFrame,
-    cents: DataFrame,
-    lists: DataFrame,
-    pq_cents: DataFrame,
-    codes: DataFrame,
-    eval_thresh: int | None = None,
-    topk: int | None = None,
-) -> DataFrame:
-    """The SERVE half of the IVF-PQ index: answer the standard query
-    set from the four corpus-side index artifacts (coarse centroids,
-    inverted lists, PQ codebook, PQ codes) — shared by the in-memory
-    row (`ann_ivf_pq_topk`) and the persisted round-trip row
-    (`ann_index_persist_serve`), which is the identity claim between
-    them.  `eval_thresh` (eval rows only) caps the query set via the
-    Knuth sample predicate BEFORE LUT construction and probing — see
-    similarity.EVAL_QUERY_BUDGET.  `topk` widens the per-query cut
-    (default TOPK_K) for the refine rerank's candidate stage."""
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    luts = pq_query_luts(e, pq_cents, query_pred=eval_query_pred(eval_thresh))
-    # query probes: nprobe=2 nearest coarse centroids, same
-    # deterministic (d2, cent_id) tie-break as the Lloyd-IVF row
-    queries = vecs.filter(eval_query_pred(eval_thresh)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", F.col("cent_id").alias("list_id"))
-    )
-    # (query, probed list, LUT) — |queries| x nprobe rows carrying the
-    # M x k double LUT: model-sized, broadcast to the candidate scan
-    probe_luts = probes.join(luts, "query_id")
-    # fan_out above the ADC kernel: codes⋈lists is a narrow agg/join
-    # output whose exchange AQE coalesces to 1-2 partitions (r9 batch7)
-    cand = (
-        fan_out(codes.join(lists, "vec_id"), spark)
-        .join(F.broadcast(probe_luts), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        (
-            pq_adc_expr() / (F.col("q_norm") * F.sqrt(F.col("recon_norm2")))
-        ).alias("pq_cosine"),
-    )
-    from etl_addresses_spark.operators.similarity import TOPK_K
-
-    return _rank_topk(scored, "pq_cosine", k=topk if topk else TOPK_K)
+    return _ivfpq_serve(e, _ivfpq_build(e), eval_thresh=eval_thresh)
 
 
 def ann_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,43 +706,16 @@ def ann_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed once the serve read has materialized — so concurrent
     sessions on the same fixture can never collide and sweeps leave no
     residue, the r12 verdict/advice hygiene items)."""
-    import os
-    import shutil
-
-    from etl_addresses_spark.session import scratch_dir
-
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
-
+    index = _ivfpq_build(e)
     base = scratch_dir("ivfpq_index", sf_dir)
-    artifacts = {
-        "cents": cents,
-        "lists": lists,
-        "codebook": pq_cents,
-        "codes": codes,
-    }
     try:
-        loaded: dict[str, DataFrame] = {}
-        for name, df in artifacts.items():
+        loaded = []
+        for name, df in zip(("cents", "lists", "codebook", "codes"), index):
             path = os.path.join(base, f"{name}.parquet")
             df.write.mode("overwrite").parquet(path)
-            loaded[name] = spark.read.parquet(path)
-        served = _ivfpq_serve(
-            spark,
-            e,
-            loaded["cents"],
-            loaded["lists"],
-            loaded["codebook"],
-            loaded["codes"],
-        )
+            loaded.append(spark.read.parquet(path))
+        served = _ivfpq_serve(e, tuple(loaded))
         # materialize the serve read (executor-side, model-sized top-k
         # result) BEFORE deleting the artifacts it scans — the frame
         # this returns must not depend on the removed files.  NOTE:
@@ -669,12 +735,6 @@ def ann_ivf_pq_oracle_sql(
     eval_sampled: bool = False,
     keep_pred: str = "TRUE",
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        PQ_ADC_SQL,
-        TOPK_K,
-        pq_sql_ctes,
-    )
-
     # the eval rows' sampled twin: LUTs and probes restricted to the
     # Knuth query sample, threshold derived from the SAME corpus count
     # the Spark side uses (nk counts vecs, source_pred TRUE = full
@@ -687,43 +747,14 @@ def ann_ivf_pq_oracle_sql(
     probe_pred = (
         eval_query_pred_sql("v.vec_id", "SELECT n FROM nk")
         if eval_sampled
-        else f"v.vec_id % {QUERY_MOD} = 0"
+        else QUERY_PRED_SQL
     )
-    final = iters + 1
     return (
         _kmeans_ctes(k_mod, iters)
         + f""",
 {pq_sql_ctes(query_pred=qp)},
-ivf_lists AS MATERIALIZED (
-  SELECT vec_id, cluster_id AS list_id FROM a{final}
-  WHERE {keep_pred}
-),
-probes AS MATERIALIZED (
-  SELECT query_id, cluster_id AS list_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
-    FROM (
-      SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
-      FROM vecs v CROSS JOIN c{iters} c
-      WHERE {probe_pred}))
-  WHERE r <= 2
-),
-scored AS (
-  SELECT q.query_id, c.vec_id AS cand_id,
-    {PQ_ADC_SQL}
-      / (q.q_norm * sqrt(c.recon_norm2)) AS pq_cosine
-  FROM codes c
-  JOIN ivf_lists l ON l.vec_id = c.vec_id
-  JOIN probes p ON p.list_id = l.list_id
-  JOIN luts q ON q.query_id = p.query_id
-  WHERE c.vec_id <> p.query_id
-)
-SELECT query_id, rank, cand_id, pq_cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY pq_cosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{ivfpq_scored_sql(probe_pred, iters, keep=keep_pred)}
+{rank_topk_sql('pq_scored', 'pq_cosine')}
 """
     )
 
@@ -742,10 +773,6 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-quadratic; past the threshold both sides score the same
     fixed-size Knuth query sample — non-binding at every committed
     fixture, O(n) eval past it."""
-    from etl_addresses_spark.operators.similarity import (
-        cosine_topk_fast_for,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     thresh = eval_query_sample_thresh(e.count())
     return recall_vs_exact(
@@ -760,11 +787,6 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_pq_recall_oracle_sql() -> str:
-    from etl_addresses_spark.operators.similarity import (
-        COSINE_TOPK_SAMPLED_SQL,
-        recall_eval_sql,
-    )
-
     return recall_eval_sql(
         COSINE_TOPK_SAMPLED_SQL, ann_ivf_pq_oracle_sql(eval_sampled=True)
     )
@@ -807,27 +829,10 @@ def ann_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = e.filter(is_batch)
     n_all = e.count()  # full-corpus count: pq_encode covers EVERYTHING
     nb = base.count()  # base count: k derivation + training threshold
-    dense = use_unrolled_kernel(nb)
     cents, _ = kmeans_fit(base, n=nb)
     # frozen-centroid assignment: base and batch take the SAME argmin
     # against the SAME centroid frame — the union is the updated lists
-    lists = (
-        _assign(
-            fan_out(base.select("vec_id", "embedding"), spark),
-            cents,
-            attach_embedding=False,
-            dense_kernel=dense,
-        )
-        .unionByName(
-            _assign(
-                fan_out(batch.select("vec_id", "embedding"), spark),
-                cents,
-                attach_embedding=False,
-                dense_kernel=dense,
-            )
-        )
-        .select("vec_id", F.col("cluster_id").alias("list_id"))
-    )
+    lists = _ivf_lists(base, cents, nb).unionByName(_ivf_lists(batch, cents, nb))
     pq_cents = pq_codebook(base)  # frozen: codewords from base seeds
     # encode ALL vs frozen codebook; n_hint is the FULL corpus count —
     # the kernel-regime hint must match the frame being encoded (r12
@@ -835,18 +840,12 @@ def ann_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past the crossover; bit-identical either way, but the contract
     # is "the count of e")
     codes = pq_encode(e, pq_cents, n_hint=n_all)
-    return _ivfpq_serve(spark, e, cents, lists, pq_cents, codes)
+    return _ivfpq_serve(e, (cents, lists, pq_cents, codes))
 
 
 def ann_index_incremental_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        PQ_ADC_SQL,
-        TOPK_K,
-        pq_sql_ctes,
-    )
-
     base_pred = (
         f"vec_id % {INCREMENTAL_BATCH_MOD} <> {INCREMENTAL_BATCH_REM}"
     )
@@ -854,6 +853,14 @@ def ann_index_incremental_oracle_sql(
         f"vec_id % {INCREMENTAL_BATCH_MOD} = {INCREMENTAL_BATCH_REM}"
     )
     final = iters + 1
+    # the query set lies in the base corpus (see INCREMENTAL_BATCH_REM),
+    # so `vecs` — the base — holds every query the probes need; the
+    # updated lists are the base's final assignment plus the batch's
+    scored = ivfpq_scored_sql(
+        iters=iters,
+        assign=f"(SELECT vec_id, cluster_id FROM a{final}"
+        " UNION ALL SELECT vec_id, cluster_id FROM batch_assign)",
+    )
     return (
         _kmeans_ctes(k_mod, iters, source_pred=base_pred)
         + f""",
@@ -869,37 +876,8 @@ batch_assign AS MATERIALIZED (
       CROSS JOIN c{iters} c))
   WHERE r = 1
 ),
-all_lists AS MATERIALIZED (
-  SELECT vec_id, cluster_id AS list_id FROM a{final}
-  UNION ALL
-  SELECT vec_id, cluster_id AS list_id FROM batch_assign
-),
-probes AS MATERIALIZED (
-  SELECT query_id, cluster_id AS list_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
-    FROM (
-      SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
-      FROM embeddings v CROSS JOIN c{iters} c
-      WHERE v.vec_id % {QUERY_MOD} = 0))
-  WHERE r <= 2
-),
-scored AS (
-  SELECT q.query_id, c.vec_id AS cand_id,
-    {PQ_ADC_SQL}
-      / (q.q_norm * sqrt(c.recon_norm2)) AS pq_cosine
-  FROM codes c
-  JOIN all_lists l ON l.vec_id = c.vec_id
-  JOIN probes p ON p.list_id = l.list_id
-  JOIN luts q ON q.query_id = p.query_id
-  WHERE c.vec_id <> p.query_id
-)
-SELECT query_id, rank, cand_id, pq_cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY pq_cosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{scored}
+{rank_topk_sql('pq_scored', 'pq_cosine')}
 """
     )
 
@@ -941,22 +919,14 @@ def ann_index_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ann_ivf_pq_topk`'s plan shape (broadcast probe-LUT join, no
     corpus cartesian)."""
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
+    cents, lists, pq_cents, codes = _ivfpq_build(e)
     keep = ~(
         F.col("vec_id") % DELETE_TOMBSTONE_MOD == DELETE_TOMBSTONE_REM
     )
     # remove_ids: two narrow filters on the row-level artifacts; the
     # learned artifacts (cents, pq_cents) pass through untouched
     return _ivfpq_serve(
-        spark, e, cents, lists.filter(keep), pq_cents, codes.filter(keep)
+        e, (cents, lists.filter(keep), pq_cents, codes.filter(keep))
     )
 
 
@@ -993,51 +963,11 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall aggregates integer-exactly: (nprobe, n_queries, total_hits)
     with recall = total_hits / (n_queries * k) the only float — one
     int-derived double division, bit-portable, fully oracle-checked."""
-    from etl_addresses_spark.operators.similarity import (
-        TOPK_K,
-        cosine_topk_fast_for,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
     thresh = eval_query_sample_thresh(n)
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
-    luts = pq_query_luts(e, pq_cents, query_pred=eval_query_pred(thresh))
-    queries = vecs.filter(eval_query_pred(thresh)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= max(NPROBE_CURVE))
-        .select("query_id", F.col("cent_id").alias("list_id"), "pr")
-    )
-    probe_luts = probes.join(luts, "query_id")
-    cand = (
-        fan_out(codes.join(lists, "vec_id"), spark)
-        .join(F.broadcast(probe_luts), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        "pr",
-        (
-            pq_adc_expr() / (F.col("q_norm") * F.sqrt(F.col("recon_norm2")))
-        ).alias("pq_cosine"),
+    scored = _ivfpq_scored(
+        e, _ivfpq_build(e, n), eval_thresh=thresh, nprobe=max(NPROBE_CURVE)
     ).localCheckpoint(eager=True)
     exact = (
         cosine_topk_fast_for(e, eval_thresh=thresh)
@@ -1079,56 +1009,25 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_nprobe_curve_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        COSINE_TOPK_SAMPLED_SQL,
-        PQ_ADC_SQL,
-        TOPK_K,
-        pq_sql_ctes,
-    )
-
-    final = iters + 1
     qp = eval_query_pred_sql("vec_id", "SELECT n FROM nk")
     probe_pred = eval_query_pred_sql("v.vec_id", "SELECT n FROM nk")
-    points = " UNION ALL ".join(
-        f"""
+
+    def point(p: int) -> str:
+        topk = rank_topk_sql(
+            f"pq_scored WHERE pr <= {p}", "pq_cosine", cols="query_id, cand_id"
+        )
+        return f"""
   SELECT CAST({p} AS BIGINT) AS nprobe, count(*) AS total_hits FROM (
-    SELECT query_id, cand_id FROM (
-      SELECT query_id, cand_id, row_number() OVER (
-        PARTITION BY query_id ORDER BY pq_cosine DESC, cand_id ASC) AS rank
-      FROM adc_scored WHERE pr <= {p})
-    WHERE rank <= {TOPK_K}) s
+{topk}) s
   WHERE EXISTS (SELECT 1 FROM exact_tk e
                 WHERE e.query_id = s.query_id AND e.cand_id = s.cand_id)"""
-        for p in NPROBE_CURVE
-    )
+
+    points = " UNION ALL ".join(point(p) for p in NPROBE_CURVE)
     return (
         _kmeans_ctes(k_mod, iters)
         + f""",
 {pq_sql_ctes(query_pred=qp)},
-ivf_lists AS MATERIALIZED (
-  SELECT vec_id, cluster_id AS list_id FROM a{final}
-),
-probes AS MATERIALIZED (
-  SELECT query_id, cluster_id AS list_id, r AS pr FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
-    FROM (
-      SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
-      FROM vecs v CROSS JOIN c{iters} c
-      WHERE {probe_pred}))
-  WHERE r <= {max(NPROBE_CURVE)}
-),
-adc_scored AS MATERIALIZED (
-  SELECT q.query_id, c.vec_id AS cand_id, p.pr,
-    {PQ_ADC_SQL}
-      / (q.q_norm * sqrt(c.recon_norm2)) AS pq_cosine
-  FROM codes c
-  JOIN ivf_lists l ON l.vec_id = c.vec_id
-  JOIN probes p ON p.list_id = l.list_id
-  JOIN luts q ON q.query_id = p.query_id
-  WHERE c.vec_id <> p.query_id
-),
+{ivfpq_scored_sql(probe_pred, iters, nprobe=max(NPROBE_CURVE))},
 exact_tk AS MATERIALIZED ({COSINE_TOPK_SAMPLED_SQL}),
 nqc AS (SELECT count(DISTINCT query_id) AS nq FROM exact_tk),
 curve AS ({points})
@@ -1160,36 +1059,17 @@ def ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Coarse probing measures FLOAT squared-L2 against the centroids
     (the index quantizes STORAGE, not the coarse metric — the FAISS
     contract), so probes reuse the flagship argmin/tie-break."""
-    from etl_addresses_spark.operators.similarity import (
-        sq8_codes,
-        sq8_int_dot,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
+    cents, lists = _ivf_coarse(e)
     qv = sq8_codes(e)
-    # probes: nprobe=2 nearest coarse cells per query, float metric
-    queries = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
+    queries = (
+        fan_out(e.select("vec_id", "embedding"), spark)
+        .filter(F.col("vec_id") % QUERY_MOD == 0)
+        .select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+        )
     )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", F.col("cent_id").alias("list_id"))
-    )
+    probes = _probe(queries, cents)
     q_codes = qv.select(
         F.col("vec_id").alias("query_id"),
         F.col("qe").alias("q_qe"),
@@ -1218,12 +1098,6 @@ def ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_sq8_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        SQ8_SQL_CTES,
-        TOPK_K,
-        sq8_int_dot_sql,
-    )
-
     final = iters + 1
     return (
         _kmeans_ctes(k_mod, iters)
@@ -1232,17 +1106,7 @@ def ann_ivf_sq8_oracle_sql(
 sq_lists AS MATERIALIZED (
   SELECT vec_id, cluster_id AS list_id FROM a{final}
 ),
-sq_probes AS MATERIALIZED (
-  SELECT query_id, cluster_id AS list_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
-    FROM (
-      SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
-      FROM vecs v CROSS JOIN c{iters} c
-      WHERE v.vec_id % {QUERY_MOD} = 0))
-  WHERE r <= 2
-),
+{ivf_probes_sql(iters=iters)},
 sq_scored AS (
   SELECT p.query_id, c.vec_id AS cand_id,
     CAST({sq8_int_dot_sql('q.qe', 'c.qe')} AS DOUBLE)
@@ -1250,15 +1114,11 @@ sq_scored AS (
       AS qcosine
   FROM qn c
   JOIN sq_lists l ON l.vec_id = c.vec_id
-  JOIN sq_probes p ON p.list_id = l.list_id
+  JOIN probes p ON p.list_id = l.list_id
   JOIN qn q ON q.vec_id = p.query_id
   WHERE c.vec_id <> p.query_id
 )
-SELECT query_id, rank, cand_id, qcosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY qcosine DESC, cand_id ASC) AS rank
-  FROM sq_scored)
-WHERE rank <= {TOPK_K}
+{rank_topk_sql('sq_scored', 'qcosine')}
 """
     )
 
@@ -1268,44 +1128,26 @@ def ann_ivf_lloyd_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Voronoi cell, queries probe the nprobe=2 nearest cells, candidates
     scored by exact cosine, top-10 per query."""
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    cents, _ = kmeans_fit(e, n=n)
-    # fan_out: both the corpus cell assignment and (below) the candidate
-    # scoring are k x d / |list| x d interpreted kernels over a
-    # bytes-small scan (see kmeans_fit)
+    cents, lists = _ivf_coarse(e)
+    # fan_out: the candidate scoring is a |list| x d interpreted kernel
+    # over a bytes-small scan (see kmeans_fit)
     vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    assigned = _assign(
-        vecs, cents, dense_kernel=use_unrolled_kernel(n)
-    ).select("vec_id", "embedding", F.col("cluster_id").alias("list_id"))
-    qnorm = F.sqrt(_pair_dot_seq(F.col("embedding"), F.col("embedding")))
+    assigned = vecs.join(lists, "vec_id")
     queries = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        qnorm.alias("q_norm"),
+        _norm_col(F.col("embedding")).alias("q_norm"),
     )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "q_emb",
-        "q_norm",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", "q_emb", "q_norm", F.col("cent_id").alias("list_id"))
-    )
+    probes = _probe(queries, cents, carry=("q_emb", "q_norm"))
     cand = assigned.join(probes, "list_id").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    cnorm = F.sqrt(_pair_dot_seq(F.col("embedding"), F.col("embedding")))
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("cand_id"),
         (
             _pair_dot_seq(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * cnorm)
+            / (F.col("q_norm") * _norm_col(F.col("embedding")))
         ).alias("cosine"),
     )
     return _rank_topk(scored)
@@ -1345,27 +1187,10 @@ def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked: the DuckDB twin widens the same scored CTE
     and re-scores with the same sequential-fold dot product, so the
     doubly-approximate candidate set AND the exact rerank both hash."""
-    from etl_addresses_spark.operators.similarity import TOPK_K, _norms
-
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
-    cands = _ivfpq_serve(
-        spark,
-        e,
-        cents,
-        lists,
-        pq_cents,
-        codes,
-        topk=TOPK_K * REFINE_K_FACTOR,
-    ).select("query_id", "cand_id")
+    cands = _ivfpq_serve(e, _ivfpq_build(e), k=TOPK_K * REFINE_K_FACTOR).select(
+        "query_id", "cand_id"
+    )
     # exact refine: fetch candidate embeddings with one narrow n-row
     # join (|queries| x k_factor*k pairs vs the corpus), broadcast the
     # query-side vectors, re-score with the exact sequential-fold
@@ -1399,51 +1224,22 @@ def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivfpq_refine_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        PQ_ADC_SQL,
-        TOPK_K,
-        _duckdb_dot,
-        pq_sql_ctes,
-    )
-
-    final = iters + 1
     dot_qc = _duckdb_dot("eq.embedding", "ec.embedding")
     norm_q = f"sqrt(CAST({_duckdb_dot('eq.embedding', 'eq.embedding')} AS DOUBLE))"
     norm_c = f"sqrt(CAST({_duckdb_dot('ec.embedding', 'ec.embedding')} AS DOUBLE))"
+    cand_r = rank_topk_sql(
+        "pq_scored",
+        "pq_cosine",
+        k=TOPK_K * REFINE_K_FACTOR,
+        cols="query_id, cand_id",
+    )
     return (
         _kmeans_ctes(k_mod, iters)
         + f""",
 {pq_sql_ctes()},
-ivf_lists AS MATERIALIZED (
-  SELECT vec_id, cluster_id AS list_id FROM a{final}
-),
-probes AS MATERIALIZED (
-  SELECT query_id, cluster_id AS list_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
-    FROM (
-      SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
-      FROM vecs v CROSS JOIN c{iters} c
-      WHERE v.vec_id % {QUERY_MOD} = 0))
-  WHERE r <= 2
-),
-pq_scored AS (
-  SELECT q.query_id, c.vec_id AS cand_id,
-    {PQ_ADC_SQL}
-      / (q.q_norm * sqrt(c.recon_norm2)) AS pq_cosine
-  FROM codes c
-  JOIN ivf_lists l ON l.vec_id = c.vec_id
-  JOIN probes p ON p.list_id = l.list_id
-  JOIN luts q ON q.query_id = p.query_id
-  WHERE c.vec_id <> p.query_id
-),
+{ivfpq_scored_sql(iters=iters)},
 cand_r AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY pq_cosine DESC, cand_id ASC) AS prank
-    FROM pq_scored)
-  WHERE prank <= {TOPK_K * REFINE_K_FACTOR}
+{cand_r}
 ),
 refined AS (
   SELECT cr.query_id, cr.cand_id,
@@ -1452,11 +1248,7 @@ refined AS (
   JOIN embeddings eq ON eq.vec_id = cr.query_id
   JOIN embeddings ec ON ec.vec_id = cr.cand_id
 )
-SELECT query_id, rank, cand_id, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rank
-  FROM refined)
-WHERE rank <= {TOPK_K}
+{rank_topk_sql('refined')}
 """
     )
 
@@ -1497,22 +1289,14 @@ def ann_index_merge_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for s in range(MERGE_SHARD_MOD):
         shard = e.filter(F.col("vec_id") % MERGE_SHARD_MOD == s)
         ns = shard.count()
-        dense_s = use_unrolled_kernel(ns)
-        lists_parts.append(
-            _assign(
-                fan_out(shard.select("vec_id", "embedding"), spark),
-                cents,
-                attach_embedding=False,
-                dense_kernel=dense_s,
-            ).select("vec_id", F.col("cluster_id").alias("list_id"))
-        )
+        lists_parts.append(_ivf_lists(shard, cents, ns))
         codes_parts.append(pq_encode(shard, pq_cents, n_hint=ns))
     lists = lists_parts[0]
     codes = codes_parts[0]
     for lp, cp in zip(lists_parts[1:], codes_parts[1:]):
         lists = lists.unionByName(lp)
         codes = codes.unionByName(cp)
-    return _ivfpq_serve(spark, e, cents, lists, pq_cents, codes)
+    return _ivfpq_serve(e, (cents, lists, pq_cents, codes))
 
 
 def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1536,99 +1320,18 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked: the DuckDB twin adds the same label-equality
     join to the scored CTE of the shared IVF-PQ oracle."""
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
-    labels = e.select("vec_id", "label")
-    luts = pq_query_luts(e, pq_cents)
-    queries = fan_out(
-        e.select("vec_id", "embedding", "label"), spark
-    ).filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        "label",
-    )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "label",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", "label", F.col("cent_id").alias("list_id"))
-    )
-    probe_luts = probes.join(luts, "query_id")
-    # the label rides the broadcast side and joins as a KEY next to
-    # list_id: the tenant constraint is enforced inside the hash join
-    cand = (
-        fan_out(codes.join(lists, "vec_id").join(labels, "vec_id"), spark)
-        .join(F.broadcast(probe_luts), ["list_id", "label"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        (
-            pq_adc_expr() / (F.col("q_norm") * F.sqrt(F.col("recon_norm2")))
-        ).alias("pq_cosine"),
-    )
-    return _rank_topk(scored, "pq_cosine")
+    return _ivfpq_serve(e, _ivfpq_build(e), key="label")
 
 
 def ann_filtered_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        PQ_ADC_SQL,
-        TOPK_K,
-        pq_sql_ctes,
-    )
-
-    final = iters + 1
     return (
         _kmeans_ctes(k_mod, iters)
         + f""",
 {pq_sql_ctes()},
-ivf_lists AS MATERIALIZED (
-  SELECT vec_id, cluster_id AS list_id FROM a{final}
-),
-probes AS MATERIALIZED (
-  SELECT query_id, cluster_id AS list_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
-    FROM (
-      SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
-      FROM vecs v CROSS JOIN c{iters} c
-      WHERE v.vec_id % {QUERY_MOD} = 0))
-  WHERE r <= 2
-),
-scored AS (
-  SELECT q.query_id, c.vec_id AS cand_id,
-    {PQ_ADC_SQL}
-      / (q.q_norm * sqrt(c.recon_norm2)) AS pq_cosine
-  FROM codes c
-  JOIN ivf_lists l ON l.vec_id = c.vec_id
-  JOIN probes p ON p.list_id = l.list_id
-  JOIN luts q ON q.query_id = p.query_id
-  JOIN embeddings ql ON ql.vec_id = p.query_id
-  JOIN embeddings cl ON cl.vec_id = c.vec_id AND cl.label = ql.label
-  WHERE c.vec_id <> p.query_id
-)
-SELECT query_id, rank, cand_id, pq_cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY pq_cosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{ivfpq_scored_sql(iters=iters, key="label")}
+{rank_topk_sql('pq_scored', 'pq_cosine')}
 """
     )
 

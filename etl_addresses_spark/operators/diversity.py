@@ -32,7 +32,7 @@ Both iterate a FIXED number of steps, so the whole recursion unrolls
 into chained MATERIALIZED CTEs for the DuckDB oracle (the
 pagerank/kmeans/labelprop technique).  Bit-exactness story: cosine
 similarity is the shared sequential-fold dot product
-(similarity._pair_dot_seq vs similarity._duckdb_dot — identical fold
+(vectors._pair_dot_seq vs vectors._duckdb_dot — identical fold
 order, identical doubles); per-step scores combine those doubles with
 single multiplies/adds in the same association order both sides; max
 over a set of identical doubles is exact; every argmax/argmin
@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from etl_addresses_spark.ckpt import CheckpointChain
 from etl_addresses_spark.functions.sizing import loop_partitions
 from etl_addresses_spark.session import scoped_shuffle_partitions
-from etl_addresses_spark.operators.similarity import (
+from etl_addresses_spark.functions.vectors import (
     _duckdb_dot,
     _norm_col,
     _pair_dot_seq,

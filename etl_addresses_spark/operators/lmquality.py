@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_addresses_spark.operators.similarity import (
+from etl_addresses_spark.functions.vectors import (
     _duckdb_dot,
     _norm_col,
     _pair_dot_seq,

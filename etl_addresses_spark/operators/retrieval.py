@@ -26,17 +26,39 @@ surface; this row extends the LLM-data-pipeline family
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import window as W
 
-from etl_addresses_spark.operators.llmtext import BM25_SCORED_CTES, bm25_scored
-from etl_addresses_spark.operators.similarity import (
+from etl_addresses_spark.functions.vectors import (
     _duckdb_dot,
+    _duckdb_sqdist,
     _norm_col,
     _pair_dot_seq,
+    _sqdist,
 )
-from etl_addresses_spark.sources.tables import load_table
+from etl_addresses_spark.operators.clustering import (
+    DEFAULT_ITERS,
+    NPROBE,
+    _ivfpq_build,
+    _kmeans_ctes,
+    ann_ivf_pq_oracle_sql,
+    ann_ivf_pq_topk,
+)
+from etl_addresses_spark.operators.llmtext import BM25_SCORED_CTES, bm25_scored
+from etl_addresses_spark.operators.similarity import (
+    COSINE_TOPK_SAMPLED_SQL,
+    PQ_ADC_SQL,
+    PQ_SQL_CTES,
+    TOPK_K,
+    cosine_topk_fast_for,
+    eval_query_sample_thresh,
+    pq_adc_expr,
+    pq_query_luts,
+)
+from etl_addresses_spark.sources.tables import fan_out, load_table
 
 RRF_K = 60          # the canonical RRF constant
 RRF_CAND = 100      # per-signal candidate-list length
@@ -161,35 +183,13 @@ def rrf_hybrid_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin reuses the kmeans CTE unroll + PQ_SQL_CTES + BM25 CTEs
     verbatim.  Output: doc_id, (nullable) bm25_rank / vec_rank, rrf.
     """
-    from etl_addresses_spark.operators.clustering import (
-        _assign,
-        _sqdist,
-        kmeans_fit,
-    )
-    from etl_addresses_spark.operators.similarity import (
-        pq_adc_expr,
-        pq_codebook,
-        pq_encode,
-        pq_query_luts,
-    )
-    from etl_addresses_spark.sources.tables import fan_out
-
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
 
     bm25_top = _ranked_top(bm25_scored(d), "bm25", "bm25_rank")
 
-    from etl_addresses_spark.functions.sizing import use_unrolled_kernel
-
-    n = e.count()
-    cents, _ = kmeans_fit(e, n=n)
+    cents, lists, pq_cents, codes = _ivfpq_build(e)
     vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False,
-        dense_kernel=use_unrolled_kernel(n),
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
     # RRF_QUERY_VEC = 0 satisfies the % QUERY_MOD query rule, so the
     # shared LUT builder applies — restricted to the ONE query BEFORE
     # the M x codewords LUT construction (r12 advice: a post-build
@@ -208,7 +208,7 @@ def rrf_hybrid_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
         )
         .orderBy(F.asc("d2"), F.asc("list_id"))
-        .limit(2)
+        .limit(NPROBE)
         .select("list_id")
     )
     probe_luts = probes.crossJoin(F.broadcast(luts))  # 2 rows + LUT
@@ -240,16 +240,6 @@ def rrf_hybrid_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def rrf_hybrid_ivfpq_oracle_sql() -> str:
-    from etl_addresses_spark.operators.clustering import (
-        DEFAULT_ITERS,
-        _duckdb_sqdist,
-        _kmeans_ctes,
-    )
-    from etl_addresses_spark.operators.similarity import (
-        PQ_ADC_SQL,
-        PQ_SQL_CTES,
-    )
-
     final = DEFAULT_ITERS + 1
     return (
         _kmeans_ctes()
@@ -265,7 +255,7 @@ vprobes AS (
            {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
     FROM vecs v CROSS JOIN c{DEFAULT_ITERS} c
     WHERE v.vec_id = {RRF_QUERY_VEC})
-  ORDER BY d2 ASC, list_id ASC LIMIT 2
+  ORDER BY d2 ASC, list_id ASC LIMIT {NPROBE}
 ),
 vscored AS (
   SELECT c.vec_id AS doc_id,
@@ -309,10 +299,6 @@ def _ndcg_constants() -> tuple[list[float], float]:
     computes it; they consume the identical double constants (repr
     round-trips shortest-exact).  IDCG folds left-to-right like every
     other sum here."""
-    import math
-
-    from etl_addresses_spark.operators.similarity import TOPK_K
-
     discounts = [1.0 / math.log2(r + 1) for r in range(1, TOPK_K + 1)]
     idcg = 0.0
     for r, disc in enumerate(discounts, start=1):
@@ -338,13 +324,6 @@ def ndcg_eval_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact baseline is corpus-linear per query, so past the
     threshold BOTH sides grade the same fixed-size Knuth query sample
     — non-binding at every committed fixture, O(n) eval past it."""
-    from etl_addresses_spark.operators.clustering import ann_ivf_pq_topk
-    from etl_addresses_spark.operators.similarity import (
-        TOPK_K,
-        cosine_topk_fast_for,
-        eval_query_sample_thresh,
-    )
-
     discounts, idcg = _ndcg_constants()
     e = load_table(spark, sf_dir, "embeddings")
     thresh = eval_query_sample_thresh(e.count())
@@ -392,14 +371,6 @@ def ndcg_eval_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ndcg_eval_ivfpq_oracle_sql() -> str:
-    from etl_addresses_spark.operators.clustering import (
-        ann_ivf_pq_oracle_sql,
-    )
-    from etl_addresses_spark.operators.similarity import (
-        COSINE_TOPK_SAMPLED_SQL,
-        TOPK_K,
-    )
-
     discounts, idcg = _ndcg_constants()
 
     def dbl(v: float) -> str:

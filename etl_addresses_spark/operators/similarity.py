@@ -1,6 +1,6 @@
 """Embedding similarity search over array<float> columns.
 
-Three tiers:
+Four tiers:
 
 * `cosine_topk`        — brute-force exact top-k for a deterministic
                          query subset.  Dot products and squared norms
@@ -32,6 +32,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, Window as W
 
 from etl_addresses_spark.functions.hashing import knuth_order_col, knuth_order_sql
+from etl_addresses_spark.functions.sizing import use_unrolled_kernel
+from etl_addresses_spark.functions.vectors import (
+    _duckdb_dot,
+    _duckdb_sqdist,
+    _norm_col,
+    _pair_dot_seq,
+    _sqdist,
+    _sqdist_unrolled,
+)
 from etl_addresses_spark.sources.tables import fan_out, load_table
 
 TOPK_K = 10
@@ -102,47 +111,8 @@ def eval_query_pred_sql(id_expr: str, n_sql: str) -> str:
     )
 
 
-def _pair_dot_seq(emb_a: F.Column, emb_b: F.Column) -> F.Column:
-    """Bit-reproducible dot product of two float vectors: per-element
-    double products (float->double exact) summed with a SEQUENTIAL
-    left fold.  DuckDB's list_reduce folds in the same order, so both
-    engines produce the identical double.  (A decimal accumulation was
-    tried first, but DuckDB's DECIMAL->DOUBLE cast is not correctly
-    rounded and diverges from the JVM's by 1 ulp.  An unrolled flat
-    64-term chain was tried too — measured 3x SLOWER than this fold:
-    64 GetArrayItem nodes each pay a null+bounds check, while
-    zip_with/aggregate make one primitive-array traversal.)"""
-    prods = F.zip_with(
-        emb_a,
-        emb_b,
-        lambda x, y: x.cast("double") * y.cast("double"),
-    )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _norms(e: DataFrame) -> DataFrame:
-    return e.select(
-        "vec_id",
-        F.sqrt(_pair_dot_seq(F.col("embedding"), F.col("embedding"))).alias(
-            "norm"
-        ),
-    )
-
-
-# DuckDB rendering of the same sequential-fold dot product for lists
-# a/b: list_reduce folds left-to-right exactly like Spark's aggregate
-# (the extra leading +0.0 in Spark's fold is an IEEE no-op).
-def _duckdb_dot(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-        f"(x, y) -> x + y)"
-    )
-
-
-def _norm_col(c: F.Column) -> F.Column:
-    """sqrt of the sequential-fold self dot product (see _pair_dot_seq)."""
-    return F.sqrt(_pair_dot_seq(c, c))
+    return e.select("vec_id", _norm_col(F.col("embedding")).alias("norm"))
 
 
 def _rank_topk(
@@ -158,6 +128,28 @@ def _rank_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "cand_id", score_col)
     )
+
+
+def rank_topk_sql(
+    src: str,
+    score: str = "cosine",
+    k: int = TOPK_K,
+    cols: str | None = None,
+    part: str = "query_id",
+    keep: str | None = None,
+) -> str:
+    """DuckDB twin of `_rank_topk`: row_number per `part` over (score
+    DESC, cand_id ASC), cut at rank <= k.  `src` is the scored
+    relation (a CTE name, optionally with a WHERE); `cols` and `keep`
+    replace the projection and the cut for consumers that reshape the
+    ranked rows (the contrastive miner's per-role cuts)."""
+    cols = cols or f"query_id, rank, cand_id, {score}"
+    keep = keep or f"rank <= {k}"
+    return f"""SELECT {cols} FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY {part} ORDER BY {score} DESC, cand_id ASC) AS rank
+  FROM {src})
+WHERE {keep}"""
 
 
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,11 +217,7 @@ scored AS (
   FROM norms c CROSS JOIN queries q
   WHERE c.vec_id <> q.query_id
 )
-SELECT query_id, rank, cand_id, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{rank_topk_sql('scored')}
 """
 
 
@@ -665,11 +653,7 @@ scored AS (
   FROM assigned a JOIN probes p ON a.list_id = p.list_id
   WHERE a.vec_id <> p.query_id
 )
-SELECT query_id, rank, cand_id, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{rank_topk_sql('scored')}
 """
 
 
@@ -784,11 +768,7 @@ scored AS (
   FROM qn c CROSS JOIN queries q
   WHERE c.vec_id <> q.query_id
 )
-SELECT query_id, rank, cand_id, qcosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY qcosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{rank_topk_sql('scored', 'qcosine')}
 """
 
 
@@ -844,33 +824,6 @@ PQ_SUB = EMB_DIM // PQ_M
 # a FORMAT constant (FAISS nbits=8), not a tuning knob; deriving it
 # from the corpus would change the code width.
 PQ_MAX_CODEWORDS = 256
-
-
-def _sq_l2_seq(a: F.Column, b: F.Column) -> F.Column:
-    """Sequential-fold squared L2 distance (same parity contract as
-    `_pair_dot_seq`: per-element doubles, left fold)."""
-    diffs = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _sq_l2_unrolled(a: F.Column, b: F.Column, dim: int) -> F.Column:
-    """BIT-IDENTICAL twin of `_sq_l2_seq` for fixed-width sub-vectors:
-    the same left-associated 0.0 + d1 + ... sequence as a flat
-    element_at chain — no per-pair intermediate array.  Used ONLY in
-    the PQ encode argmin (480k exploded sub-vectors x 256 codewords at
-    the 30x replica: 10.25 -> 4.11 s measured); see
-    clustering._sqdist_unrolled for the full fold-vs-unrolled shape
-    rule and the counter-case where unrolling loses 9x."""
-    expr = F.lit(0.0)
-    for i in range(1, dim + 1):
-        diff = F.element_at(a, i).cast("double") - F.element_at(b, i).cast(
-            "double"
-        )
-        expr = expr + diff * diff
-    return expr
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -950,13 +903,11 @@ def pq_encode(
     Past the sizing.use_unrolled_kernel crossover the sq-l2 kernel
     swaps to the bit-identical unrolled chain (n_hint avoids a second
     count when the caller already has one)."""
-    from etl_addresses_spark.functions.sizing import use_unrolled_kernel
-
     n = n_hint if n_hint is not None else e.count()
     kern = (
-        (lambda a, b: _sq_l2_unrolled(a, b, PQ_SUB))
+        (lambda a, b: _sqdist_unrolled(a, b, PQ_SUB))
         if use_unrolled_kernel(n)
-        else _sq_l2_seq
+        else _sqdist
     )
     # fan_out: encode is M x k sq-l2 folds per row; the scan is
     # bytes-small (r9 batch7)
@@ -1079,15 +1030,6 @@ def ann_pq_topk_for(e: DataFrame, centroid_mod: int = 100) -> DataFrame:
     return _rank_topk(scored, "pq_cosine")
 
 
-def _duckdb_sq_l2(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
-        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))), "
-        f"(x, y) -> x + y)"
-    )
-
-
 # The PQ pipeline's oracle CTE block (codebook -> encode -> per-query
 # LUTs), shared verbatim by ANN_PQ_TOPK_SQL (brute ADC over all codes)
 # and clustering.ann_ivf_pq_oracle_sql (ADC over IVF candidates only).
@@ -1130,7 +1072,7 @@ best AS (
   SELECT vec_id, m, cidx, cw_norm2 FROM (
     SELECT s.vec_id, s.m, cb.cidx, cb.cw_norm2,
       row_number() OVER (PARTITION BY s.vec_id, s.m
-        ORDER BY {_duckdb_sq_l2('s.sv', 'cb.cw')} ASC, cb.cidx ASC) AS r
+        ORDER BY {_duckdb_sqdist('s.sv', 'cb.cw')} ASC, cb.cidx ASC) AS r
     FROM subvecs s JOIN codebook cb ON s.m = cb.m)
   WHERE r = 1
 ),
@@ -1179,11 +1121,7 @@ scored AS (
   FROM codes c CROSS JOIN luts q
   WHERE c.vec_id <> q.query_id
 )
-SELECT query_id, rank, cand_id, pq_cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY pq_cosine DESC, cand_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOPK_K}
+{rank_topk_sql('scored', 'pq_cosine')}
 """
 
 
@@ -1286,18 +1224,14 @@ scored AS (
       / (a.q_norm * c.norm) AS cosine
   FROM sides c CROSS JOIN anchors a
   WHERE c.vec_id <> a.query_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id, is_pos ORDER BY cosine DESC, cand_id ASC) AS rank
-  FROM scored
 )
-SELECT query_id,
-  CASE WHEN is_pos THEN 'positive' ELSE 'negative' END AS role,
-  rank, cand_id, cosine
-FROM ranked
-WHERE (is_pos AND rank = 1) OR ((NOT is_pos) AND rank <= {HARD_NEG_K})
-"""
+""" + rank_topk_sql(
+    "scored",
+    cols="query_id, CASE WHEN is_pos THEN 'positive' ELSE 'negative' END AS role,"
+    " rank, cand_id, cosine",
+    part="query_id, is_pos",
+    keep=f"(is_pos AND rank = 1) OR ((NOT is_pos) AND rank <= {HARD_NEG_K})",
+) + "\n"
 
 
 # --- recall evaluation as data -------------------------------------------

@@ -23,14 +23,11 @@ replaced):
   of all surviving matches and the argmin is EXACT (SURVEY.md §4.3).
   The house numbers are scanned once and never shuffled in the
   broadcast tier.
-* **broadcast**: the same in-row argmin over a single index row holding
-  every segment, cross-joined by broadcast (correct at any scale where
-  the segment side fits in memory; used for parity tests).
 * **reference_knn / reference_knn_grid**: STRICT reference-parity
   candidates ranked by windows, so these emit candidate rows and take
   a `min(struct)` groupBy joined back to the house numbers.
 
-The grid/broadcast argmin (addresses.js:83-90) is computed inside the
+The grid argmin (addresses.js:83-90) is computed inside the
 house-number row: `array_min` over the structs
 (distance, streetId, seg_index, streetName) of the list's segments that
 pass the bbox and temporal filter and then the 25 m cutoff.  The trig
@@ -200,22 +197,14 @@ def _segment_index(segs: DataFrame) -> DataFrame:
     )
 
 
-def _probe(hn: DataFrame, segs: DataFrame, strategy: str) -> DataFrame:
-    """Every house number, once, with `segs`: the segments that may
-    match it."""
-    if strategy == "grid":
-        # Left equi-join on the point's cell: Catalyst picks
-        # broadcast-hash when the index is small, shuffle-hash/sort-merge
-        # otherwise; AQE splits skewed cells (dense urban areas).
-        cells = hn.withColumn("cell", point_cell(F.col("pt_lat"), F.col("pt_lon")))
-        return cells.join(_segment_index(segs), "cell", "left")
-    # broadcast: a single index row holding every segment
-    every = segs.agg(F.collect_list(F.struct(*segs.columns)).alias("segs"))
-    return hn.crossJoin(F.broadcast(every))
-
-
-def _match_in_row(hn: DataFrame, segs: DataFrame, strategy: str) -> DataFrame:
-    probed = _probe(hn, segs, strategy)
+def _match_in_row(hn: DataFrame, segs: DataFrame) -> DataFrame:
+    """Every house number, once, with `segs` (the segments of its grid
+    cell) and the argmin over them."""
+    # Left equi-join on the point's cell: Catalyst picks broadcast-hash
+    # when the index is small, shuffle-hash/sort-merge otherwise; AQE
+    # splits skewed cells (dense urban areas).
+    cells = hn.withColumn("cell", point_cell(F.col("pt_lat"), F.col("pt_lon")))
+    probed = cells.join(_segment_index(segs), "cell", "left")
     # Cheap-before-expensive cascade (addresses.js:66-82): the trig
     # runs only on the bbox+temporal survivors of the inner filter.
     near = F.filter("segs", lambda s: _in_bbox(s.getField) & _in_time(s.getField))
@@ -387,8 +376,8 @@ def infer_addresses(
     hn = _prepare_house_numbers(house_numbers)
     segs = _prepare_segments(streets)
 
-    if strategy in ("grid", "broadcast"):
-        joined = _match_in_row(hn, segs, strategy)
+    if strategy == "grid":
+        joined = _match_in_row(hn, segs)
     else:
         joined = _match_by_candidates(hn, segs, strategy)
 

@@ -60,8 +60,8 @@ class Entry:
     # single-tier demonstration) and are NOT the recommended plan —
     # ledgers and verdicts separate the two (r7 verdict item 5).
     # Strategy VARIANTS that are function parameters rather than
-    # registry rows (flagship's broadcast/reference_knn) are already
-    # outside the registry and need no tag.
+    # registry rows (the flagship's reference_knn) are already outside
+    # the registry and need no tag.
     tier: str = "product"
 
 

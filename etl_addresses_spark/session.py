@@ -10,7 +10,10 @@ Python workers import the package from this checkout, whatever the
 process's working directory.
 
 Rows that stage files put them under `scratch_dir`, which lives in the
-application's own SparkFiles root.
+application's own SparkFiles root.  Nothing writes to the SQL
+warehouse; it points at one fixed directory under the system temp dir
+rather than Spark's default `./spark-warehouse`, which every session
+would otherwise create in its caller's working directory.
 
 Environment: SPARK_GRAFT_CPUS (local[N], default 32),
 SPARK_GRAFT_SHUFFLE_PARTITIONS (default: the CPU count) and
@@ -21,11 +24,13 @@ from __future__ import annotations
 
 import hashlib
 import os
+import tempfile
 
 from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 _CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WAREHOUSE = os.path.join(tempfile.gettempdir(), "spark-graft-warehouse")
 
 
 def get_spark(app_name: str = "etl_addresses_spark") -> SparkSession:
@@ -55,6 +60,7 @@ def get_spark(app_name: str = "etl_addresses_spark") -> SparkSession:
         # the Python workers of the UDF rows import etl_addresses_spark;
         # Spark merges this with its own and the process's PYTHONPATH
         .config("spark.executorEnv.PYTHONPATH", _CHECKOUT)
+        .config("spark.sql.warehouse.dir", _WAREHOUSE)
     )
     return builder.getOrCreate()
 

@@ -126,43 +126,35 @@ def test_ivf_list_count_derivation(spark):
 
 
 def test_unrolled_kernels_bit_equal_fold(spark):
-    """The unrolled element_at chains used in the broadcast-argmin
-    kernels must be BIT-identical to the sequential folds they replace
+    """The unrolled element_at chain used in the broadcast-argmin
+    kernels must be BIT-identical to the sequential fold it replaces
     (same left-association, term for term) — row-wise equality on the
-    fixture, not just aggregate equality."""
+    fixture, not just aggregate equality — at both widths it runs at:
+    whole embeddings (corpus x centroid assignment) and PQ sub-vectors
+    (PQ encode)."""
     from pyspark.sql import functions as F
 
+    from etl_addresses_spark.functions.vectors import _sqdist, _sqdist_unrolled
     from etl_addresses_spark.operators.similarity import (
         EMB_DIM,
         PQ_SUB,
         _pq_sub_expr,
-        _sq_l2_seq,
-        _sq_l2_unrolled,
     )
 
     e = load_table(spark, SF_ORACLE, "embeddings")
-    pairs = e.select(
-        "embedding", F.reverse(F.col("embedding")).alias("other")
-    )
-    bad = pairs.filter(
-        ~(
-            clustering._sqdist(F.col("embedding"), F.col("other"))
-            == clustering._sqdist_unrolled(
-                F.col("embedding"), F.col("other"), EMB_DIM
+    whole = e.select("embedding")
+    subs = e.select(F.posexplode(_pq_sub_expr()).alias("m", "embedding"))
+    for vecs, dim in ((whole, EMB_DIM), (subs, PQ_SUB)):
+        pairs = vecs.select(
+            "embedding", F.reverse(F.col("embedding")).alias("other")
+        )
+        bad = pairs.filter(
+            ~(
+                _sqdist(F.col("embedding"), F.col("other"))
+                == _sqdist_unrolled(F.col("embedding"), F.col("other"), dim)
             )
-        )
-    ).count()
-    assert bad == 0
-    subs = e.select(F.posexplode(_pq_sub_expr()).alias("m", "sv")).select(
-        "sv", F.reverse(F.col("sv")).alias("other")
-    )
-    bad = subs.filter(
-        ~(
-            _sq_l2_seq(F.col("sv"), F.col("other"))
-            == _sq_l2_unrolled(F.col("sv"), F.col("other"), PQ_SUB)
-        )
-    ).count()
-    assert bad == 0
+        ).count()
+        assert bad == 0, dim
 
 
 def test_index_persist_serve_identity(spark):

@@ -10,11 +10,6 @@ def test_flagship_matches_oracle_grid(spark, ddb):
     assert_frames_match(sdf, ddb.sql(flagship.ORACLE_SQL))
 
 
-def test_flagship_matches_oracle_broadcast(spark, ddb):
-    sdf = flagship.spatiotemporal_join(spark, SF_ORACLE, strategy="broadcast")
-    assert_frames_match(sdf, ddb.sql(flagship.ORACLE_SQL))
-
-
 def test_flagship_matches_oracle_reference_knn(spark, ddb):
     sdf = flagship.spatiotemporal_join_knn(spark, SF_ORACLE)
     assert_frames_match(sdf, ddb.sql(flagship.ORACLE_SQL_KNN))

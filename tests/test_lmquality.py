@@ -106,7 +106,7 @@ def test_semantic_dedup_respects_threshold(spark):
     # cluster member with cosine >= threshold
     import pyspark.sql.functions as F
 
-    from etl_addresses_spark.operators.similarity import _pair_dot_seq
+    from etl_addresses_spark.functions.vectors import _pair_dot_seq
     from etl_addresses_spark.sources.tables import load_table
 
     out = semantic_dedup(spark, SF_ORACLE)

@@ -2,10 +2,9 @@
 
 Generates N house-number points and M streets directly from
 spark.range (same derivation family as sources/fixtures.py, denser
-grid), then times the grid-cell strategy vs the broadcast cross-join
-baseline.  This is the experiment behind SCALE.md's claim that the
-grid join is the 100 TB path: the broadcast tier degrades with
-points x segments while the grid tier stays ~linear in points.
+grid), then times the grid-cell join (best of two noop-sink runs):
+the experiment behind SCALE.md's claim that the grid join stays
+~linear in points.
 
     python tools/stress_spatial.py [n_points [n_streets]]
 """
@@ -97,12 +96,11 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     m = int(sys.argv[2]) if len(sys.argv) > 2 else 50_000
     run("grid", 10_000, 1_000)  # JVM/codegen warmup
-    for strategy in ("grid", "broadcast"):
-        best = min(run(strategy, n, m) for _ in range(2))
-        print(
-            f"strategy={strategy} points={n} streets={m} "
-            f"sec={best:.1f} pts/sec={n / best:,.0f}"
-        )
+    best = min(run("grid", n, m) for _ in range(2))
+    print(
+        f"strategy=grid points={n} streets={m} "
+        f"sec={best:.1f} pts/sec={n / best:,.0f}"
+    )
 
 
 def flip_main() -> None:
