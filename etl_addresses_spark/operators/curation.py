@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.operators.dedup import CORPUS_CTE, corpus_df
 from etl_addresses_spark.sources.tables import load_table
 
 # Two lowercase hex chars of an md5 prefix compare lexicographically in
@@ -550,7 +551,6 @@ def pipeline_curate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     input of the next, and all of it is integer arithmetic — the
     oracle replays the full chain exactly.
     """
-    from etl_addresses_spark.operators.dedup import corpus_df
     from etl_addresses_spark.operators.llmtext import _EVAL_MOD, _STOPWORDS
 
     c = corpus_df(spark, sf_dir)
@@ -615,16 +615,7 @@ def pipeline_curate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_CURATE_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000000 AS doc_id,
-         text || ' nd' || CAST(doc_id % 97 AS VARCHAR) AS text
-  FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id + 20000000 AS doc_id, text FROM documents WHERE doc_id % 4 = 0
-),
+PIPELINE_CURATE_SQL = "WITH " + CORPUS_CTE.strip() + """,
 q AS (
   SELECT doc_id, text, len(string_split(text, ' ')) AS n,
     CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)

@@ -34,6 +34,8 @@ on both engines (hash quality is unchanged: md5 bits are uniform).
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,41 +51,46 @@ LSH_BANDS = 16  # 16 bands x 4 rows
 LSH_ROWS = MINHASH_PERMS // LSH_BANDS
 
 
-def corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + injected duplicates (deterministic, SQL-mirrored):
-    every doc_id % 3 == 0 gains a near-dup copy (suffix appended) at
+def _dup_copies(d: DataFrame) -> DataFrame:
+    """The injected duplicates of the (doc_id, text) frame `d`: every
+    doc_id % 3 == 0 gains a near-dup copy (suffix appended) at
     id+10000000; every doc_id % 4 == 0 gains an exact copy at
-    id+20000000."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    id+20000000.  DuckDB twin: DUP_COPIES_SQL."""
     # The appended marker word varies per doc (doc_id % 97): a constant
     # suffix would put one white-hot shingle in EVERY near-dup copy and
     # the inverted-index self-join would build a dense clique of
     # candidate pairs around it (measured ~10M pairs at sf0.1).
-    near = (
-        d.filter(F.col("doc_id") % 3 == 0)
-        .select(
-            (F.col("doc_id") + 10000000).alias("doc_id"),
-            F.concat(
-                F.col("text"), F.lit(" nd"), (F.col("doc_id") % 97).cast("string")
-            ).alias("text"),
-        )
+    near = d.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + 10000000).alias("doc_id"),
+        F.concat(
+            F.col("text"), F.lit(" nd"), (F.col("doc_id") % 97).cast("string")
+        ).alias("text"),
     )
-    exact = (
-        d.filter(F.col("doc_id") % 4 == 0)
-        .select((F.col("doc_id") + 20000000).alias("doc_id"), F.col("text"))
+    exact = d.filter(F.col("doc_id") % 4 == 0).select(
+        (F.col("doc_id") + 20000000).alias("doc_id"), F.col("text")
     )
-    return d.unionByName(near).unionByName(exact)
+    return near.unionByName(exact)
 
 
-CORPUS_CTE = """
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
+def corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents + injected duplicates (deterministic, SQL-mirrored by
+    CORPUS_CTE).  Catalyst flattens the nested union, so the plan
+    scans three branches of one union."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.unionByName(_dup_copies(d))
+
+
+DUP_COPIES_SQL = """
   SELECT doc_id + 10000000 AS doc_id,
          text || ' nd' || CAST(doc_id % 97 AS VARCHAR) AS text
   FROM documents WHERE doc_id % 3 = 0
   UNION ALL
-  SELECT doc_id + 20000000 AS doc_id, text FROM documents WHERE doc_id % 4 = 0
+  SELECT doc_id + 20000000 AS doc_id, text FROM documents WHERE doc_id % 4 = 0"""
+
+CORPUS_CTE = f"""
+corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL{DUP_COPIES_SQL}
 )
 """
 
@@ -176,7 +183,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ngram_jaccard_pairs_for(corpus: DataFrame) -> DataFrame:
-    """All doc pairs with word-3-shingle Jaccard >= 0.5, computed
+    """All doc pairs with word-3-shingle Jaccard >= JACCARD_THRESHOLD, computed
     exactly via the inverted-index self-join (pairs only materialize
     for docs sharing at least one shingle).
 
@@ -195,7 +202,6 @@ def ngram_jaccard_pairs_for(corpus: DataFrame) -> DataFrame:
     layout; both formulations emit the identical O(k^2)-per-shingle
     pair stream, so nothing at-scale is lost."""
     sh = _shingles(corpus).cache()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
     common = (
@@ -206,11 +212,34 @@ def ngram_jaccard_pairs_for(corpus: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+    return _verified(common, sh, "doc_a", "doc_b").select(
+        "doc_a", "doc_b", "common", "sz_a", "sz_b", "jaccard"
+    )
+
+
+def _candidate_overlap(cand: DataFrame, sh: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, common): the shared-shingle count of each candidate pair
+    in `cand`, by joining the pair with both docs' shingle sets — cost
+    is |candidates| * avg shingles, independent of corpus²."""
+    return (
+        cand.join(sh.select(F.col("doc_id").alias(a), "shingle"), a)
+        .join(sh.select(F.col("doc_id").alias(b), "shingle"), [b, "shingle"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+
+
+def _verified(common: DataFrame, sh: DataFrame, a: str, b: str) -> DataFrame:
+    """Exact-Jaccard verification: the (a, b, common) pair counts joined
+    to both docs' shingle-set sizes (sz_a, sz_b), keeping pairs whose
+    jaccard = common / (sz_a + sz_b - common) reaches JACCARD_THRESHOLD.
+    DuckDB twin: `_verified_sql`."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    sa = sizes.select(F.col("doc_id").alias(a), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias(b), F.col("sz").alias("sz_b"))
+    return (
+        common.join(sa, a)
+        .join(sb, b)
         .withColumn(
             "jaccard",
             F.col("common").cast("double")
@@ -218,29 +247,52 @@ def ngram_jaccard_pairs_for(corpus: DataFrame) -> DataFrame:
         )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
-    return jac.select("doc_a", "doc_b", "common", "sz_a", "sz_b", "jaccard")
 
 
-NGRAM_JACCARD_SQL = (
-    "WITH " + CORPUS_CTE.strip() + """,
-words AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
+# The DuckDB twin of `_shingles` over the `corpus` CTE: distinct
+# word-3-shingles per doc.
+SHINGLES_CTE = """words AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
 sh AS (
   SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
   FROM words, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+)"""
+
+
+def _verified_sql(a: str, b: str) -> str:
+    """`sizes` and `verified` CTEs, the DuckDB twin of `_verified` over
+    a `common` CTE of (a, b, common) pair counts and the `sh` shingles."""
+    return f"""sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+verified AS (
+  SELECT {a}, {b}, common, sa.sz AS sz_a, sb.sz AS sz_b,
+         CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) AS jaccard
+  FROM common
+  JOIN sizes sa ON sa.doc_id = {a}
+  JOIN sizes sb ON sb.doc_id = {b}
+  WHERE CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) >= {JACCARD_THRESHOLD}
+)"""
+
+
+# corpus -> shingles -> inverted-index self-join -> verified pairs: the
+# DuckDB twin of ngram_jaccard_pairs_for, shared by its row and the
+# dup-pair graph of the cluster oracles
+NGRAM_VERIFIED_CTES = (
+    CORPUS_CTE.strip()
+    + ",\n"
+    + SHINGLES_CTE
+    + """,
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, common, sa.sz AS sz_a, sb.sz AS sz_b,
-       CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) >= 0.5
+),
 """
+    + _verified_sql("doc_a", "doc_b")
+)
+
+NGRAM_JACCARD_SQL = (
+    "WITH "
+    + NGRAM_VERIFIED_CTES
+    + "\nSELECT doc_a, doc_b, common, sz_a, sz_b, jaccard FROM verified\n"
 )
 
 
@@ -280,29 +332,17 @@ def phash60_sql(expr: str) -> str:
 MINHASH_PRIME = 2038074743
 
 
-def _minhash_coeffs() -> tuple[list[int], list[int]]:
-    import hashlib
-
-    a = [
-        int(hashlib.md5(f"mh-a:{s}".encode()).hexdigest()[:8], 16)
-        % (MINHASH_PRIME - 1)
-        + 1
+def _minhash_coeffs(tag: str, lo: int, mod: int) -> list[int]:
+    """Per-seed coefficients md5("mh-<tag>:<seed>") % mod + lo, computed
+    once at import into MINHASH_A (1 <= a < P) and MINHASH_B (b < P)."""
+    return [
+        int(hashlib.md5(f"mh-{tag}:{s}".encode()).hexdigest()[:8], 16) % mod + lo
         for s in range(MINHASH_PERMS)
     ]
-    b = [
-        int(hashlib.md5(f"mh-b:{s}".encode()).hexdigest()[:8], 16)
-        % MINHASH_PRIME
-        for s in range(MINHASH_PERMS)
-    ]
-    return a, b
 
 
-def _coeff_sql_a() -> str:
-    return "[" + ", ".join(map(str, _minhash_coeffs()[0])) + "]"
-
-
-def _coeff_sql_b() -> str:
-    return "[" + ", ".join(map(str, _minhash_coeffs()[1])) + "]"
+MINHASH_A = _minhash_coeffs("a", 1, MINHASH_PRIME - 1)
+MINHASH_B = _minhash_coeffs("b", 0, MINHASH_PRIME)
 
 
 # --- MinHash + LSH -------------------------------------------------------
@@ -331,10 +371,14 @@ def _minhash_long(sh: DataFrame) -> DataFrame:
     re-shuffled everything by doc_id so the partial aggregation could
     collapse the 64x-exploded rows before the reduce — measured then:
     17M shuffled rows without the pre-repartition vs <1M with it; now
-    ZERO shuffled rows, the collapse happens in place)."""
-    ca, cb = _minhash_coeffs()
-    arr_a = F.array(*[F.lit(v) for v in ca])
-    arr_b = F.array(*[F.lit(v) for v in cb])
+    ZERO shuffled rows, the collapse happens in place).  This holds for
+    the plan that RUNS, once AQE sees the materialized shingle cache
+    (tests/test_plans.py reads its plan graph from the SQL status
+    store); a plan
+    fixed before that — executedPlan, explain(), plan_snapshot — still
+    shows two (doc_id, seed) exchanges."""
+    arr_a = F.array(*[F.lit(v) for v in MINHASH_A])
+    arr_b = F.array(*[F.lit(v) for v in MINHASH_B])
     x = (
         F.conv(F.substring(F.md5(F.col("shingle").cast("binary")), 1, 8), 16, 10)
         .cast("long")
@@ -420,48 +464,16 @@ def minhash_lsh_pairs_for(corpus: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    # Verify ONLY the candidate pairs (never the all-pairs set): join
-    # each pair with both docs' shingle sets to count the intersection —
-    # cost is |candidates| * avg shingles, independent of corpus².
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    common = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # Verify ONLY the candidate pairs (never the all-pairs set)
+    common = _candidate_overlap(cand, sh, "doc_a", "doc_b")
+    verified = _verified(common, sh, "doc_a", "doc_b")
+    return verified.select("doc_a", "doc_b", "jaccard")
 
 
-# LSH pipeline replicated in DuckDB over the same portable hash: same
-# shingles, same 64 per-seed minima, same md5 band buckets, same
-# exact-Jaccard verification — hash-identical output to the Spark plan.
-MINHASH_LSH_SQL = (
-    "WITH " + CORPUS_CTE.strip()
-    + f""",
-words AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM words, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-),
-hashed AS (
+# The DuckDB twins of `_minhash_long` (hashed, hs) and `_banded` over
+# the `sh` shingles, and of `_band_eq` between `banded` aliases a/b.
+MINHASH_BANDS_CTES = (
+    f"""hashed AS (
   SELECT doc_id,
          CAST('0x' || substring(md5(shingle), 1, 8) AS BIGINT)
            % {MINHASH_PRIME} AS x
@@ -469,42 +481,60 @@ hashed AS (
 ),
 hs AS (
   SELECT doc_id, seed,
-         min((({_coeff_sql_a()})[seed + 1] * x
-              + ({_coeff_sql_b()})[seed + 1]) % {MINHASH_PRIME}) AS minh
+         min((({MINHASH_A})[seed + 1] * x
+              + ({MINHASH_B})[seed + 1]) % {MINHASH_PRIME}) AS minh
   FROM hashed, UNNEST(generate_series(0, {MINHASH_PERMS - 1})) AS s(seed)
   GROUP BY doc_id, seed
 ),
 banded AS (
   SELECT doc_id, seed - (seed % {LSH_ROWS}) AS band,
-         min(CASE WHEN seed % {LSH_ROWS} = 0 THEN minh END) AS m0,
-         min(CASE WHEN seed % {LSH_ROWS} = 1 THEN minh END) AS m1,
-         min(CASE WHEN seed % {LSH_ROWS} = 2 THEN minh END) AS m2,
-         min(CASE WHEN seed % {LSH_ROWS} = 3 THEN minh END) AS m3
+"""
+    + ",\n".join(
+        f"         min(CASE WHEN seed % {LSH_ROWS} = {k} THEN minh END) AS m{k}"
+        for k in range(LSH_ROWS)
+    )
+    + """
   FROM hs GROUP BY doc_id, band
+)"""
+)
+BAND_EQ_SQL = " AND ".join(
+    ["a.band = b.band"] + [f"a.m{k} = b.m{k}" for k in range(LSH_ROWS)]
+)
+
+
+def _candidate_verified_sql(a: str, b: str) -> str:
+    """`common` (the DuckDB twin of `_candidate_overlap` over a `cand`
+    CTE of (a, b) pairs) followed by the verification CTEs."""
+    return f"""common AS (
+  SELECT c.{a}, c.{b}, count(*) AS common
+  FROM cand c
+  JOIN sh sa ON sa.doc_id = c.{a}
+  JOIN sh sb ON sb.doc_id = c.{b} AND sb.shingle = sa.shingle
+  GROUP BY 1, 2
 ),
+""" + _verified_sql(a, b)
+
+
+# LSH pipeline replicated in DuckDB over the same portable hash: same
+# shingles, same 64 per-seed minima, same band equality on four minima,
+# same exact-Jaccard verification — hash-identical output to the Spark
+# plan.
+MINHASH_LSH_SQL = (
+    "WITH "
+    + CORPUS_CTE.strip()
+    + ",\n"
+    + SHINGLES_CTE
+    + ",\n"
+    + MINHASH_BANDS_CTES
+    + f""",
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM banded a
-  JOIN banded b ON a.band = b.band
-               AND a.m0 = b.m0 AND a.m1 = b.m1
-               AND a.m2 = b.m2 AND a.m3 = b.m3
-               AND a.doc_id < b.doc_id
+  JOIN banded b ON {BAND_EQ_SQL} AND a.doc_id < b.doc_id
 ),
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-common AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS common
-  FROM cand c
-  JOIN sh sa ON sa.doc_id = c.doc_a
-  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) >= {JACCARD_THRESHOLD}
 """
+    + _candidate_verified_sql("doc_a", "doc_b")
+    + "\nSELECT doc_a, doc_b, jaccard FROM verified\n"
 )
 
 
@@ -582,23 +612,26 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges and keeps the minimum; converges in O(diameter) rounds
     (checked via an aggregate, driver only reads one count per round —
     no data collect).  At 100 TB you bound rounds (dup clusters are
-    shallow) or switch to the large-star/small-star formulation; the
-    loop shape here is the same.  The DuckDB oracle walks the same
-    closure with WITH RECURSIVE."""
+    shallow) or switch to `dedup_clusters_star`, the large-star/
+    small-star row over the same pair graph.  The DuckDB oracle walks
+    the same closure with WITH RECURSIVE."""
     return dedup_clusters_for(corpus_df(spark, sf_dir))
 
 
-def dedup_clusters_for(corpus: DataFrame, max_rounds: int = 50) -> DataFrame:
-    pairs = (
+def _dup_pairs(corpus: DataFrame) -> DataFrame:
+    """The dup-pair graph: distinct (doc_a, doc_b) edges between
+    near-dup pairs and exact-dup pairs (identical text is an edge too).
+    DuckDB twin: the `pairs` CTE of DEDUP_CLUSTERS_CTES."""
+    return (
         ngram_jaccard_pairs_for(corpus)
         .select("doc_a", "doc_b")
-        .unionByName(
-            # exact-dup pairs (identical text) are edges too
-            dedup_exact_pairs_for(corpus)
-        )
+        .unionByName(dedup_exact_pairs_for(corpus))
         .distinct()
-        .cache()
     )
+
+
+def dedup_clusters_for(corpus: DataFrame, max_rounds: int = 50) -> DataFrame:
+    pairs = _dup_pairs(corpus).cache()
     edges = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
@@ -654,7 +687,7 @@ def dedup_clusters_for(corpus: DataFrame, max_rounds: int = 50) -> DataFrame:
         raise RuntimeError(
             "dedup_clusters: label propagation did not converge within "
             f"{round_no + 1} rounds (component diameter too large); raise "
-            "the round bound or switch to large-star/small-star"
+            "the round bound or use dedup_clusters_star"
         )
     pairs.unpersist()
     return labels.select(
@@ -677,34 +710,20 @@ def dedup_exact_pairs_for(c: DataFrame) -> DataFrame:
 # Recursive-CTE transitive closure over the same pair graph; min
 # reachable id per node == the component label the iterative Spark
 # loop converges to.  Viable in DuckDB because dup clusters are tiny;
-# the Spark side is the one that scales.
-DEDUP_CLUSTERS_SQL = (
-    "WITH RECURSIVE " + CORPUS_CTE.strip()
+# the Spark side is the one that scales.  A `WITH RECURSIVE` list that
+# ends in `labels` (doc_id, cluster_id).
+DEDUP_CLUSTERS_CTES = (
+    NGRAM_VERIFIED_CTES
     + """,
-words AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM words, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-jpairs AS (
-  SELECT doc_a, doc_b FROM common
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) >= 0.5
-),
 withrep AS (SELECT doc_id, md5(text) AS h FROM corpus),
 reps AS (SELECT h, min(doc_id) AS rep FROM withrep GROUP BY h),
 epairs AS (
   SELECT rep AS doc_a, doc_id AS doc_b FROM withrep
   JOIN reps USING (h) WHERE doc_id <> rep
 ),
-pairs AS (SELECT doc_a, doc_b FROM jpairs UNION SELECT doc_a, doc_b FROM epairs),
+pairs AS (
+  SELECT doc_a, doc_b FROM verified UNION SELECT doc_a, doc_b FROM epairs
+),
 edges AS (
   SELECT doc_a, doc_b FROM pairs UNION SELECT doc_b AS doc_a, doc_a AS doc_b FROM pairs
 ),
@@ -713,9 +732,14 @@ closure(a, b) AS (
   SELECT node AS a, node AS b FROM nodes
   UNION
   SELECT c.a, e.doc_b AS b FROM closure c JOIN edges e ON e.doc_a = c.b
+),
+labels AS (SELECT a AS doc_id, min(b) AS cluster_id FROM closure GROUP BY a)"""
 )
-SELECT a AS doc_id, min(b) AS cluster_id FROM closure GROUP BY a
-"""
+
+DEDUP_CLUSTERS_SQL = (
+    "WITH RECURSIVE "
+    + DEDUP_CLUSTERS_CTES
+    + "\nSELECT doc_id, cluster_id FROM labels\n"
 )
 
 
@@ -860,8 +884,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_KEEP_BEST_SQL = (
-    "WITH labels AS MATERIALIZED (" + DEDUP_CLUSTERS_SQL + "),\n"
-    + CORPUS_CTE.strip()
+    "WITH RECURSIVE "
+    + DEDUP_CLUSTERS_CTES
     + """,
 lens AS (SELECT doc_id, length(text) AS len FROM corpus),
 labeled AS (
@@ -891,20 +915,11 @@ def new_batch_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     its word order reversed — reversal destroys 3-shingles, so these
     must be admitted)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    near = d.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 10000000).alias("doc_id"),
-        F.concat(
-            F.col("text"), F.lit(" nd"), (F.col("doc_id") % 97).cast("string")
-        ).alias("text"),
-    )
-    exact = d.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + 20000000).alias("doc_id"), F.col("text")
-    )
     novel = d.filter(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 30000000).alias("doc_id"),
         F.array_join(F.reverse(F.split("text", " ")), " ").alias("text"),
     )
-    return near.unionByName(exact).unionByName(novel)
+    return _dup_copies(d).unionByName(novel)
 
 
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,28 +950,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    common = (
-        cand.join(sh.select(F.col("doc_id").alias("new_id"), "shingle"), "new_id")
-        .join(
-            sh.select(F.col("doc_id").alias("idx_id"), "shingle"),
-            ["idx_id", "shingle"],
-        )
-        .groupBy("new_id", "idx_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sn = sizes.select(F.col("doc_id").alias("new_id"), F.col("sz").alias("sz_n"))
-    si = sizes.select(F.col("doc_id").alias("idx_id"), F.col("sz").alias("sz_i"))
-    scored = (
-        common.join(sn, "new_id")
-        .join(si, "idx_id")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("sz_n") + F.col("sz_i") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    common = _candidate_overlap(cand, sh, "new_id", "idx_id")
+    scored = _verified(common, sh, "new_id", "idx_id")
     from pyspark.sql import Window as W
 
     w = W.partitionBy("new_id").orderBy(F.desc("jaccard"), F.asc("idx_id"))
@@ -977,13 +972,9 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_INCREMENTAL_SQL = f"""
-WITH newdocs AS (
-  SELECT doc_id + 10000000 AS doc_id,
-         text || ' nd' || CAST(doc_id % 97 AS VARCHAR) AS text
-  FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id + 20000000, text FROM documents WHERE doc_id % 4 = 0
+DEDUP_INCREMENTAL_SQL = (
+    f"""
+WITH newdocs AS ({DUP_COPIES_SQL}
   UNION ALL
   SELECT doc_id + 30000000,
          array_to_string(list_reverse(string_split(text, ' ')), ' ')
@@ -993,66 +984,31 @@ corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL SELECT doc_id, text FROM newdocs
 ),
-words AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM words, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-),
-hashed AS (
-  SELECT doc_id,
-         CAST('0x' || substring(md5(shingle), 1, 8) AS BIGINT)
-           % {MINHASH_PRIME} AS x
-  FROM sh
-),
-hs AS (
-  SELECT doc_id, seed,
-         min((({_coeff_sql_a()})[seed + 1] * x
-              + ({_coeff_sql_b()})[seed + 1]) % {MINHASH_PRIME}) AS minh
-  FROM hashed, UNNEST(generate_series(0, {MINHASH_PERMS - 1})) AS s(seed)
-  GROUP BY doc_id, seed
-),
-banded AS (
-  SELECT doc_id, seed - (seed % {LSH_ROWS}) AS band,
-         min(CASE WHEN seed % {LSH_ROWS} = 0 THEN minh END) AS m0,
-         min(CASE WHEN seed % {LSH_ROWS} = 1 THEN minh END) AS m1,
-         min(CASE WHEN seed % {LSH_ROWS} = 2 THEN minh END) AS m2,
-         min(CASE WHEN seed % {LSH_ROWS} = 3 THEN minh END) AS m3
-  FROM hs GROUP BY doc_id, band
-),
+"""
+    + SHINGLES_CTE
+    + ",\n"
+    + MINHASH_BANDS_CTES
+    + f""",
 cand AS (
   SELECT DISTINCT b.doc_id AS new_id, a.doc_id AS idx_id
   FROM banded a
-  JOIN banded b ON a.band = b.band
-    AND a.m0 = b.m0 AND a.m1 = b.m1 AND a.m2 = b.m2 AND a.m3 = b.m3
+  JOIN banded b ON {BAND_EQ_SQL}
   WHERE a.doc_id < 10000000 AND b.doc_id >= 10000000
 ),
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-common AS (
-  SELECT c.new_id, c.idx_id, count(*) AS common
-  FROM cand c
-  JOIN sh n ON n.doc_id = c.new_id
-  JOIN sh i ON i.doc_id = c.idx_id AND i.shingle = n.shingle
-  GROUP BY c.new_id, c.idx_id
-),
-scored AS (
-  SELECT cm.new_id, cm.idx_id,
-         CAST(cm.common AS DOUBLE) / (sn.sz + si.sz - cm.common) AS jaccard
-  FROM common cm
-  JOIN sizes sn ON sn.doc_id = cm.new_id
-  JOIN sizes si ON si.doc_id = cm.idx_id
-  WHERE CAST(cm.common AS DOUBLE) / (sn.sz + si.sz - cm.common)
-        >= {JACCARD_THRESHOLD}
-),
+"""
+    + _candidate_verified_sql("new_id", "idx_id")
+    + """,
 best AS (
   SELECT new_id, idx_id, jaccard FROM (
     SELECT *, row_number() OVER (
       PARTITION BY new_id ORDER BY jaccard DESC, idx_id ASC) AS rn
-    FROM scored) WHERE rn = 1
+    FROM verified) WHERE rn = 1
 )
 SELECT n.doc_id AS new_doc_id, b.idx_id AS best_match_id,
        b.jaccard AS best_jaccard, (b.idx_id IS NULL) AS admit
 FROM newdocs n LEFT JOIN best b ON b.new_id = n.doc_id
 """
+)
 
 
 # --- large-star/small-star connected components --------------------------
@@ -1172,13 +1128,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     component's min doc_id), hash-checked against the SAME
     transitive-closure oracle — two independent algorithms, one
     answer."""
-    corpus = corpus_df(spark, sf_dir)
-    pairs = (
-        ngram_jaccard_pairs_for(corpus)
-        .select("doc_a", "doc_b")
-        .unionByName(dedup_exact_pairs_for(corpus))
-        .distinct()
-    )
+    pairs = _dup_pairs(corpus_df(spark, sf_dir))
     return connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.operators.dedup import CORPUS_CTE, corpus_df
 from etl_addresses_spark.sources.tables import load_table
 
 def binary_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,8 +647,6 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     average hash is a closed-form function of md5(text) — DuckDB
     recomputes every pixel, the mean, and the bit string; any decode
     bug (wrong filter offset, wrong inflate) hash-mismatches."""
-    from etl_addresses_spark.operators.dedup import corpus_df
-
     c = corpus_df(spark, sf_dir).select("doc_id", "text")
     images = c.mapInPandas(
         _encode_content_png_batches, schema="doc_id bigint, payload binary"
@@ -661,16 +660,7 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MULTIMODAL_IMAGE_DEDUP_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000000 AS doc_id,
-         text || ' nd' || CAST(doc_id % 97 AS VARCHAR) AS text
-  FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id + 20000000 AS doc_id, text FROM documents WHERE doc_id % 4 = 0
-),
+MULTIMODAL_IMAGE_DEDUP_SQL = "WITH " + CORPUS_CTE.strip() + """,
 bytes AS (
   SELECT doc_id,
     list_transform(generate_series(0, 15),

@@ -120,13 +120,6 @@ def test_dedup_clusters_convergence_guard(spark):
         dedup_clusters_for(corpus, max_rounds=2).count()
 
 
-def test_dedup_substring_blocks_oracle(spark, ddb):
-    assert_frames_match(
-        dedup.dedup_substring_blocks(spark, SF_ORACLE),
-        ddb.sql(dedup.DEDUP_SUBSTRING_SQL),
-    )
-
-
 def test_dedup_substring_blocks_semantics(spark):
     rows = {r.doc_id: r for r in dedup.dedup_substring_blocks(spark, SF_ORACLE).collect()}
     texts = {

@@ -17,6 +17,22 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _ran_plan_nodes(df) -> list[str]:
+    """Node descriptions of the plan that RAN: force `df` through the
+    noop sink, then read that execution's plan graph from the SQL status
+    store.  AQE replans each stage once the caches below it are
+    materialized, so this can differ from `_plan(df)`, which is fixed
+    before any job runs."""
+    spark = df.sparkSession
+    df.write.format("noop").mode("overwrite").save()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    ex = store.executionsList()
+    last = max(ex.apply(i).executionId() for i in range(ex.size()))
+    nodes = store.planGraph(last).allNodes()
+    return [nodes.apply(i).desc() for i in range(nodes.size())]
+
+
 def test_flagship_grid_uses_broadcast_hash_join(spark):
     df = flagship.spatiotemporal_join(spark, SF_SMALL, strategy="grid")
     plan = _plan(df)
@@ -248,10 +264,10 @@ def test_knn_grid_no_unbounded_cross_join(spark):
 
 
 def test_minhash_banding_no_rehash_explosion(spark):
-    # each shingle is md5-hashed exactly twice (h1/h2) BEFORE the 64x
-    # seed explode; the per-seed permutation is pure arithmetic on
-    # (h1, h2).  If any md5 call took the exploded seed as input, the
-    # hash work would multiply 64x (the round-2 regression shape).
+    # each shingle is md5-hashed exactly once (into x) BEFORE the 64x
+    # seed explode; the per-seed permutation is pure arithmetic on x.
+    # If any md5 call took the exploded seed as input, the hash work
+    # would multiply 64x (the round-2 regression shape).
     import re
 
     from etl_addresses_spark.operators import dedup
@@ -262,6 +278,27 @@ def test_minhash_banding_no_rehash_explosion(spark):
     # (a_s*x + b_s) mod p arithmetic over literal coefficient arrays
     assert not re.search(r"md5\([^)]*seed", plan)
     assert "element_at" in plan
+
+
+def test_minhash_seed_aggregate_needs_no_exchange(spark):
+    """`_shingles` keys its exchange by doc_id alone, so the (doc_id,
+    seed) MinHash aggregate runs on the cached shingle partitioning in
+    place.  Read from the plan that ran: a plan fixed before the shingle
+    cache is materialized (`_plan`, explain(), tools/plan_snapshot.py)
+    still shows two (doc_id, seed) exchanges."""
+    from etl_addresses_spark.operators import dedup
+
+    nodes = _ran_plan_nodes(dedup.minhash_lsh_pairs(spark, SF_SMALL))
+    seed_aggs = [
+        d for d in nodes
+        if d.startswith("HashAggregate(keys=[doc_id") and "seed" in d.split("]")[0]
+    ]
+    assert seed_aggs, nodes  # the aggregate ran...
+    seed_exchanges = [
+        d for d in nodes
+        if d.startswith("Exchange hashpartitioning(") and "seed" in d
+    ]
+    assert seed_exchanges == []  # ...on the shingle cache's partitioning
 
 
 def test_pq_scan_is_broadcast_lut_not_cartesian(spark):

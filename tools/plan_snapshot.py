@@ -7,6 +7,19 @@ Writes <out_dir>/<query>_<suffix>.txt for each query (the r14
 optimization-round deliverable: plans/r14/<query>_{before,after}.txt).
 Planning only — no job runs (explain does not execute the query), but
 count-gated operators may run their scalar gate counts.
+
+These are PRE-ACTION plans, fixed before any cache below them is
+materialized, so they are not always the plans that run, and they depend
+on what ran earlier in the session.  At sf0.001, `minhash_lsh_pairs`
+dumped alone shows two `Exchange hashpartitioning(doc_id, seed)` nodes
+(none when dumped after `dedup_clusters`, which materializes the same
+shingle cache).  The plan graph of its noop write, read from the SQL
+status store (`sharedState().statusStore().planGraph(execution id)`),
+has none: AQE replans the seed aggregate onto the materialized shingle
+cache's doc_id partitioning.  (That execution's
+`physicalPlanDescription()` still lists them, under AQE's "Initial
+Plan".)  Take shape claims and plan digests from the plan graph
+(tests/test_plans.py `_ran_plan_nodes`), not from this dump.
 """
 import os
 import sys
