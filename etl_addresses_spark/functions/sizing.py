@@ -1,7 +1,7 @@
 """Shuffle-width sizing for iterative loops.
 
 An iterative operator (pagerank, label propagation, frontier BFS,
-connected components, min-label dedup clustering) runs its per-round
+large-star/small-star connected components) runs its per-round
 joins/aggregations k times, so any fixed per-round cost is multiplied
 by k.  Running those rounds at the session's corpus-sized shuffle
 width schedules mostly-empty reduce tasks every round when the LOOP

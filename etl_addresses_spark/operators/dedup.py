@@ -195,8 +195,9 @@ def ngram_jaccard_pairs_for(corpus: DataFrame) -> DataFrame:
     origin constraints) and trip a Catalyst constraint-rewrite bug
     (`NoSuchElementException: key not found` in
     UnionBase.rewriteConstraints, Spark 4.1.2) inside
-    connected_components_star's self-union loop — dedup_clusters_star
-    crashed deterministically.  A posexplode two-step variant fails
+    connected_components_star's self-union loop, which every
+    dedup-cluster row runs — dedup_clusters_star crashed
+    deterministically.  A posexplode two-step variant fails
     identically, so the hazard is the aggregation shape, not the
     struct lambda.  The self-join shape below is the proven-green
     layout; both formulations emit the identical O(k^2)-per-shingle
@@ -608,12 +609,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (exact + near duplicates), labeling every member with the
     minimum doc_id of its component.
 
-    Iterative min-label propagation: each round joins labels across
-    edges and keeps the minimum; converges in O(diameter) rounds
-    (checked via an aggregate, driver only reads one count per round —
-    no data collect).  At 100 TB you bound rounds (dup clusters are
-    shallow) or switch to `dedup_clusters_star`, the large-star/
-    small-star row over the same pair graph.  The DuckDB oracle walks
+    Runs `connected_components_star` (large-star/small-star): O(log^2 n)
+    rounds whatever the component diameter, a `localCheckpoint` per
+    round so the plan stays one round in size, and one signature row
+    per round on the driver — no data collect.  The DuckDB oracle walks
     the same closure with WITH RECURSIVE."""
     return dedup_clusters_for(corpus_df(spark, sf_dir))
 
@@ -630,67 +629,9 @@ def _dup_pairs(corpus: DataFrame) -> DataFrame:
     )
 
 
-def dedup_clusters_for(corpus: DataFrame, max_rounds: int = 50) -> DataFrame:
-    pairs = _dup_pairs(corpus).cache()
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-    nodes = edges.select(F.col("doc_a").alias("node")).distinct()
-    labels = nodes.withColumn("label", F.col("node"))
-    prev_cached = None
-    converged = False
-    # The pair generation above is the corpus-scale stage and runs at
-    # full width (the count() here materializes the pair cache before
-    # the scope).  The propagation loop's frames are O(near-dup pairs)
-    # — typically a tiny fraction of the corpus — so its ~2 jobs x
-    # rounds run at a pair-derived width (functions/sizing.py);
-    # min/least over integer ids, width cannot move values.
-    loop_scope = scoped_shuffle_partitions(
-        corpus.sparkSession, loop_partitions(2 * pairs.count())
-    )
-    with loop_scope:
-        for round_no in range(max_rounds):  # diameter bound
-            neighbor_min = (
-                edges.join(labels, edges.doc_b == labels.node)
-                .groupBy(F.col("doc_a").alias("node2"))
-                .agg(F.min("label").alias("nmin"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, labels.node == F.col("node2"), "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ).alias("label"),
-                )
-                .cache()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            # the count above materialized new_labels into its cache, so the
-            # previous round's cache (and its lineage) is no longer needed —
-            # without this, 20 rounds pin 20 dead cached DataFrames
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = new_labels
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
-    if not converged:
-        # silent truncation would diverge from the transitive-closure
-        # oracle with no diagnostic
-        raise RuntimeError(
-            "dedup_clusters: label propagation did not converge within "
-            f"{round_no + 1} rounds (component diameter too large); raise "
-            "the round bound or use dedup_clusters_star"
-        )
-    pairs.unpersist()
-    return labels.select(
+def dedup_clusters_for(corpus: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every doc with at least one duplicate."""
+    return connected_components_star(_dup_pairs(corpus)).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
@@ -708,7 +649,7 @@ def dedup_exact_pairs_for(c: DataFrame) -> DataFrame:
 
 
 # Recursive-CTE transitive closure over the same pair graph; min
-# reachable id per node == the component label the iterative Spark
+# reachable id per node == the component label the large-star/small-star
 # loop converges to.  Viable in DuckDB because dup clusters are tiny;
 # the Spark side is the one that scales.  A `WITH RECURSIVE` list that
 # ends in `labels` (doc_id, cluster_id).
@@ -1022,10 +963,9 @@ def connected_components_star(edges: DataFrame, max_rounds: int = 25) -> DataFra
     (large-star), then its smaller neighbors and itself (small-star),
     at the minimum of its closed neighborhood.  The edge set converges
     to disjoint STARS rooted at component minima in O(log^2 n) rounds —
-    unlike min-label propagation, whose round count is the component
-    DIAMETER.  This is the dedup_clusters fallback the propagation
-    loop's convergence error message points at, now implemented and
-    equivalence-tested.
+    min-label propagation would need as many rounds as the component
+    DIAMETER.  Every dedup-cluster row (dedup_clusters, dedup_keep_best,
+    dedup_clusters_star) runs this loop.
 
     Per round: two groupBy(min) aggregations + two equi-joins, each
     keyed on node ids — no step ever materializes anything larger than
@@ -1122,23 +1062,10 @@ def connected_components_star(edges: DataFrame, max_rounds: int = 25) -> DataFra
     )
 
 
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_clusters on the large-star/small-star engine: identical
-    output contract (every near-dup component member labeled with the
-    component's min doc_id), hash-checked against the SAME
-    transitive-closure oracle — two independent algorithms, one
-    answer."""
-    pairs = _dup_pairs(corpus_df(spark, sf_dir))
-    return connected_components_star(pairs).select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 QUERIES = {
     "dedup_substring_blocks": (dedup_substring_blocks, DEDUP_SUBSTRING_SQL),
     "dedup_incremental_lsh": (dedup_incremental_lsh, DEDUP_INCREMENTAL_SQL),
-    # same transitive-closure oracle as dedup_clusters: two independent
-    # algorithms (min-label propagation vs large-star/small-star), one
-    # hash-checked answer
-    "dedup_clusters_star": (dedup_clusters_star, DEDUP_CLUSTERS_SQL),
+    # a second registry name for dedup_clusters (same engine, same
+    # oracle), kept so the row's name and tier do not change
+    "dedup_clusters_star": (dedup_clusters, DEDUP_CLUSTERS_SQL),
 }

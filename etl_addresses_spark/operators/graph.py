@@ -620,8 +620,8 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     b{k} = min-dist over (b{k-1} UNION neighbors-of-b{k-1}+1).  On unit
     weights both formulations yield exactly shortest-hop distance for
     every node within {BFS_HOPS} hops — two independent algorithms, one
-    integer-exact hash-checked answer (the dedup_clusters /
-    dedup_clusters_star pattern)."""
+    integer-exact hash-checked answer (as dedup_clusters: a
+    large-star/small-star loop against a recursive-closure oracle)."""
     nbr = _co_purchase_neighbors(spark, sf_dir, "v_")
     seeds = (
         nbr.select(F.col("v_").alias("node"))

@@ -447,8 +447,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_topk_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 by the INVERTED-INDEX plan — the open-vocabulary
     scale tier bm25_scored's docstring points at, now a checked row
-    against the SAME oracle (two algorithms, one answer — the
-    dedup_clusters/dedup_clusters_star precedent).
+    against the SAME oracle (two algorithms, one answer).
 
     The dense path widens one column per query term — fine for a
     4-term fixed query, impossible for a 100-term or user-supplied

@@ -99,25 +99,21 @@ def test_quantized_topk_recall_vs_exact(spark):
 
 
 def test_dedup_clusters_convergence_guard(spark):
-    # a duplicate chain longer than the round bound must raise, not
-    # silently truncate (doc_i = 20-word sliding window over one long
-    # word sequence -> adjacent docs share most shingles)
+    # the connected-components loop must raise when its round bound is
+    # too small, not silently truncate: a diameter-99 path needs more
+    # large-star/small-star rounds than 2
     import pytest as _pytest
-    from pyspark.sql import functions as F
 
-    from etl_addresses_spark.operators.dedup import dedup_clusters_for
+    from etl_addresses_spark.operators.dedup import connected_components_star
 
-    words = [f"w{i}" for i in range(40)]
-    docs = [
-        (i, " ".join(words[i : i + 20]))
-        for i in range(8)
-    ]
-    corpus = spark.createDataFrame(docs, "doc_id long, text string")
-    # sanity: with enough rounds the chain converges to one cluster
-    ok = dedup_clusters_for(corpus, max_rounds=50)
-    assert ok.select("cluster_id").distinct().count() == 1
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters_for(corpus, max_rounds=2).count()
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(99)], ["doc_a", "doc_b"]
+    )
+    # sanity: the default bound converges to one component
+    ok = connected_components_star(edges)
+    assert ok.select("label").distinct().count() == 1
+    with _pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components_star(edges, max_rounds=2)
 
 
 def test_dedup_substring_blocks_semantics(spark):

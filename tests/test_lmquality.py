@@ -162,20 +162,11 @@ def test_incremental_lsh_admission_semantics(spark):
     assert len(admitted_novel) >= 0.9 * len(by_band["novel"])
 
 
-def test_star_cc_equals_propagation_and_handles_long_chains(spark):
-    from pyspark.sql import Row
+def test_star_cc_collapses_long_chains(spark):
+    from etl_addresses_spark.operators.dedup import connected_components_star
 
-    from etl_addresses_spark.operators.dedup import (
-        connected_components_star,
-        dedup_clusters,
-        dedup_clusters_star,
-    )
-
-    a = sorted(map(tuple, dedup_clusters_star(spark, SF_ORACLE).collect()))
-    b = sorted(map(tuple, dedup_clusters(spark, SF_ORACLE).collect()))
-    assert a == b
-    # a diameter-99 path needs ~99 propagation rounds; the star
-    # algorithm must collapse it within its O(log^2 n) round budget
+    # a diameter-99 path would need ~99 min-label propagation rounds;
+    # the star algorithm must collapse it within its O(log^2 n) budget
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(99)], ["doc_a", "doc_b"]
     )

@@ -301,6 +301,19 @@ def test_minhash_seed_aggregate_needs_no_exchange(spark):
     assert seed_exchanges == []  # ...on the shingle cache's partitioning
 
 
+def test_dedup_clusters_plan_is_one_round(spark):
+    """The connected-components loop checkpoints every round, so the plan
+    that runs reads the last round's checkpoint: a constant number of
+    exchanges however many rounds ran.  A loop that builds each round on
+    the previous round's lineage runs a plan that grows with the round
+    count (7 exchanges here for min-label propagation's cached rounds)."""
+    from etl_addresses_spark.operators import dedup
+
+    nodes = _ran_plan_nodes(dedup.dedup_clusters(spark, SF_SMALL))
+    exchanges = [d for d in nodes if d.startswith("Exchange")]
+    assert len(exchanges) <= 2, exchanges
+
+
 def test_pq_scan_is_broadcast_lut_not_cartesian(spark):
     # the ADC scan must be a broadcast of the tiny per-query LUT side
     # streamed over the codes (a BNLJ on the broadcast side is the

@@ -12,8 +12,8 @@ These are PRE-ACTION plans, fixed before any cache below them is
 materialized, so they are not always the plans that run, and they depend
 on what ran earlier in the session.  At sf0.001, `minhash_lsh_pairs`
 dumped alone shows two `Exchange hashpartitioning(doc_id, seed)` nodes
-(none when dumped after `dedup_clusters`, which materializes the same
-shingle cache).  The plan graph of its noop write, read from the SQL
+(none when dumped after `dedup_clusters`, whose first connected-components
+checkpoint materializes the same shingle cache).  The plan graph of its noop write, read from the SQL
 status store (`sharedState().statusStore().planGraph(execution id)`),
 has none: AQE replans the seed aggregate onto the materialized shingle
 cache's doc_id partitioning.  (That execution's

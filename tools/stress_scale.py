@@ -58,6 +58,8 @@ QUERIES = [
     "ngram_jaccard_pairs",
     "minhash_lsh_pairs",
     "dedup_clusters",
+    # the other dedup_clusters_for row: cluster labels + representative
+    "dedup_keep_best",
     "embedding_gram_matrix",
     "graph_communities_labelprop",
     "graph_bfs_distances",
