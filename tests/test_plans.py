@@ -306,7 +306,7 @@ def test_dedup_clusters_plan_is_one_round(spark):
     that runs reads the last round's checkpoint: a constant number of
     exchanges however many rounds ran.  A loop that builds each round on
     the previous round's lineage runs a plan that grows with the round
-    count (7 exchanges here for min-label propagation's cached rounds)."""
+    count."""
     from etl_addresses_spark.operators import dedup
 
     nodes = _ran_plan_nodes(dedup.dedup_clusters(spark, SF_SMALL))
