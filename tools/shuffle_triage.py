@@ -14,7 +14,7 @@ so the ranking is host-noise-free; wall is recorded for context only.
 Usage:
     python tools/shuffle_triage.py               # all never-laddered rows
     ONLY=a,b,c python tools/shuffle_triage.py    # subset
-Writes tools/evidence/r13_shuffle_triage.json (override with OUT).
+Writes tools/evidence/shuffle_triage_last_run.json (override with OUT).
 """
 
 from __future__ import annotations
@@ -86,7 +86,7 @@ def main() -> None:
         ],
     }
     path = os.environ.get(
-        "OUT", os.path.join(TOOLS, "evidence", "r13_shuffle_triage.json")
+        "OUT", os.path.join(TOOLS, "evidence", "shuffle_triage_last_run.json")
     )
     with open(path, "w") as f:
         json.dump(out, f, indent=1)

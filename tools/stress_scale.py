@@ -1,13 +1,14 @@
 """sf1-class scale evidence (r5 verdict item 5).
 
-Builds a FACTOR x (default 10x => "sf1-class") replica of sf0.1 under
-/tmp, runs the most scale-sensitive registry queries at BOTH scales in
-one session with the bench hygiene protocol, and records wall time
-plus per-query Spark counters (shuffle read/write and input MB, tasks,
-executor time) from the live status store — converting the "would the
-plan survive 10x" design arguments into committed numbers (shuffle
-bytes growing ~linearly with input is the pass signal; a super-linear
-jump flags a plan that would not survive 100 TB).  Evidence files
+Builds a FACTOR x (default 10x => "sf1-class") replica of the base
+scale (sf0.1 by default) under /tmp, runs the most scale-sensitive
+registry queries at BOTH scales in one session with the bench hygiene
+protocol, and records wall time plus per-query Spark counters
+(shuffle read/write and input MB, tasks, executor time) from the live
+status store — converting the "would the plan survive 10x" design
+arguments into committed numbers (shuffle bytes growing ~linearly with
+input is the pass signal; a super-linear jump flags a plan that would
+not survive 100 TB).  Evidence files
 written before the counters moved off the UI REST API carry byte
 fields (shuffle_read, shuffle_write, input_bytes) instead.
 
@@ -23,11 +24,20 @@ degenerating:
   cross-replica shingle ever matches (plain text replication would
   make every replica pair a near-dup and blow up LSH pair output
   quadratically — a data-degeneracy artifact, not a scale signal);
-- embeddings get a small deterministic per-replica perturbation so
-  vector queries see FACTOR x distinct points, not FACTOR x exact ties.
+- embeddings get deterministic per-replica sign flips and a dimension
+  permutation so vector queries see FACTOR x distinct points, not
+  FACTOR x exact ties.
+Replica 0 is the base data exactly: every offset and salt is zero or
+skipped there.
 
-Usage: python tools/stress_scale.py [factor]  (writes
-tools/evidence/r6_scale_sf1.json and prints the same JSON).
+Usage:
+    python tools/stress_scale.py [factor]            # the QUERIES ladder
+    ONLY=a,b,c python tools/stress_scale.py [factor]  # any registry rows
+Base scale from SPARK_GRAFT_SF_DIR (default sf0.1), factor 10 by
+default, SPARK_GRAFT_SCALE_REPEATS runs per row and scale (default 2).
+Writes tools/evidence/scale_last_run.json (override with OUT) and
+prints the same JSON.  The coverage ledger counts a run as ladder
+evidence only once it is saved under an r<round>_scale*.json name.
 """
 
 from __future__ import annotations
@@ -48,9 +58,7 @@ from etl_addresses_spark.session import get_spark  # noqa: E402
 from etl_addresses_spark.sources.tables import load_table  # noqa: E402
 from perfbench.probe import JobWatch  # noqa: E402
 
-SRC = "/root/testdata/sf0.1"
-FACTOR = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-OUT = f"/tmp/spark_graft_scaled_{FACTOR}x_{os.path.basename(SRC)}"
+SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 QUERIES = [
     "spatiotemporal_join",
@@ -70,13 +78,6 @@ QUERIES = [
     # the IVF tier prunes to nprobe lists per query
     "ann_ivf_topk",
 ]
-# attribution runs: restrict to a subset (comma-separated names)
-if os.environ.get("SPARK_GRAFT_SCALE_QUERIES"):
-    QUERIES = [
-        q.strip()
-        for q in os.environ["SPARK_GRAFT_SCALE_QUERIES"].split(",")
-        if q.strip()
-    ]
 
 # key columns to offset per table (offset base = max+1, computed once)
 KEYS = {
@@ -94,27 +95,30 @@ COPY = ["region", "nation"]
 
 # Generator version rides the marker filename: a formula change (the
 # r9 sign-flip fix) must invalidate pre-existing /tmp builds, or reruns
-# silently benchmark stale replica data (r9 review finding).
-GEN = "v5"
+# silently benchmark stale replica data (r9 review finding).  v6: the
+# name and word salts skip replica 0, so replica 0 is the base data.
+GEN = "v6"
 
 
-def build_scaled(spark) -> None:
-    marker = os.path.join(OUT, f"_BUILT_{GEN}")
+def build_scaled(spark, src: str, out: str, factor: int) -> None:
+    """Write a ``factor`` x key-disjoint replica of the tables in ``src``
+    under ``out``; a no-op when ``out`` already holds this GEN's build."""
+    marker = os.path.join(out, f"_BUILT_{GEN}")
     if os.path.exists(marker):
         return
-    os.makedirs(OUT, exist_ok=True)
+    os.makedirs(out, exist_ok=True)
     for t in COPY:
-        load_table(spark, SRC, t).write.mode("overwrite").parquet(
-            os.path.join(OUT, f"{t}.parquet")
+        load_table(spark, src, t).write.mode("overwrite").parquet(
+            os.path.join(out, f"{t}.parquet")
         )
     for t, keys in KEYS.items():
-        df = load_table(spark, SRC, t)
+        df = load_table(spark, src, t)
         bases = df.agg(
             *[(F.max(k) + F.lit(1)).alias(k) for k in keys]
         ).first()
         rep = df.select(
             F.explode(
-                F.sequence(F.lit(0).cast("long"), F.lit(FACTOR - 1).cast("long"))
+                F.sequence(F.lit(0).cast("long"), F.lit(factor - 1).cast("long"))
             ).alias("_r"),
             "*",
         )
@@ -129,14 +133,16 @@ def build_scaled(spark) -> None:
             name_col = "c_name" if t == "customer" else "s_name"
             rep = rep.withColumn(
                 name_col,
-                F.concat(F.col(name_col), F.lit(" r"), F.col("_r")),
+                F.when(F.col("_r") == 0, F.col(name_col)).otherwise(
+                    F.concat(F.col(name_col), F.lit(" r"), F.col("_r"))
+                ),
             )
         if t == "documents":
             rep = rep.withColumn(
                 "text",
                 F.expr(
-                    "array_join(transform(split(text, ' '), "
-                    "w -> concat(w, '_r', cast(_r as string))), ' ')"
+                    "if(_r = 0, text, array_join(transform(split(text, ' '), "
+                    "w -> concat(w, '_r', cast(_r as string))), ' '))"
                 ),
             )
         if t == "embeddings":
@@ -181,17 +187,25 @@ def build_scaled(spark) -> None:
                 ),
             )
         rep.drop("_r").write.mode("overwrite").parquet(
-            os.path.join(OUT, f"{t}.parquet")
+            os.path.join(out, f"{t}.parquet")
         )
     open(marker, "w").close()
 
 
 def main() -> None:
+    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
+    names = (
+        [n.strip() for n in os.environ["ONLY"].split(",")]
+        if os.environ.get("ONLY")
+        else QUERIES
+    )
+    base = os.path.basename(SRC.rstrip("/"))
+    scaled = f"/tmp/spark_graft_scaled_{factor}x_{base}"
     spark = get_spark("stress-scale")
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.perf_counter()
-    build_scaled(spark)
+    build_scaled(spark, SRC, scaled, factor)
     build_s = round(time.perf_counter() - t0, 1)
 
     watch = JobWatch(spark)
@@ -201,8 +215,8 @@ def main() -> None:
     # legible in the artifact, not argued afterwards
     calibration = {"start": calibrate(spark)}
     results: dict[str, dict] = {}
-    for sf_name, sf_dir in [("sf0.1", SRC), (f"sf0.1x{FACTOR}", OUT)]:
-        for name in QUERIES:
+    for sf_name, sf_dir in [(base, SRC), (f"{base}x{factor}", scaled)]:
+        for name in names:
             runs = []
             for _ in range(repeats):
                 hygiene(spark)
@@ -215,15 +229,15 @@ def main() -> None:
             print(f"{sf_name} {name}: {per_run}", file=sys.stderr)
         calibration[f"after_{sf_name}"] = calibrate(spark)
 
-    # scale ratios: wall + shuffle growth vs the FACTOR x input growth
+    # scale ratios: wall + shuffle growth vs the factor x input growth
     for name, r in results.items():
-        a, b = r["sf0.1"], r[f"sf0.1x{FACTOR}"]
+        a, b = r[base], r[f"{base}x{factor}"]
         r["ratio"] = {
             k: (round(b[k] / a[k], 2) if a[k] else None)
             for k in ("sec", "shuffle_read_mb", "shuffle_write_mb", "input_mb")
         }
     out = {
-        "factor": FACTOR,
+        "factor": factor,
         "build_sec": build_s,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
         "shuffle_partitions": os.environ.get(
@@ -234,7 +248,7 @@ def main() -> None:
         "queries": results,
     }
     path = os.environ.get(
-        "SPARK_GRAFT_SCALE_OUT", os.path.join(TOOLS, "evidence", "r6_scale_sf1.json")
+        "OUT", os.path.join(TOOLS, "evidence", "scale_last_run.json")
     )
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
